@@ -44,16 +44,16 @@ RPKM_SCHEMA = StructType([
 ])
 
 
-def merge_bracken(spark: SparkSession, glob: str, tax_info: DataFrame,
-                  samples: list[str] | None = None):
-    """code/merge_bracken.R end-to-end (SURVEY §7.1): glob-scan per-sample
-    bracken TSVs (S4 path columns), broadcast-join taxonomy (J1), drop
-    refseq rows duplicating GTDB domains (P2), per-sample rel_abund (A5),
-    pivot to sample-wide count + rel-abund matrices (R1).
+def bracken_long(spark: SparkSession, glob: str,
+                 tax_info: DataFrame) -> DataFrame:
+    """The long form of code/merge_bracken.R (SURVEY §7.1): glob-scan
+    per-sample bracken TSVs (S4 path columns), broadcast-join taxonomy (J1),
+    drop refseq rows duplicating GTDB domains (P2), per-sample rel_abund
+    (A5). Lazy: no Spark job runs until the caller acts on it.
 
-    Returns (long, counts_wide, relabund_wide). One scan over all files —
-    the reference's per-file read loop (merge_bracken.R:39-47) becomes a
-    single multi-file DataFrame; `sample`/`database` come from the path.
+    One scan over all files — the reference's per-file read loop
+    (merge_bracken.R:39-47) becomes a single multi-file DataFrame;
+    `sample`/`database` come from the path.
     """
     raw = read_typed_csv(spark, glob, schema=BRACKEN_SCHEMA, header=False)
     scanned = with_path_columns(raw, "{sample}/bracken_{database}.tsv")
@@ -65,9 +65,21 @@ def merge_bracken(spark: SparkSession, glob: str, tax_info: DataFrame,
                                & F.col("std_lineage").rlike(
                                    "^[kd]__(Archaea|Bacteria)")))
     species = filtered.filter(F.col("rank") == "S")
-    long = abundance.rel_abund(
+    return abundance.rel_abund(
         species.withColumn("n", F.col("count_w_subtax")),
         "n", ["sample", "database"])
+
+
+def merge_bracken(spark: SparkSession, glob: str, tax_info: DataFrame,
+                  samples: list[str] | None = None):
+    """code/merge_bracken.R end-to-end: ``bracken_long``, then pivot to
+    sample-wide count + rel-abund matrices (R1).
+
+    Returns (long, counts_wide, relabund_wide). Without ``samples`` each
+    pivot runs a distinct-values job eagerly, so a caller that needs only
+    the long form calls ``bracken_long``.
+    """
+    long = bracken_long(spark, glob, tax_info)
     counts_wide = pivot_wider(long, ["tax_id", "name", "database"], "sample",
                               F.first("n"), values=samples, fill=0)
     relabund_wide = pivot_wider(long, ["tax_id", "name", "database"], "sample",

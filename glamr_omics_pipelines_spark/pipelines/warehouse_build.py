@@ -8,10 +8,15 @@ anti-join) + derived views (bin_summary, kofam anvio MV) saved as tables.
 Run it twice: the second run loads zero new rows (the reference's
 idempotence contract, postgres.Rmd:246-248) and refreshes the MVs.
 
-At scale each `incremental_append` is one partitioned parquet write; the
-anti-join reads only the partition-key listing. Views are recomputed from
-base tables — the staleness contract is "as of last build_warehouse run"
-(the reference's nightly cron analog).
+Each `incremental_append` is one partitioned parquet append. Its anti-join
+is a filter on the `<key>=<value>` partition directories already under the
+table root (a local-filesystem listing, see `sources.warehouse`), so a
+load spends no Spark job on finding its loaded keys; a rerun with nothing
+new runs the append over zero rows and writes no data file. The bracken
+stage loads only the long form (`glamr.bracken_long`): the wide pivots of
+`merge_bracken` would each run a distinct-values job for nothing. Views
+are recomputed from base tables — the staleness contract is "as of last
+build_warehouse run" (the reference's nightly cron analog).
 """
 
 from __future__ import annotations
@@ -42,8 +47,8 @@ def build_dag(wh: Warehouse, registry: SchemaRegistry,
 
     @dag.stage("bracken", deps=["tax_info"], materialize=True)
     def bracken(spark, ctx):
-        long, _, _ = glamr.merge_bracken(spark, bracken_glob, ctx["tax_info"])
-        ingest("bracken_species", long)
+        ingest("bracken_species",
+               glamr.bracken_long(spark, bracken_glob, ctx["tax_info"]))
         return wh.read(spark, "bracken_species")
 
     @dag.stage("gene_abundance", materialize=True)

@@ -6,23 +6,48 @@ anti-joins against the samples already in the table, and appends
 anti-join, not from exactly-once sinks. B-tree indexes are dropped around
 bulk loads and rebuilt (postgres.Rmd:414-432).
 
-Spark-first: append-only Parquet partitioned by the merge key; the anti-join
-happens against the (tiny) distinct-key listing — which, because the key IS
-the partition column, is a directory listing, not a data scan (the same
-purpose the reference's recursive-CTE loose index scan serves,
-postgres.Rmd:22-37, for free). Index drop/rebuild disappears entirely.
-A ledger records every load batch for audit (pypelib/post.py checkout-file
-analog).
+Spark-first: append-only Parquet partitioned by the merge key. Because the
+key IS the partition column, the loaded keys are the ``<key>=<value>``
+directory names under the table root, so the anti-join reads a directory
+listing and never the data (the purpose the reference's recursive-CTE loose
+index scan serves, postgres.Rmd:22-37). The listed values become a typed
+``isin`` filter on the incoming frame, and the append is the one Spark job
+of a load: no key scan, no broadcast, no count. The new keys are the
+listing after the write minus the listing before it. Index drop/rebuild
+disappears entirely. A ledger records every load batch for audit
+(pypelib/post.py checkout-file analog).
+
+Listing rules, mirroring how Spark names partition directories:
+  - values are unescaped the way Spark escapes them (``%XX`` for ``:``,
+    ``%``, ``/``, ``=`` and the other path-unsafe characters);
+  - ``__HIVE_DEFAULT_PARTITION__`` holds the null key (and the empty
+    string, which Spark writes there too). It means "null already loaded"
+    and is matched null-safely, never cast to the key type (an ANSI cast
+    error for an integer key);
+  - the root is a local filesystem path, as for the ledger this class
+    writes with ``os.makedirs``/``open``. An object-store root would need
+    the listing to go through the Hadoop FileSystem instead.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
+
+DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _unescape(name: str) -> str:
+    """Invert Spark's partition-path escaping (``ExternalCatalogUtils``),
+    which writes each path-unsafe character as ``%`` plus two hex digits."""
+    return re.sub(r"%([0-9A-Fa-f]{2})",
+                  lambda m: chr(int(m.group(1), 16)), name)
 
 
 class Warehouse:
@@ -43,33 +68,47 @@ class Warehouse:
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self.path(table))
 
-    def loaded_keys(self, spark: SparkSession, table: str, key: str) -> DataFrame:
-        """Distinct loaded merge keys. Because ``key`` is the partition
-        column, this is satisfied by partition-directory listing (Catalyst
-        prunes to metadata-only) — the loose-index-scan analog."""
-        return self.read(spark, table).select(key).distinct()
-
     def incremental_append(self, df: DataFrame, table: str, key: str) -> int:
         """Anti-join-then-append: load only rows whose ``key`` value is not
-        yet present (postgres.Rmd:246-248 semantics). Returns #new keys."""
-        spark = df.sparkSession
-        if self.exists(table):
-            existing = self.loaded_keys(spark, table, key)
-            fresh = df.join(F.broadcast(existing), key, "left_anti")
-        else:
-            fresh = df
-        # persist across the count + write actions — without it the whole
-        # upstream plan (scan/joins/windows) executes twice per load
-        fresh = fresh.persist()
-        try:
-            new_keys = fresh.select(key).distinct().count()
-            if new_keys:
-                (fresh.write.mode("append").partitionBy(key)
-                 .parquet(self.path(table)))
-        finally:
-            fresh.unpersist()
+        yet present (postgres.Rmd:246-248 semantics). Returns #new keys.
+
+        One Spark job: the append itself. A rerun that brings no new key
+        runs that job over zero rows and writes no data file."""
+        before = self._listed_keys(table, key)
+        fresh = df
+        if before:
+            col = F.col(key)
+            dtype = df.schema[key].dataType
+            text = isinstance(dtype, StringType)
+            values = [v if text else F.lit(v).cast(dtype)
+                      for v in before if v is not None]
+            loaded = col.isin(values) if values else F.lit(False)
+            if None in before:
+                loaded = col.isNull() | loaded
+                if text:
+                    loaded = loaded | (col == "")
+            # a null key is "not loaded" unless the default partition exists
+            fresh = df.filter(~F.coalesce(loaded, F.lit(False)))
+        (fresh.write.mode("append").partitionBy(key)
+         .parquet(self.path(table)))
+        new_keys = len(self._listed_keys(table, key) - before)
         self._log(table=table, key=key, new_keys=new_keys)
         return new_keys
+
+    def _listed_keys(self, table: str, key: str) -> set[str | None]:
+        """The loaded values of partition column ``key``, from the table's
+        directory names; ``None`` stands for the default (null) partition."""
+        if not self.exists(table):
+            return set()
+        prefix = f"{key}="
+        out: set[str | None] = set()
+        with os.scandir(self.path(table)) as entries:
+            for entry in entries:
+                if entry.is_dir() and entry.name.startswith(prefix):
+                    value = entry.name[len(prefix):]
+                    out.add(None if value == DEFAULT_PARTITION
+                            else _unescape(value))
+        return out
 
     def overwrite_partitions(self, df: DataFrame, table: str, key: str) -> None:
         """Upsert semantics via dynamic partition overwrite — replaces only

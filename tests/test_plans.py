@@ -379,9 +379,18 @@ def test_nx_ladder_windows_share_one_exchange(spark):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 2
 
 
+def _assert_row_local(plan: str, q: str) -> None:
+    """No key exchange: the one Exchange a row-local query may carry is
+    _spread's round-robin fan-out of a single-file scan."""
+    assert "hashpartitioning" not in plan, q
+    assert "ENSURE_REQUIREMENTS" not in plan, q
+    assert set(re.findall(r"Exchange (\w+)", plan)) <= \
+        {"RoundRobinPartitioning"}, q
+
+
 def test_translate_dna_zero_shuffle(spark):
     plan = _plan(spark, "translate_dna")
-    assert "Exchange" not in plan
+    _assert_row_local(plan, "translate_dna")
     assert "EvalPython" not in plan
 
 
@@ -419,8 +428,7 @@ def test_late_round4_ops_no_python_no_cartesian(spark):
 def test_scan_stage_ops_have_zero_exchange(spark):
     """shard_assign and minimizers are pure row-local scans."""
     for q in ["shard_assign", "minimizers"]:
-        plan = _plan(spark, q)
-        assert "Exchange" not in plan, q
+        _assert_row_local(_plan(spark, q), q)
 
 
 def test_nearest_station_broadcasts_the_dim(spark):
@@ -441,8 +449,7 @@ def test_final_round4_ops_no_python_no_cartesian(spark):
 
 def test_row_local_bio_ops_zero_exchange(spark):
     for q in ["orf_count", "base_entropy", "translate_dna"]:
-        plan = _plan(spark, q)
-        assert "Exchange" not in plan, q
+        _assert_row_local(_plan(spark, q), q)
 
 
 def test_rfm_segments_no_global_window(spark):

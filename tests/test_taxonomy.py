@@ -1,10 +1,10 @@
-import pytest
 """Taxonomy engine tests: lineage parse, closure, subtree rollup (with the
 reference's own invariant: subtree >= direct, not all equal —
 tax_abund_from_contigs.R:90-92), LCA."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from glamr_omics_pipelines_spark.operators import taxonomy

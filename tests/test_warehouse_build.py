@@ -1,9 +1,9 @@
-import pytest
 """Layer-C capstone: the full warehouse build run twice — second run must
 load ZERO new rows (the reference's anti-join idempotence contract)."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from glamr_omics_pipelines_spark import fixtures
@@ -108,8 +108,7 @@ def test_agg_snapshot_merge_equals_rescan(spark):
 
 
 def test_merge_agg_snapshots_requires_input(spark):
-    import pytest as _pytest
     from glamr_omics_pipelines_spark.sources.warehouse import (
         merge_agg_snapshots)
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         merge_agg_snapshots()
