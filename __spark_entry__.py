@@ -2625,22 +2625,10 @@ def q_wordpiece_encode(spark, sf_dir):
     — BERT greedy longest-match-first, the second frozen-tokenizer family
     beside bpe_encode) over the corpus with the frozen 22-piece vocab.
     Output pins token count + the first 12 pieces (merge order,
-    continuation framing, whole-word UNK).
-
-    r12: strategy="pandas" (the Arrow-batched greedy with a per-TASK word
-    cache — guide §4.5) replaces the pinned "fold" form: the fold's
-    aggregate-over-sequence HOF evaluates INTERPRETED per word occurrence
-    (~12 steps × 22-piece filter scans), while the pandas path encodes
-    each distinct word once per task. Byte-identical output
-    (property-tested in test_text_functions + A/B-verified here:
-    2.44 s → 0.64 s min-of-4, values equal; fold+_spread measured 0.80,
-    pandas+_spread 1.00 — the serial cached pandas form wins because the
-    corpus' distinct-word set is small and one Arrow task beats 32-task
-    scheduling at this SF). select() first: mapInPandas ships every
-    column it is given (§4.2 column pruning)."""
+    continuation framing, whole-word UNK). select() first: mapInPandas
+    ships every column it is given (§4.2 column pruning)."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    out = text.wordpiece_encode(d, "text", _WP_VOCAB,
-                                max_steps=_WP_STEPS, strategy="pandas")
+    out = text.wordpiece_encode(d, "text", _WP_VOCAB, max_steps=_WP_STEPS)
     # coalesce mirrors the oracle's LEFT JOIN + coalesce: a NULL-text doc
     # yields NULL wp_tokens here but 0/'' there (advisor r9 — latent until
     # a fixture carries NULL text)

@@ -195,7 +195,7 @@ HEADLINE = [
     "phash_dedup",       # P5 decode + DCT phash + banded hamming join
     "compaction_plan",   # exclusive-cumsum file binning, metadata scale
     "afp_dedup",         # WAV decode + spectrogram phash + hamming join
-    "wordpiece_encode",  # greedy fold, literal vocab, zero shuffle
+    "wordpiece_encode",  # Arrow greedy, per-task word cache, zero shuffle
     "video_dedup",       # Y4M decode + frame phash + inverted-index join
     "dataset_card",      # one-pass per-source release summary
     # streaming_* rows are deliberately NOT benched: their wall-clock is

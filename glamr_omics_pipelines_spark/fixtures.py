@@ -116,32 +116,6 @@ def make_contigs() -> list[dict]:
     return rows
 
 
-def make_contig_abund(contigs: list[dict], taxonomy: list[dict]) -> list[dict]:
-    """coverM-shaped per-contig coverage + LCA assignment; tpm sums to 1e6
-    per sample (FIXTURES.md §5-6)."""
-    rng = _rng()
-    species = [t for t in taxonomy if t["rank"] == "S"]
-    rows = []
-    for sample in SAMPLES:
-        sc = [c for c in contigs if c["sample"] == sample]
-        reads = {c["contig"]: rng.randint(50, 20000) for c in sc}
-        rate = {c["contig"]: reads[c["contig"]] / c["length"] for c in sc}
-        total_reads, total_rate = sum(reads.values()), sum(rate.values())
-        for c in sc:
-            t = rng.choice(species)
-            rows.append({
-                "sample": sample, "contig": c["contig"], "length": c["length"],
-                "count": reads[c["contig"]],
-                "mean": round(reads[c["contig"]] * 150 / c["length"], 6),
-                "trimmed_mean": round(reads[c["contig"]] * 140 / c["length"], 6),
-                "variance": round(rng.uniform(0.1, 30.0), 6),
-                "rpkm": reads[c["contig"]] * 1e9 / (total_reads * c["length"]),
-                "tpm": 1e6 * rate[c["contig"]] / total_rate,
-                "tax_id": t["tax_id"], "lineage": t["std_lineage"],
-                "support": round(rng.uniform(0.5, 1.0), 3)})
-    return rows
-
-
 def make_gene_rpkm_files(root: str, contigs: list[dict]) -> str:
     """bbmap-style rpkm files with prodigal #Name headers (FIXTURES.md §7,
     postgres.Rmd:1191-1203): 4 '#'-comment lines + '#Name' header line."""

@@ -26,16 +26,9 @@ from pyspark.sql import DataFrame
 
 _HANDLES: list[DataFrame] = []
 
-# Measurement escape hatch (tools/ab_cache.py): True turns register() into
-# an identity so an interleaved A/B can time the unpersisted form of an
-# operator without a code toggle. Never set in production paths.
-DISABLED = False
-
 
 def register(df: DataFrame, storage_level=None) -> DataFrame:
     """persist() a DataFrame and record a releasable handle to it."""
-    if DISABLED:
-        return df
     df.persist(storage_level) if storage_level is not None else df.persist()
     _HANDLES.append(df)
     return df

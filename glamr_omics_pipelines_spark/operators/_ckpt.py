@@ -50,9 +50,9 @@ def _free_blocks(df: DataFrame) -> bool:
     return False
 
 
-def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager)`` + register the result for release."""
-    ck = df.localCheckpoint(eager=eager)
+def checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)`` + register the result for release."""
+    ck = df.localCheckpoint(eager=True)
     _HANDLES.append(ck)
     return ck
 

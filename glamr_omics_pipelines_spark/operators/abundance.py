@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 
 def _attach_group_sum(df: DataFrame, term: Column, sample_cols: list[str],
-                      out: str, broadcast_totals: bool = True) -> DataFrame:
+                      out: str) -> DataFrame:
     """Attach sum(term) over the sample keys as column ``out`` via a
     group-grain partial aggregate + null-safe equi join, NOT a window.
 
@@ -37,8 +37,8 @@ def _attach_group_sum(df: DataFrame, term: Column, sample_cols: list[str],
     handful of samples that is a parallelism collapse at any scale (the
     tpm bench query: 100k rows onto 5 partitions). The aggregate form
     computes totals map-side (partial agg), ships only group-grain rows,
-    and re-attaches them with a join the optimizer broadcasts whenever the
-    group count is small; the fact side is never exchanged. The shared
+    and re-attaches them with a broadcast join; the fact side is never
+    exchanged. The shared
     upstream exchange is served to both branches by ReuseExchange.
     eqNullSafe keeps the window's null-key semantics (nulls form a group)."""
     # NOT persisted (r11 A/B): registering df here (upstream-once) measured
@@ -50,14 +50,9 @@ def _attach_group_sum(df: DataFrame, term: Column, sample_cols: list[str],
     # size for this family's sample/priority grains) — hint the broadcast
     # so the fact side is NEVER exchanged; without the hint the static
     # planner cannot size the aggregate and falls back to a sort-merge
-    # join that shuffles the fact side. ``broadcast_totals=False`` is the
-    # escape hatch for callers normalizing at a FINE grain (millions of
-    # groups): the plain join lets AQE pick the strategy from the actual
-    # aggregate size instead of forcing a driver-sized broadcast build.
-    keyed = tot.select(
-        *[F.col(c).alias(f"_gs_{c}") for c in sample_cols], out)
-    if broadcast_totals:
-        keyed = F.broadcast(keyed)
+    # join that shuffles the fact side.
+    keyed = F.broadcast(tot.select(
+        *[F.col(c).alias(f"_gs_{c}") for c in sample_cols], out))
     cond = functools.reduce(operator.and_, [
         F.col(c).eqNullSafe(F.col(f"_gs_{c}")) for c in sample_cols])
     return (df.join(keyed, cond, "left")
@@ -65,31 +60,28 @@ def _attach_group_sum(df: DataFrame, term: Column, sample_cols: list[str],
 
 
 def rel_abund(df: DataFrame, value: str, sample_cols: list[str],
-              out: str = "rel_abund",
-              broadcast_totals: bool = True) -> DataFrame:
+              out: str = "rel_abund") -> DataFrame:
     """Per-group relative abundance: value / sum(value) over the sample keys.
 
     try_divide: an all-zero group has total 0 — abundance is undefined
     there (null), not an ANSI DIVIDE_BY_ZERO that kills the whole job."""
-    return (_attach_group_sum(df, F.col(value), sample_cols, "_tot",
-                              broadcast_totals)
+    return (_attach_group_sum(df, F.col(value), sample_cols, "_tot")
             .withColumn(out, F.try_divide(F.col(value), F.col("_tot")))
             .drop("_tot"))
 
 
 def rpkm(df: DataFrame, count: str, length: str, sample_cols: list[str],
-         out: str = "rpkm", broadcast_totals: bool = True) -> DataFrame:
+         out: str = "rpkm") -> DataFrame:
     """Reads-per-kilobase-per-million: n*1e9/(sample_total*len); null on
     an all-zero sample or a zero-length feature (try_divide)."""
-    return (_attach_group_sum(df, F.col(count), sample_cols, "_tot",
-                              broadcast_totals)
+    return (_attach_group_sum(df, F.col(count), sample_cols, "_tot")
             .withColumn(out, F.try_divide(F.col(count) * F.lit(1e9),
                                           F.col("_tot") * F.col(length)))
             .drop("_tot"))
 
 
 def tpm(df: DataFrame, count: str, length: str, sample_cols: list[str],
-        out: str = "tpm", broadcast_totals: bool = True) -> DataFrame:
+        out: str = "tpm") -> DataFrame:
     """Transcripts-per-million: 1e6*(n/len) / sum(n/len) over sample.
 
     Invariant (tested): sum(tpm) per sample == 1e6
@@ -98,8 +90,7 @@ def tpm(df: DataFrame, count: str, length: str, sample_cols: list[str],
     ANSI divide error (try_divide).
     """
     rate = F.try_divide(F.col(count), F.col(length))
-    return (_attach_group_sum(df, rate, sample_cols, "_tot",
-                              broadcast_totals)
+    return (_attach_group_sum(df, rate, sample_cols, "_tot")
             .withColumn(out, F.try_divide(F.lit(1e6) * rate, F.col("_tot")))
             .drop("_tot"))
 

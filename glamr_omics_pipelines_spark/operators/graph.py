@@ -186,8 +186,6 @@ def _pagerank_local(e: DataFrame, damping: float,
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              weight_col: str | None = "weight", iterations: int = 10,
              damping: float = 0.85,
-             num_partitions: int | None = None,
-             checkpoint_every: int = 3,
              broadcast_ranks: bool | None = None,
              local_fold: bool | None = None) -> DataFrame:
     """Weighted PageRank over a directed edge list, fixed ``iterations``:
@@ -256,19 +254,17 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         # cache (materialized by the gate count just taken) feeds the
         # fold directly (guide §2.4: remove shuffles outright).
         return _pagerank_local(e, damping, iterations)
-    if num_partitions is None:
-        # Size the superstep partitioning to the MEASURED edge count, not
-        # the session default: every iteration pays 2 shuffles at this
-        # width, so a small graph on a wide default drowns in task
-        # scheduling (A/B sf0.1, 2.4M edges, 10 supersteps, min-of-2:
-        # 32 partitions = 9.95 s, 8 = 7.57 s, 4 = 7.20 s), while a 10^12-
-        # edge corpus wants the full session width. The numbered
-        # repartition below keeps whichever width wins exempt from AQE
-        # coalescing (see the trap note above).
-        session_width = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        num_partitions = max(1, min(session_width,
-                                    -(-n_edges // _EDGE_ROWS_PER_PARTITION)))
+    # Size the superstep partitioning to the MEASURED edge count, not the
+    # session default: every iteration pays 2 shuffles at this width, so a
+    # small graph on a wide default drowns in task scheduling (A/B sf0.1,
+    # 2.4M edges, 10 supersteps, min-of-2: 32 partitions = 9.95 s, 8 =
+    # 7.57 s, 4 = 7.20 s), while a 10^12-edge corpus wants the full
+    # session width. The numbered repartition below keeps whichever width
+    # wins exempt from AQE coalescing (see the trap note above).
+    session_width = int(
+        edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    num_partitions = max(1, min(session_width,
+                                -(-n_edges // _EDGE_ROWS_PER_PARTITION)))
     nodes = _cache.register(
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
@@ -300,13 +296,12 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # loop allocates anything else.
     e.unpersist()
     ranks = base.select("node", F.col("_init").alias("rank"))
-    # Checkpoint cadence: ``checkpoint_every`` supersteps chain lazily
+    # Checkpoint cadence: every 3rd superstep. Supersteps chain lazily
     # between eager localCheckpoints — fewer materialization barriers per
     # run, at the cost of a 3-superstep retry scope and a 3-deep plan
     # between cuts. A/B at sf0.1 (10 supersteps, min-of-3, two repeats):
     # every-1 = 18.5/20.7 s, every-3 = 14.2/15.5 s, every-5 = 15.9/14.8 s
-    # (ROUND5.md) — the barrier cost is real and the win saturates at 3,
-    # so 3 is the default; pass 1 to prioritize minimal retry scope.
+    # (ROUND5.md) — the barrier cost is real and the win saturates at 3.
     checkpointed = ranks
     for i in range(iterations):
         rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
@@ -320,7 +315,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                          (F.col("_base")
                           + damping * F.coalesce(F.col("_c"), F.lit(0.0)))
                          .alias("rank")))
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
+        if (i + 1) % 3 == 0 or i == iterations - 1:
             prev = checkpointed
             ranks = _ckpt.checkpoint(ranks)
             checkpointed = ranks

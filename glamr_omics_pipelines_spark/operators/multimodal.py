@@ -742,7 +742,12 @@ def _phash_of_gray_many(arrs, hash_size: int = 8, img_size: int = 32):
     top = a * (1.0 - fx)[None, None, :] + b * fx[None, None, :]
     bot = cc * (1.0 - fx)[None, None, :] + d * fx[None, None, :]
     out = top * (1.0 - fy)[None, :, None] + bot * fy[None, :, None]
-    R = np.clip(np.rint(out), 0, 255).astype("u1").astype(np.float64)
+    # the gathers above leave the frame axis innermost in memory, so R[i]
+    # would be a strided view and its GEMM would take a different BLAS
+    # path from the scalar kernel's contiguous frame — on flat frames
+    # (all-noise AC terms) that flipped bits depending on batch neighbours
+    R = np.ascontiguousarray(
+        np.clip(np.rint(out), 0, 255).astype("u1").astype(np.float64))
     m = _dct2_matrix(img_size)
     C = np.empty((n, hash_size * hash_size), dtype=np.float64)
     for i in range(n):  # per-frame GEMMs: bit-exact with the scalar path

@@ -136,16 +136,17 @@ def clear_gate_cache() -> None:
     _DIM_CACHE.clear()
 
 
-def _over_gate(df: DataFrame, gate: int = None) -> bool:
-    """True iff ``df`` has MORE than ``gate`` rows — the auto-gate probe.
+def _over_gate(df: DataFrame) -> bool:
+    """True iff ``df`` has MORE than ``_BRUTE_PAIRGEN_MAX_ROWS`` rows — the
+    auto-gate probe.
 
     limit(gate+1).count() short-circuits the scan on huge corpora (only
     "more than N?" matters, never the exact count); the verdict is
     memoized per (session, logical plan) so repeated calls with the same
     plan — bench reruns, dbscan→embedding_cosine_dups chains — pay the
-    probe job once, not per call (VERDICT r7 #2)."""
-    if gate is None:
-        gate = _BRUTE_PAIRGEN_MAX_ROWS
+    probe job once, not per call (VERDICT r7 #2). The gate value is part
+    of the memo key, so a changed ceiling re-probes."""
+    gate = _BRUTE_PAIRGEN_MAX_ROWS
     key = _plan_key(df)
     if key is not None:
         hit = _GATE_CACHE.get((*key, gate))

@@ -513,12 +513,6 @@ def line_quality_filter(df: DataFrame, text_col: str,
                         .cast("bigint")))
 
 
-# wordpiece_encode: vocab size above which the literal-array fold form
-# gives way to the Arrow-batched greedy path (a 30k-piece literal array
-# would dominate the plan; the fold is the oracle form)
-_WP_FOLD_AUTO_MAX = 512
-
-
 def _wp_vocab_parts(vocab: list[str]) -> list[tuple[str, str, bool]]:
     """Validate a WordPiece vocab and split into (body, piece, cont)."""
     out = []
@@ -537,14 +531,9 @@ def _wp_vocab_parts(vocab: list[str]) -> list[tuple[str, str, bool]]:
     return out
 
 
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def wordpiece_encode(df: DataFrame, text_col: str, vocab: list[str],
-                     out: str = "wp_tokens", unk: str = "[UNK]",
-                     max_steps: int = 12,
-                     strategy: str | None = None) -> DataFrame:
+def wordpiece_encode(df: DataFrame, text_col: str | Column,
+                     vocab: list[str], out: str = "wp_tokens",
+                     unk: str = "[UNK]", max_steps: int = 12) -> DataFrame:
     """Apply a frozen WordPiece vocabulary to a corpus (the BERT greedy
     longest-match-first tokenizer — the second tokenizer family beside
     BPE's bpe_encode): per lowercased whitespace word, repeatedly take the
@@ -555,84 +544,24 @@ def wordpiece_encode(df: DataFrame, text_col: str, vocab: list[str],
     the longest word length the cap is inert, since every step consumes
     ≥ 1 char).
 
-    Two physical forms (``strategy``), auto-selected by vocab size:
-
-    * ``"fold"`` (default ≤ 512 pieces) — row-local JVM expressions, ZERO
-      shuffle, zero Python: the vocab is ONE literal array of
-      (body, piece, cont) structs bound once, and the greedy loop is ONE
-      ``aggregate`` over ``sequence(1, max_steps)`` whose lambda picks the
-      longest match via filter + array_max (runtime iteration — the
-      expression tree does NOT grow with max_steps, the bpe_encode
-      CollapseProject lesson applied pre-emptively). The oracle form: the
-      same state machine unrolls as ``max_steps`` SQL CTE rounds at
-      DISTINCT-WORD grain.
-    * ``"pandas"`` (default above 512) — the real-vocab path: one
-      Arrow-batched ``mapInPandas`` scan (zero shuffle) running the
-      standard greedy with a piece set + per-partition word cache; per-doc
-      cost independent of vocab size (30k-piece BERT vocabs tokenize in
-      the scan stage). Byte-for-byte equal to the fold (property-tested).
+    One Arrow-batched ``mapInPandas`` scan (zero shuffle) runs the greedy
+    over a piece dict plus a per-task word cache, so each distinct word is
+    encoded once per task and per-doc cost is independent of vocab size
+    (30k-piece BERT vocabs tokenize in the scan stage). ``text_col`` is a
+    column name or a Column; an existing ``out`` column is replaced.
 
     A tie between two matches is impossible: same length + same prefix ⇒
     identical body, and the cont flag separates ``x`` from ``##x``.
-    NULL text stays NULL on both paths.
+    NULL text stays NULL.
     """
     parts = _wp_vocab_parts(vocab)
     if max_steps <= 0:
         raise ValueError("wordpiece_encode: max_steps must be positive")
-    if strategy is None:
-        strategy = "fold" if len(parts) <= _WP_FOLD_AUTO_MAX else "pandas"
-    if strategy not in ("fold", "pandas"):
-        raise ValueError(f"strategy must be fold|pandas, got {strategy!r}")
-    if strategy == "pandas":
-        return _wordpiece_pandas(df, text_col, parts, out, unk, max_steps)
-    if not isinstance(text_col, str):
-        raise TypeError("wordpiece_encode fold strategy needs a column "
-                        "NAME (the vocab fold is spliced into one SQL "
-                        "expression); pass strategy='pandas' for a Column")
-    vlit = "array(" + ",".join(
-        f"named_struct('body', {_sql_str(b)}, 'piece', {_sql_str(p)}, "
-        f"'cont', {'true' if c else 'false'})"
-        for b, p, c in parts) + ")"
-    best = (f"array_max(transform(filter({vlit}, "
-            "v -> v.cont = (size(acc.toks) > 0) "
-            "AND startswith(acc.rest, v.body)), "
-            "v -> named_struct('l', length(v.body), 'body', v.body, "
-            "'piece', v.piece)))")
-    u = _sql_str(unk)
-    # bind the best-match ONCE per step via a 1-element transform (b =
-    # best): splicing {best} into the CASE three times re-ran the whole
-    # vocab filter+array_max scan 3x per step in the HOF interpreter
-    # (no CSE inside lambdas) AND tripled the expression tree — measured
-    # ~3x on the fold's wall (r10, the advisor's bind-the-vocab-once note)
-    fold = (
-        f"aggregate(sequence(1, {max_steps}), "
-        "named_struct('rest', w, 'toks', cast(array() as array<string>)), "
-        f"(acc, i) -> CASE WHEN acc.rest = '' THEN acc "
-        f"ELSE element_at(transform(array({best}), b -> "
-        f"CASE WHEN b IS NULL THEN "
-        f"named_struct('rest', '', 'toks', array({u})) "
-        f"ELSE named_struct("
-        f"'rest', substring(acc.rest, length(b.body) + 1), "
-        f"'toks', concat(acc.toks, array(b.piece))) END), 1) END, "
-        f"acc -> CASE WHEN acc.rest <> '' THEN array({u}) "
-        f"ELSE acc.toks END)")
-    # one self-contained SQL expression (the learn_bpe_merges convention:
-    # a single F.expr = one py4j roundtrip, and the inner fold's free
-    # variable w binds to the outer transform lambda naturally)
-    words = (f"filter(split(lower(`{text_col}`), '\\\\s+'), "
-             "t -> t <> '')")
-    return df.withColumn(out, F.expr(
-        f"flatten(transform({words}, w -> {fold}))"))
-
-
-def _wordpiece_pandas(df: DataFrame, text_col, parts, out: str,
-                      unk: str, max_steps: int) -> DataFrame:
-    """Arrow-batched greedy WordPiece (identical semantics to the fold)."""
     starts = {b: p for b, p, c in parts if not c}
     conts = {b: p for b, p, c in parts if c}
     max_len = max(len(b) for b, _, _ in parts)
     src = F.col(text_col) if isinstance(text_col, str) else text_col
-    if out in df.columns:          # withColumn-replace semantics, like fold
+    if out in df.columns:          # withColumn-replace semantics
         df = df.drop(out)
     wc = "_wp_words"               # collision-checked scratch name
     while wc in df.columns:

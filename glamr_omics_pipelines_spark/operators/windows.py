@@ -105,14 +105,6 @@ def top1_by_agg(df: DataFrame, group_cols: list[str],
                       *[F.col(f"_w._p.{p}").alias(p) for p in payload])
 
 
-def topk_per_group(df: DataFrame, group_cols: list[str], order_cols: list,
-                   k: int, rank_col: str | None = None) -> DataFrame:
-    """Top-k rows per group (generalization of W1)."""
-    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    out = df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
-    return out.withColumnRenamed("_rn", rank_col) if rank_col else out.drop("_rn")
-
-
 def tie_discard_top1(df: DataFrame, group_cols: list[str], score: str,
                      descending: bool = True) -> DataFrame:
     """Winner per group only when the best score is uniquely held.

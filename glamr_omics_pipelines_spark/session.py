@@ -96,15 +96,3 @@ def get_spark(app_name: str = "glamr-omics-spark", master: str | None = None,
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = ("region", "nation", "customer", "supplier",
-                                          "part", "orders", "lineitem", "events",
-                                          "documents", "embeddings")) -> dict:
-    """Load the driver's parquet tables as DataFrames keyed by name."""
-    out = {}
-    for n in names:
-        p = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(p):
-            out[n] = spark.read.parquet(p)
-    return out

@@ -124,11 +124,6 @@ def read_json_records(spark: SparkSession, paths, schema: StructType | None = No
     return reader.json(paths)
 
 
-def parse_json_col(df: DataFrame, col: str, schema) -> DataFrame:
-    """from_json for embedded JSON string columns (events.props-style)."""
-    return df.withColumn(col, F.from_json(F.col(col), schema))
-
-
 def read_xml_elements(spark: SparkSession, path: str, row_tag: str) -> DataFrame:
     """XML source (S7, pypelib/sra.py:28-75 SRA metadata).
 

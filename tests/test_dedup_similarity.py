@@ -373,6 +373,12 @@ def test_brute_force_topk_method_gate(spark, monkeypatch):
                                     method="turbo")
 
 
+def _gate_at(monkeypatch, df, gate):
+    """similarity._over_gate with the brute-pairgen ceiling set to gate."""
+    monkeypatch.setattr(similarity, "_BRUTE_PAIRGEN_MAX_ROWS", gate)
+    return similarity._over_gate(df)
+
+
 def test_gate_probe_memoized(spark, monkeypatch):
     """VERDICT r7 #2: the auto-gate's limit(N+1).count() probe is a full
     Spark job and must run at most ONCE per (session, logical plan) —
@@ -394,16 +400,16 @@ def test_gate_probe_memoized(spark, monkeypatch):
         return orig(self, n)
 
     monkeypatch.setattr(cls, "limit", spy)
-    assert similarity._over_gate(df, 10) is True
-    assert similarity._over_gate(df, 10) is True
+    assert _gate_at(monkeypatch, df, 10) is True
+    assert _gate_at(monkeypatch, df, 10) is True
     assert calls == [11], "second call must hit the memo"
-    assert similarity._over_gate(df, 50) is False  # new gate -> new probe
+    assert _gate_at(monkeypatch, df, 50) is False  # new gate -> new probe
     assert calls == [11, 51]
     other = df.filter(F.col("id") < 5)
-    assert similarity._over_gate(other, 10) is False  # new plan -> new probe
+    assert _gate_at(monkeypatch, other, 10) is False  # new plan -> new probe
     assert calls == [11, 51, 11]
     similarity.clear_gate_cache()
-    assert similarity._over_gate(df, 10) is True  # cleared -> probes again
+    assert _gate_at(monkeypatch, df, 10) is True  # cleared -> probes again
     assert calls == [11, 51, 11, 11]
 
 
@@ -553,16 +559,16 @@ def test_gate_under_verdict_reprobes_after_hit_budget(spark, monkeypatch):
 
     monkeypatch.setattr(cls, "limit", spy)
     monkeypatch.setattr(similarity, "_GATE_REPROBE_HITS", 3)
-    assert similarity._over_gate(df, 50) is False
+    assert _gate_at(monkeypatch, df, 50) is False
     for _ in range(2):  # hits 2, 3 — still under budget
-        assert similarity._over_gate(df, 50) is False
+        assert _gate_at(monkeypatch, df, 50) is False
     assert calls == [51]
-    assert similarity._over_gate(df, 50) is False  # budget hit -> re-probe
+    assert _gate_at(monkeypatch, df, 50) is False  # budget hit -> re-probe
     assert calls == [51, 51]
     # over-verdicts stay pinned past the budget
-    assert similarity._over_gate(df, 10) is True
+    assert _gate_at(monkeypatch, df, 10) is True
     for _ in range(5):
-        assert similarity._over_gate(df, 10) is True
+        assert _gate_at(monkeypatch, df, 10) is True
     assert calls == [51, 51, 11]
     similarity.clear_gate_cache()
 

@@ -5,15 +5,19 @@ helper whose name shadowed an earlier helper with a DIFFERENT signature,
 silently breaking that helper's pre-existing call sites (pytest red at
 HEAD, caught only by the judge). Python allows re-definition without a
 whisper, so the suite now refuses duplicate module-level def/class names
-in any test module.
+in any test module. Round-numbered modules (``ab_r11.py``) are per-round
+scaffolding that outlives the code it measured, so the source and tool
+trees refuse them too.
 """
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 TESTS_DIR = pathlib.Path(__file__).parent
+REPO = TESTS_DIR.parent
 
 
 def test_no_duplicate_module_level_names_in_tests():
@@ -32,3 +36,14 @@ def test_no_duplicate_module_level_names_in_tests():
     assert not offenders, (
         "duplicate module-level helper names (later def silently shadows "
         "the earlier one — the r9 _y4m bug class):\n" + "\n".join(offenders))
+
+
+def test_no_round_numbered_modules():
+    offenders = [
+        str(path.relative_to(REPO))
+        for top in ("tools", "glamr_omics_pipelines_spark")
+        for path in sorted((REPO / top).rglob("*.py"))
+        if re.search(r"_r\d+(_|$)", path.stem)]
+    assert not offenders, (
+        "round-numbered modules (fold the measurement into perfbench's "
+        "--trace record instead):\n" + "\n".join(offenders))

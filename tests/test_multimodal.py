@@ -1437,6 +1437,14 @@ def test_phash_batched_kernel_bit_identical():
     got_map = M._phash_scatter(list(enumerate(arrs)))
     got = [got_map[i] for i in range(len(arrs))]
     assert got == ref
+    # a frame's hash must not depend on its batch neighbours: alone, in
+    # its same-shape batch and in the mixed batch all agree (the constant
+    # 255 frame once hashed differently beside the zero frame)
+    for i, a in enumerate(arrs):
+        peers = [k for k, b in enumerate(arrs) if b.shape == a.shape]
+        batch = M._phash_of_gray_many([arrs[k] for k in peers])
+        assert M._phash_of_gray_many([a]) == [ref[i]], i
+        assert batch[peers.index(i)] == ref[i], i
     # and the audio matrix path composes identically
     samples = rng.normal(0, 1000, 4096)
     assert M._afp_of_samples(samples) == M._phash_of_gray(

@@ -286,38 +286,59 @@ WP_VOCAB = ["a", "the", "spark", "sp", "##ark", "s", "##park", "so", "##rt",
             "fil", "##ter", "da", "##ta"]
 
 
-def test_wordpiece_hand_cases_both_paths(spark):
+def _wordpiece_ref(text, vocab, max_steps=12, unk="[UNK]"):
+    """Plain-Python greedy longest-match-first WordPiece (the BERT rule):
+    no match at a step, or a remainder left after max_steps pieces, turns
+    the whole word into unk."""
+    if text is None:
+        return None
+    out = []
+    for word in text.lower().split():
+        rest, toks = word, []
+        while rest and len(toks) < max_steps:
+            pre = "##" if toks else ""
+            ln = next((n for n in range(len(rest), 0, -1)
+                       if pre + rest[:n] in vocab), 0)
+            if not ln:
+                break
+            toks.append(pre + rest[:ln])
+            rest = rest[ln:]
+        out.extend([unk] if rest else toks)
+    return out
+
+
+def test_wordpiece_hand_cases(spark):
     """Greedy longest-match: 'scan' whole beats sc+##an; 'sort' takes
     so+##rt (so > s at step 1); no-match word → whole-word [UNK]; NULL
-    stays NULL; fold == pandas."""
+    stays NULL; the reference agrees."""
     from glamr_omics_pipelines_spark.operators import text as T
-    df = spark.createDataFrame(
-        [(1, "Spark table scan"), (2, "sort the data"), (3, "fast stream"),
-         (4, None)], "doc_id long, text string")
+    rows = [(1, "Spark table scan"), (2, "sort the data"),
+            (3, "fast stream"), (4, None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     want = {1: ["spark", "table", "scan"],
             2: ["so", "##rt", "the", "da", "##ta"],
             3: ["[UNK]", "[UNK]"], 4: None}
-    for strat in ("fold", "pandas"):
-        got = {r["doc_id"]: r["wp_tokens"] for r in
-               T.wordpiece_encode(df, "text", WP_VOCAB,
-                                  strategy=strat).collect()}
-        assert got == want, strat
+    got = {r["doc_id"]: r["wp_tokens"] for r in
+           T.wordpiece_encode(df, "text", WP_VOCAB).collect()}
+    assert got == want
+    assert {i: _wordpiece_ref(t, set(WP_VOCAB)) for i, t in rows} == want
 
 
 def test_wordpiece_step_cap_unk(spark):
-    """A word needing more than max_steps pieces becomes [UNK] on BOTH
-    paths (the step-capped-greedy contract)."""
+    """A word needing more than max_steps pieces becomes [UNK] (the
+    step-capped-greedy contract)."""
     from glamr_omics_pipelines_spark.operators import text as T
     df = spark.createDataFrame([(1, "aaaa aa")], "doc_id long, text string")
     vocab = ["a", "##a"]
-    for strat in ("fold", "pandas"):
-        got = T.wordpiece_encode(df, "text", vocab, max_steps=3,
-                                 strategy=strat).collect()[0]["wp_tokens"]
-        assert got == ["[UNK]", "a", "##a"], strat
+    got = T.wordpiece_encode(df, "text", vocab,
+                             max_steps=3).collect()[0]["wp_tokens"]
+    assert got == ["[UNK]", "a", "##a"]
+    assert _wordpiece_ref("aaaa aa", set(vocab), max_steps=3) == got
 
 
-def test_wordpiece_fold_equals_pandas_random(spark):
-    """Property: fold == pandas on a randomized vocab + corpus."""
+def test_wordpiece_matches_reference_random(spark):
+    """Property: the engine equals the plain-Python greedy on a randomized
+    vocab + corpus."""
     import random
     from glamr_omics_pipelines_spark.operators import text as T
     rng = random.Random(17)
@@ -330,11 +351,11 @@ def test_wordpiece_fold_equals_pandas_random(spark):
                                  for _ in range(rng.randint(1, 8)))
                          for _ in range(6))) for i in range(30)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    a = {r["doc_id"]: r["wp_tokens"] for r in
-         T.wordpiece_encode(df, "text", vocab, strategy="fold").collect()}
-    b = {r["doc_id"]: r["wp_tokens"] for r in
-         T.wordpiece_encode(df, "text", vocab, strategy="pandas").collect()}
-    assert a == b
+    for steps in (4, 12):  # the cap binds at 4, is inert at 12
+        got = {r["doc_id"]: r["wp_tokens"] for r in T.wordpiece_encode(
+            df, "text", vocab, max_steps=steps).collect()}
+        assert got == {i: _wordpiece_ref(t, set(vocab), max_steps=steps)
+                       for i, t in docs}, steps
 
 
 def test_wordpiece_guards(spark):
@@ -349,45 +370,39 @@ def test_wordpiece_guards(spark):
         T.wordpiece_encode(df, "text", ["##"])
     with _pytest.raises(ValueError):
         T.wordpiece_encode(df, "text", ["a"], max_steps=0)
-    with _pytest.raises(ValueError):
-        T.wordpiece_encode(df, "text", ["a"], strategy="nope")
 
 
-def test_wordpiece_fold_zero_shuffle_pandas_single_scan(spark):
+def test_wordpiece_single_scan_zero_shuffle(spark):
     from glamr_omics_pipelines_spark.operators import text as T
     df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-    pf = T.wordpiece_encode(df, "text", ["a", "b"], strategy="fold") \
+    plan = T.wordpiece_encode(df, "text", ["a", "b"]) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in pf and "InPandas" not in pf
-    pp = T.wordpiece_encode(df, "text", ["a", "b"], strategy="pandas") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in pp and pp.count("MapInPandas") == 1
+    assert "Exchange" not in plan and plan.count("MapInPandas") == 1
 
 
-def test_wordpiece_fold_rejects_column_arg(spark):
-    import pytest as _pytest
+def test_wordpiece_accepts_column_arg(spark):
     from pyspark.sql import functions as F
     from glamr_omics_pipelines_spark.operators import text as T
-    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with _pytest.raises(TypeError):
-        T.wordpiece_encode(df, F.col("text"), ["a"], strategy="fold")
+    df = spark.createDataFrame([(1, "x"), (2, "a b")],
+                               "doc_id long, text string")
+    got = {r["doc_id"]: r["wp_tokens"] for r in T.wordpiece_encode(
+        df, F.concat(F.col("text"), F.lit(" B")), ["a", "b"]).collect()}
+    assert got == {1: ["[UNK]", "b"], 2: ["a", "b", "b"]}
 
 
 def test_wordpiece_pandas_scratch_and_replace_semantics(spark):
-    """Pandas path: a caller column named _wp_words survives; an existing
-    out column is REPLACED (withColumn semantics, matching the fold)."""
+    """A caller column named _wp_words survives; an existing out column
+    is REPLACED (withColumn semantics)."""
     from glamr_omics_pipelines_spark.operators import text as T
     df = spark.createDataFrame([(1, "a b", "keep", "old")],
                                ["doc_id", "text", "_wp_words", "wp_tokens"])
-    r = T.wordpiece_encode(df, "text", ["a", "b"],
-                           strategy="pandas").collect()[0]
+    r = T.wordpiece_encode(df, "text", ["a", "b"]).collect()[0]
     assert r["_wp_words"] == "keep" and r["wp_tokens"] == ["a", "b"]
 
 
 def test_wordpiece_real_vocab_scale(spark):
-    """The pandas path tokenizes the sf0.01 corpus under a 30,000-piece
-    vocabulary (BERT-class size) — the capability the fold form
-    deliberately does not claim; warm per-doc cost is vocab-size
+    """wordpiece_encode tokenizes the sf0.01 corpus under a 30,000-piece
+    vocabulary (BERT-class size); warm per-doc cost is vocab-size
     independent (per-partition word cache)."""
     import random
     import time

@@ -67,10 +67,12 @@ def main() -> int:
           " joins), the FASTQ-sourced queries"
           " `fastq_roundtrip` / `quality_window_trim` (the S1 reader is an"
           " Arrow-batched mapInPandas file parser — gzip framing cannot be"
-          " JVM-split; the FASTA reader S2 is pure JVM), and"
+          " JVM-split; the FASTA reader S2 is pure JVM),"
           " `embedding_covariance` (mapInPandas BLAS partial Gramian —"
           " measured 2.3× over the pure-JVM nested-posexplode form, which"
-          " remains available as gram_matrix(strategy='explode')). The"
+          " remains available as gram_matrix(strategy='explode')), and"
+          " `wordpiece_encode` (the greedy WordPiece tokenizer is one"
+          " Arrow-batched mapInPandas scan with a per-task word cache). The"
           " BroadcastNestedLoop in `rfm_segments` (1-row quintile-threshold attach) / `doc_lm_score` / `temperature_sample` / `pmi_collocations` /"
           " `tfidf_topk` / `doc_bigram_lm` / `tfidf_doc_pairs` /"
           " `bm25_search` (r9: the N/avgdl corpus-stats attach) is a ONE-ROW"
