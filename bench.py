@@ -23,198 +23,12 @@ from glamr_omics_pipelines_spark.session import get_spark  # noqa: E402
 from glamr_omics_pipelines_spark.operators import _cache, _ckpt  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 
-# Headline subset: one per operator family that dominates runtime at scale.
-HEADLINE = [
-    "pricing_summary",   # scan-heavy multi-agg
-    "topk_revenue",      # big join + agg + top-k
-    "tpm",               # window-normalized abundance over join chain
-    "top1_per_group",    # window row_number over the fact table
-    "anvio_stacked",     # 3-layer stacked windows (the reference's richest SQL)
-    "subtree_rollup",    # hierarchical closure join
-    "lca",               # path-prefix aggregate
-    "pivot_wider",       # pivot matrix
-    "sessionize",        # gap sessionization over events
-    "windowed_counts",   # event-time tumbling windows
-    "exact_dedup",       # hash-groupBy dedup over documents
-    "minhash_dedup",     # shingle->minhash->LSH->verify
-    "simhash_dedup",     # 64-bit simhash banding + verify
-    "cosine_topk",       # brute-force ANN baseline
-    "lsh_ann",           # hyperplane-bucketed ANN (the scale path)
-    "lsh_ann_multi",     # OR-amplified 3-table LSH ANN (recall-tunable)
-    "embedding_dups",    # embedding-cosine near-dup pairs
-    "coverage_stats",    # coverM-style rank-trimmed coverage aggregate
-    "kingdom_priority_lca",  # priority-bucketed LCA
-    "multimodal_features",   # Arrow-batched mapInPandas decode stub
-    "text_quality",      # text feature extraction
-    "token_counts",      # whitespace + BPE-ish token counting
-    "lang_id",           # marker-word language ID
-    "doc_fingerprint",   # rolling polynomial hash
-    "seqkit_stats",      # quantile aggregate
-    "ivf_ann",           # IVF quantizer + cell-probe ANN (probe-all exact mode)
-    "asof_join",         # union-merge as-of join (single shuffle, no blowup)
-    "range_join",        # binned point-in-interval equi join
-    "hypertable_rollup", # multi-granularity time rollup in one scan
-    "vocab_topk",        # corpus vocabulary: explode + partial-agg + top-k
-    "curation_pipeline", # lang gate -> quality gate -> exact dedup -> split
-    "quality_window_trim",  # fastp sliding-window trim over Phred arrays
-    "text_repetition",   # Gopher repetition gates (row-local HOFs)
-    "pii_scrub",         # regex redaction chain, scan-stage
-    "doc_lm_score",      # corpus unigram logprob quality gate
-    "interval_overlap",  # binned interval-overlap join (first-shared-bin dedup)
-    "split_contamination",  # cross-split n-gram decontamination sweep
-    "temperature_sample",   # alpha-temperature group rebalance
-    "dedup_keep_best",   # cluster survivor selection (argmax-by-quality)
-    "quantile_gate",     # per-group exact-quantile adaptive filter
-    "normalize_text",    # markup/whitespace canonicalization chain
-    "session_windows",   # native session_window merging aggregation
-    "kmer_spectrum",     # bounded-output k-mer counting
-    "rolling_features",  # trailing RANGE-frame features per user
-    "tfidf_topk",        # tf partial agg + broadcast idf + rank window
-    "winsorize",         # per-group quantile-band clipping
-    "funnel",            # stacked conditional-min funnel windows
-    "snapshot_diff",     # hash-compare full-outer snapshot delta
-    "corr_stats",        # co-moment partial aggregates
-    "pack_sequences",    # hash-sharded prefix-sum packing
-    "mad_outliers",      # median/MAD robust outlier flags
-    "curation_pipeline_v2",  # normalize->gate->dedup->split->pack, one plan
-    "label_centroids",   # posexplode partial-agg embedding centroids
-    "profile_table",     # one-scan column profile audit
-    "ngram_containment", # asymmetric inclusion detector (shared overlap core)
-    "line_dedup",        # C4-style cross-doc line boilerplate removal
-    "geo_neighbors",     # grid-binned haversine proximity join
-    "span_dedup",        # ExactSubstr duplicated-span removal (w-gram seeds)
-    "pmi_collocations",  # consecutive-bigram PMI collocation ranking
-    "pagerank",          # 10-iteration Pregel loop, edge partitioning reused
-    "data_quality",      # expectations suite: one agg scan/table + FK anti-joins
-    "attribution_join",  # event-time-bounded stream-stream join shape
-    "embedding_covariance",  # nested-posexplode partial-agg d^2 statistic
-    "quantize_embeddings",   # d-row bounds broadcast + row-local rescale
-    "interval_subtract", # signed sweep-line A-minus-B with span re-merge
-    "incremental_agg",   # snapshot-grain mergeable rollup refresh
-    "gaps_islands",      # consecutive-run detection (date - row_number)
-    "group_percentiles", # exact percentile ladder, one array aggregate
-    "mixture_sample",    # explicit target-mixture downsample, md5 membership
-    "cube_report",       # CUBE cross-tab with grouping_id, one scan
-    "bitset_semi_join",  # broadcast-bitset scan-stage pruning + exact semi
-    "fuzzy_resolve",     # canonical typo resolution, broadcast variants
-    "basket_rules",      # association rules on the co-occurrence core
-    "quantile_normalize", # per-group rank window + rank-grain means
-    "clr_transform",     # compositional normalization, broadcast mean-logs
-    "deseq_size_factors", # median-of-ratios depth normalizer
-    "rank_sum_test",     # feature-parallel Wilcoxon U + z
-    "zorder_key",        # codegen Morton interleave, scan-stage
-    "scd2_history",      # SCD2 run compression (one key window + groupBy)
-    "event_transitions", # Markov bigram matrix via lead window
-    "chunk_documents",   # sliding-window token chunking, row-local HOFs
-    "fuzzy_name_pairs",  # deletion-neighborhood blocking + levenshtein verify
-    "weighted_sample",   # Efraimidis-Spirakis deterministic weighted top-k
-    "interval_merge",    # bedtools-merge islands (running-max window)
-    "genome_coverage",   # genomecov sweep-line depth histogram
-    "nearest_feature",   # bedtools-closest via union-merge, one shuffle
-    "shannon_diversity", # per-sample H' via totals-broadcast partial agg
-    "bray_curtis",       # sample-grain pairwise dissimilarity
-    "rarefaction",       # one-scan nested hash-subsample richness
-    "nx_ladder",         # N50/L50 contiguity ladder, one group exchange
-    "resample_fill",     # dense-axis gap fill via sequence()+explode grid
-    "interpolate",       # IGNORE-NULLS frames linear repair, one exchange
-    "changepoint",       # CUSUM argmax level-shift, one exchange per key
-    "triangle_count",    # degree-oriented wedge join, O(E^1.5) bound
-    "mash_distance",     # KMV bottom-k sketch pairs, group-grain
-    "dbscan",            # density clustering on the pair-gen + CC core
-    "trend_fit",         # per-key OLS via co-moment partial aggs
-    "inverted_index",    # tokenize-once posting lists, honest cap
-    "key_skew",          # unpivot + value-grain top-N skew diagnostic
-    "welch_t",           # conditional-sum partial-agg t statistics
-    "translate_dna",     # codegen codon-map translation, zero shuffle
-    "seasonal_anomaly",  # hour-of-week baseline broadcast + row-local z
-    "sensor_pipeline",   # resample + interpolate fused in one plan
-    "rolling_corr",      # six co-moments on one RANGE frame
-    "cohort_retention",  # dedup'd user-period pairs, min-bucket cohorts
-    "cooccur_cosine",    # pair fan-out + broadcast degree normalization
-    "k_core",            # fixed-round peel, checkpointed frontier
-    "metagenome_qc",     # gates -> stats -> kmer Shannon, one plan
-    "expanding_distinct", # first-occurrence flag + cumsum windows
-    "doc_bigram_lm",     # bigram count tables joined at position grain
-    "event_paths",       # n-1 leads on one window sort, path-grid agg
-    "geo_clusters",      # binned geo pairs -> min-label CC
-    "ab_test",           # pooled two-proportion z per group, one agg
-    "tfidf_doc_pairs",   # DF-pruned inverted-index all-pairs cosine
-    "shard_assign",      # HRW placement, row-local codegen argmax
-    "feature_hash",      # hashing-trick vectors, vocabulary-free
-    "cms_counts",        # deterministic mergeable count-min grid
-    "twap",              # interval-weighted mean, one exchange
-    "spearman",          # midrank windows + co-moment Pearson
-    "debruijn_stats",    # 4^k-bounded assembly-graph degree census
-    "minimizers",        # row-local winnowing sketch, zero shuffle
-    "debounce",          # lag-gap telemetry dedup, one exchange
-    "session_stats",     # sessionize -> bounce/duration summary
-    "class_tfidf",       # c-TF-IDF cluster naming, grid-grain aggs
-    "kl_divergence",     # per-class drift vs corpus blend
-    "nearest_station",   # broadcast-dim argmin spatial attach
-    "burstiness",        # inter-arrival co-moments, one exchange
-    "gini",              # rank window + co-moment agg per group
-    "benford",           # numeric-ladder digit audit, group x 9 agg
-    "simpson",           # 1 - sum(p^2), broadcast totals
-    "zipf_slope",        # vocab rank + co-moment OLS, metadata-scale
-    "oov_rate",          # md5 split + train-vocab equi join
-    "orf_count",         # regexp spans over codegen translation
-    "base_entropy",      # row-local 4-replace entropy, zero shuffle
-    "psi_drift",         # decile-bin PSI drift gate, two scans
-    "ks_test",           # tie-exact ECDF max-gap per feature
-    "js_divergence",     # pair-grain symmetric distribution distance
-    "kl_top_terms",      # drift-driver terms, bounded rank window
-    "vocab_growth",      # Heaps-law first-seen curve, one min agg
-    "rfm_segments",      # broadcast-threshold RFM quintile scoring
-    "ohlc_bars",         # struct-min/max downsampling, no sort windows
-    "gtdb_majority_vote",  # taxon-grain majority-vote aggregation
-    "storage_reclaim",   # rule-regex inventory scan + sample-grain existence join
-    "xlsx_roundtrip",    # S5 write->read xlsx leg + per-lang rollup
-    "sqlite_roundtrip",  # S10 write->read sqlite leg + per-lang rollup
-    "benchmark_ledger",  # path-parse -> newest-per-key -> sacct backfill
-    "checkout_delta",    # ledger status join + literal-timeline as-of versioning
-    "versions_ledger",   # S19: latest-wins rule ownership + snapshot churn
-    "pq_ann",            # PQ encode (codegen argmin) + broadcast ADC top-k
-    "ivfpq_ann",         # IVFADC: cell-pruned equi join + ADC ranking
-    "bpe_encode",        # frozen-tokenizer replace-chain, scan-stage
-    "semdedup",          # cell-scoped semantic dedup (SemDeDup shape)
-    "kmeans_lloyd",      # distributed Lloyd: literal assign + (cell,pos) avg
-    "bloom_novelty",     # word-packed bloom bitmap + broadcast probe
-    "ann_recall",        # recall@k eval: IVF partial probe vs brute truth
-    "hist_quantile",     # mergeable fixed-width histogram quantile sketch
-    "leakage_safe_split",  # cluster-grain split over the dup_clusters map
-    "quality_classifier",  # hashed-linear sigmoid scoring, pure projection
-    "minhash_incremental",  # new-batch bands vs persisted index + verify
-    "incremental_curation",  # bloom gate + band probe + verify, one plan
-    "mixture_plan",      # domain-grain agg + metadata-scale water-filling
-    "bm25_search",       # query-term-pruned tf shuffle + broadcast idf
-    "url_dedup",         # scan-stage URL canonicalization + one key agg
-    "domain_blocklist",  # literal suffix-match verdict, zero shuffle
-    "line_quality",      # row-local HOF line rules, zero shuffle
-    "rp_project",        # JL projection, literal matrix, zero shuffle
-    "web_curation",      # blocklist -> url dedup -> line quality, 1 plan
-    "phash_dedup",       # P5 decode + DCT phash + banded hamming join
-    "compaction_plan",   # exclusive-cumsum file binning, metadata scale
-    "afp_dedup",         # WAV decode + spectrogram phash + hamming join
-    "wordpiece_encode",  # Arrow greedy, per-task word cache, zero shuffle
-    "video_dedup",       # Y4M decode + frame phash + inverted-index join
-    "dataset_card",      # one-pass per-source release summary
-    # streaming_* rows are deliberately NOT benched: their wall-clock is
-    # availableNow micro-batch scheduling + checkpoint commits (fixed
-    # streaming overhead), not data-path throughput.
-]
-
-# The r1-r3 headline set (exactly BENCH_r03's 30 queries): kept as a
-# first-class cross-round comparable total while the full catalog grows.
-STABLE30_SET = {
-    "pricing_summary", "topk_revenue", "tpm", "top1_per_group",
-    "anvio_stacked", "subtree_rollup", "lca", "pivot_wider", "sessionize",
-    "windowed_counts", "exact_dedup", "minhash_dedup", "simhash_dedup",
-    "cosine_topk", "lsh_ann", "embedding_dups", "coverage_stats",
-    "kingdom_priority_lca", "multimodal_features", "text_quality",
-    "token_counts", "lang_id", "doc_fingerprint", "seqkit_stats", "ivf_ann",
-    "asof_join", "range_join", "hypertable_rollup", "vocab_topk",
-    "curation_pipeline",
-}
+# The benched queries, in catalog order, and the r1-r3 30-query subset that
+# is the cross-round comparable total: both come from each query's
+# ``@query(bench=...)`` tier in __spark_entry__.py.
+HEADLINE = [n for n, fn in entrymod.queries().items() if fn.bench]
+STABLE30_SET = {n for n, fn in entrymod.queries().items()
+                if fn.bench == "stable30"}
 
 
 def main() -> None:
@@ -268,10 +82,7 @@ def main() -> None:
     errors: dict[str, str] = {}
     extra_run_errors: dict[str, str] = {}
     for name in HEADLINE:
-        fn = qs.get(name)
-        if fn is None:
-            errors[name] = "missing from queries()"
-            continue
+        fn = qs[name]
         # stable30 rows additionally get runs 4-5: measured first-run
         # codegen/JIT inflation is 2-4x steady state, and under transient box
         # load even run 3 can still carry it (r10: lang_id bench'd 2.1 s
@@ -431,8 +242,9 @@ def main() -> None:
     included: dict[str, float] = {}
     for n in prio:
         included[n] = timings[n]
+        # worst-case width: the final elided count is at most len(timings)
         if len(json.dumps({**out, "queries": included,
-                           "queries_elided": 0})) > 1880:
+                           "queries_elided": len(timings)})) > 1880:
             del included[n]
             break
     out["queries"] = included

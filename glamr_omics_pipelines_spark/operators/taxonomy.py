@@ -33,6 +33,7 @@ Spark-first design:
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -59,7 +60,8 @@ def _est_plan_bytes(df: DataFrame) -> int:
     input estimates at ~2.8e16), and local relations report Long.Max —
     both classes of junk would mis-fire the gate, so only sane
     (< 2^61) leaf values are summed and unknown leaves count 0 (i.e. the
-    gate errs toward the locally-verified direct form)."""
+    gate errs toward the locally-verified direct form). A JVM-side failure
+    of the probe returns -1 (the direct form); any other error raises."""
     try:
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
         total = 0
@@ -68,7 +70,7 @@ def _est_plan_bytes(df: DataFrame) -> int:
             if 0 < sz < (1 << 61):
                 total += sz
         return total
-    except Exception:
+    except Py4JError:
         return -1
 
 

@@ -179,6 +179,24 @@ def test_lca_rank_proxy_gate_is_size_adaptive(spark):
     assert taxonomy._est_plan_bytes(df) < taxonomy._RANK_PROXY_MIN_BYTES
 
 
+def _probe_raising(exc):
+    """A DataFrame stand-in whose plan probe raises ``exc``."""
+    from types import SimpleNamespace
+
+    def query_execution():
+        raise exc
+    return SimpleNamespace(_jdf=SimpleNamespace(queryExecution=query_execution))
+
+
+def test_est_plan_bytes_maps_only_jvm_errors_to_unknown():
+    """A Py4J failure of the plan probe means "size unknown" (-1, so the
+    gate picks the direct form); a Python bug in the gate must raise."""
+    from py4j.protocol import Py4JError
+    assert taxonomy._est_plan_bytes(_probe_raising(Py4JError("gone"))) == -1
+    with pytest.raises(TypeError):
+        taxonomy._est_plan_bytes(_probe_raising(TypeError("bug")))
+
+
 def test_ncbi_majority_vote_reference_cases(spark):
     """The four documented cases of resolve_majority_vote
     (gtdb_to_ncbi_majority_vote.py:259-320), one cluster per case:
