@@ -10,7 +10,7 @@ Reference semantics:
   - weighted mean: ``sum(score*count)/sum(count)`` (code/ampliconTrunc.R:172-180)
 
 Spark-first: the group totals attach via a partial aggregate + broadcast
-join (_attach_group_sum), NOT a partition-only window. Spark 4 plans the
+join (_attach_group_sums), NOT a partition-only window. Spark 4 plans the
 window form as Exchange(sample) + Sort and lands every fact row on at most
 #groups partitions — a parallelism collapse whenever samples ≪ cores (the
 r11 plan audit caught exactly that on the 5-group bench queries). The
@@ -27,10 +27,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _attach_group_sum(df: DataFrame, term: Column, sample_cols: list[str],
-                      out: str) -> DataFrame:
-    """Attach sum(term) over the sample keys as column ``out`` via a
-    group-grain partial aggregate + null-safe equi join, NOT a window.
+def _attach_group_sums(df: DataFrame, sample_cols: list[str],
+                       **sums: Column) -> DataFrame:
+    """Attach sum(term) over the sample keys as column ``out`` for each
+    ``out=term`` via ONE group-grain partial aggregate + null-safe equi
+    join, NOT a window.
 
     A partition-only window forces ``Exchange hashpartitioning(sample) +
     Sort`` and lands EVERY fact row on at most #groups partitions — with a
@@ -40,23 +41,38 @@ def _attach_group_sum(df: DataFrame, term: Column, sample_cols: list[str],
     and re-attaches them with a broadcast join; the fact side is never
     exchanged. The shared
     upstream exchange is served to both branches by ReuseExchange.
-    eqNullSafe keeps the window's null-key semantics (nulls form a group)."""
+    eqNullSafe keeps the window's null-key semantics (nulls form a group).
+    Several totals share the one aggregate and the one broadcast."""
     # NOT persisted (r11 A/B): registering df here (upstream-once) measured
     # WORSE than letting both branches share exchanges lazily (tpm 1.79 vs
     # 2.26 min-of-5 interleaved) — the materialization barrier serializes
     # branches AQE otherwise overlaps.
-    tot = df.groupBy(*sample_cols).agg(F.sum(term).alias(out))
+    tot = df.groupBy(*sample_cols).agg(
+        *[F.sum(term).alias(out) for out, term in sums.items()])
     # Group-grain totals are sample-count rows (a few MB at any corpus
     # size for this family's sample/priority grains) — hint the broadcast
     # so the fact side is NEVER exchanged; without the hint the static
     # planner cannot size the aggregate and falls back to a sort-merge
     # join that shuffles the fact side.
     keyed = F.broadcast(tot.select(
-        *[F.col(c).alias(f"_gs_{c}") for c in sample_cols], out))
+        *[F.col(c).alias(f"_gs_{c}") for c in sample_cols], *sums))
     cond = functools.reduce(operator.and_, [
         F.col(c).eqNullSafe(F.col(f"_gs_{c}")) for c in sample_cols])
     return (df.join(keyed, cond, "left")
             .drop(*[f"_gs_{c}" for c in sample_cols]))
+
+
+def _rpkm(count: str, length: str, total: str) -> Column:
+    return F.try_divide(F.col(count) * F.lit(1e9),
+                        F.col(total) * F.col(length))
+
+
+def _rate(count: str, length: str) -> Column:
+    return F.try_divide(F.col(count), F.col(length))
+
+
+def _tpm(count: str, length: str, total: str) -> Column:
+    return F.try_divide(F.lit(1e6) * _rate(count, length), F.col(total))
 
 
 def rel_abund(df: DataFrame, value: str, sample_cols: list[str],
@@ -65,7 +81,7 @@ def rel_abund(df: DataFrame, value: str, sample_cols: list[str],
 
     try_divide: an all-zero group has total 0 — abundance is undefined
     there (null), not an ANSI DIVIDE_BY_ZERO that kills the whole job."""
-    return (_attach_group_sum(df, F.col(value), sample_cols, "_tot")
+    return (_attach_group_sums(df, sample_cols, _tot=F.col(value))
             .withColumn(out, F.try_divide(F.col(value), F.col("_tot")))
             .drop("_tot"))
 
@@ -74,9 +90,8 @@ def rpkm(df: DataFrame, count: str, length: str, sample_cols: list[str],
          out: str = "rpkm") -> DataFrame:
     """Reads-per-kilobase-per-million: n*1e9/(sample_total*len); null on
     an all-zero sample or a zero-length feature (try_divide)."""
-    return (_attach_group_sum(df, F.col(count), sample_cols, "_tot")
-            .withColumn(out, F.try_divide(F.col(count) * F.lit(1e9),
-                                          F.col("_tot") * F.col(length)))
+    return (_attach_group_sums(df, sample_cols, _tot=F.col(count))
+            .withColumn(out, _rpkm(count, length, "_tot"))
             .drop("_tot"))
 
 
@@ -89,10 +104,22 @@ def tpm(df: DataFrame, count: str, length: str, sample_cols: list[str],
     Degenerate groups (all-zero counts, zero lengths) yield null, never an
     ANSI divide error (try_divide).
     """
-    rate = F.try_divide(F.col(count), F.col(length))
-    return (_attach_group_sum(df, rate, sample_cols, "_tot")
-            .withColumn(out, F.try_divide(F.lit(1e6) * rate, F.col("_tot")))
+    return (_attach_group_sums(df, sample_cols, _tot=_rate(count, length))
+            .withColumn(out, _tpm(count, length, "_tot"))
             .drop("_tot"))
+
+
+def tpm_rpkm(df: DataFrame, count: str, length: str,
+             sample_cols: list[str]) -> DataFrame:
+    """``tpm`` then ``rpkm`` (columns ``tpm``, ``rpkm``, same values) from
+    ONE totals aggregate: sum(n/len) and sum(n) share the group-by and the
+    broadcast join that the two calls would each pay for."""
+    return (_attach_group_sums(df, sample_cols,
+                               _tot_rate=_rate(count, length),
+                               _tot=F.col(count))
+            .withColumn("tpm", _tpm(count, length, "_tot_rate"))
+            .withColumn("rpkm", _rpkm(count, length, "_tot"))
+            .drop("_tot_rate", "_tot"))
 
 
 def weighted_mean(value: str, weight: str) -> Column:

@@ -65,6 +65,12 @@ def cooccurrence_edges(df: DataFrame, group_col: str, item_col: str,
     # and for each join side. Same bytes cross the wire once either way;
     # three exchanges removed. Interleaved noop A/B at sf0.1 (2.39M edges,
     # min-of-6): 1.76 -> 1.04 s, values identical.
+    # Skew trade-off: exchanging on group ALONE puts a hot group's whole
+    # pre-distinct row set (duplicates included) on one partition, where
+    # the old (group, item) exchange spread it; max_group_size drops a
+    # mega-group only after the distinct, so it cannot relieve that task.
+    # The fallback today is AQE: skewJoin splits an oversized partition
+    # of the self-join below, but nothing splits the distinct's partition.
     d = df.select(group_col, item_col).repartition(F.col(group_col)).distinct()
     if max_group_size is not None:
         sizes = d.groupBy(group_col).agg(F.count(F.lit(1)).alias("_gs"))

@@ -91,7 +91,8 @@ def tpm_chain(read_mapping: DataFrame, uniref_lookup: DataFrame,
               uniref_index: DataFrame) -> DataFrame:
     """code/postgres_scripts/tpm.R:17-35 (J4 + A6): attach target length via
     the lookup→index chain (raw length is stored +2, postgres.Rmd:206-208),
-    then per-sample TPM + RPKM.
+    then per-sample TPM + RPKM. Both per-sample totals come from one
+    aggregate and one broadcast join (``abundance.tpm_rpkm``).
 
     Scale: lookup/index are the UniRef dimension (~400M rows at production
     scale) — bucket both by `id` and the fact by `target` instead of
@@ -101,8 +102,8 @@ def tpm_chain(read_mapping: DataFrame, uniref_lookup: DataFrame,
            .select(F.col("uniref100").alias("target"),
                    (F.col("length") - 2).alias("target_len")))
     with_len = read_mapping.join(F.broadcast(dim), "target")
-    out = abundance.tpm(with_len, "num_seqs_aligned", "target_len", ["sample"])
-    return abundance.rpkm(out, "num_seqs_aligned", "target_len", ["sample"])
+    return abundance.tpm_rpkm(with_len, "num_seqs_aligned", "target_len",
+                              ["sample"])
 
 
 def bin_summary(checkm: DataFrame, gtdb: DataFrame, drep: DataFrame) -> DataFrame:

@@ -15,7 +15,15 @@ index scan serves, postgres.Rmd:22-37). The listed values become a typed
 of a load: no key scan, no broadcast, no count. The new keys are the
 listing after the write minus the listing before it. Index drop/rebuild
 disappears entirely. A ledger records every load batch for audit
-(pypelib/post.py checkout-file analog).
+(pypelib/post.py checkout-file analog): each append and view refresh logs
+the rows it wrote as ``rows``, counted by an ``Observation`` on the write
+itself (0 on a no-op rerun), never by a second pass over the table.
+
+``read`` takes the table's schema (the pinned contract of a base table,
+the written frame's schema for a view): Spark then infers nothing from
+the files, so the read runs no job, and a partition key keeps its type
+instead of one guessed from its directory names (``"007"`` would read
+back as the int 7, a long ``tax_id`` as an int).
 
 Listing rules, mirroring how Spark names partition directories:
   - values are unescaped the way Spark escapes them (``%XX`` for ``:``,
@@ -36,9 +44,9 @@ import os
 import re
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructType
 
 DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
@@ -48,6 +56,13 @@ def _unescape(name: str) -> str:
     which writes each path-unsafe character as ``%`` plus two hex digits."""
     return re.sub(r"%([0-9A-Fa-f]{2})",
                   lambda m: chr(int(m.group(1), 16)), name)
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row count observed by the action that consumes it:
+    read ``obs.get["rows"]`` after the write, no extra job."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 class Warehouse:
@@ -65,15 +80,20 @@ class Warehouse:
     def exists(self, table: str) -> bool:
         return os.path.isdir(self.path(table))
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(table))
+    def read(self, spark: SparkSession, table: str,
+             schema: StructType) -> DataFrame:
+        """Read ``table`` as ``schema``: no schema-inference job, and the
+        partition key takes its type from ``schema``, never from its
+        directory names (a string key ``"007"`` stays ``"007"``)."""
+        return spark.read.schema(schema).parquet(self.path(table))
 
     def incremental_append(self, df: DataFrame, table: str, key: str) -> int:
         """Anti-join-then-append: load only rows whose ``key`` value is not
         yet present (postgres.Rmd:246-248 semantics). Returns #new keys.
 
-        One Spark job: the append itself. A rerun that brings no new key
-        runs that job over zero rows and writes no data file."""
+        One Spark job: the append itself, which also counts the rows it
+        writes into the ledger. A rerun that brings no new key runs that
+        job over zero rows and writes no data file."""
         before = self._listed_keys(table, key)
         fresh = df
         if before:
@@ -89,10 +109,12 @@ class Warehouse:
                     loaded = loaded | (col == "")
             # a null key is "not loaded" unless the default partition exists
             fresh = df.filter(~F.coalesce(loaded, F.lit(False)))
+        fresh, obs = _counted(fresh)
         (fresh.write.mode("append").partitionBy(key)
          .parquet(self.path(table)))
         new_keys = len(self._listed_keys(table, key) - before)
-        self._log(table=table, key=key, new_keys=new_keys)
+        self._log(table=table, key=key, new_keys=new_keys,
+                  rows=obs.get["rows"])
         return new_keys
 
     def _listed_keys(self, table: str, key: str) -> set[str | None]:
@@ -136,9 +158,11 @@ class Warehouse:
 
     def save_view(self, df: DataFrame, table: str) -> None:
         """Materialized-view analog: full rewrite of a derived table
-        (kofam_scan_signif_anvio MV refresh, postgres.Rmd:1456-1532)."""
+        (kofam_scan_signif_anvio MV refresh, postgres.Rmd:1456-1532).
+        The write counts its rows into the ledger."""
+        df, obs = _counted(df)
         df.write.mode("overwrite").parquet(self.path(table))
-        self._log(table=table, mode="refresh_view")
+        self._log(table=table, mode="refresh_view", rows=obs.get["rows"])
 
     def _log(self, **kw) -> None:
         kw["ts"] = time.time()

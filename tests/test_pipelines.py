@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from glamr_omics_pipelines_spark import fixtures
+from glamr_omics_pipelines_spark.operators import abundance
 from glamr_omics_pipelines_spark.pipelines import glamr
 
 
@@ -76,6 +77,39 @@ def test_tpm_chain_sums_to_1e6(spark):
     # length joined through the chain is the corrected (-2) one
     row = out.limit(1).collect()[0]
     assert row.target_len >= 90
+
+
+def test_tpm_chain_equals_tpm_then_rpkm(spark):
+    """The one-aggregate form gives exactly the values of abundance.tpm
+    followed by abundance.rpkm. Sample z has only zero counts and target
+    T0 has zero length (stored length 2): both give null tpm and rpkm.
+    Rates are dyadic, so sum(tpm) is exactly 1e6 in any summation order."""
+    mapping = spark.createDataFrame(
+        [("a", "T0", 3), ("a", "T1", 2), ("a", "T2", 1), ("a", "T3", 2),
+         ("b", "T1", 4), ("b", "T2", 12), ("z", "T1", 0), ("z", "T2", 0)],
+        ["sample", "target", "num_seqs_aligned"])
+    lookup = spark.createDataFrame(
+        [(i, f"T{i}") for i in range(4)], ["id", "uniref100"])
+    index = spark.createDataFrame(
+        [(0, 2), (1, 6), (2, 6), (3, 10)], ["id", "length"])
+    out = glamr.tpm_chain(mapping, lookup, index)
+    dim = (lookup.join(index, "id")
+           .select(F.col("uniref100").alias("target"),
+                   (F.col("length") - 2).alias("target_len")))
+    ref = abundance.rpkm(
+        abundance.tpm(mapping.join(dim, "target"), "num_seqs_aligned",
+                      "target_len", ["sample"]),
+        "num_seqs_aligned", "target_len", ["sample"])
+    assert out.columns == ref.columns
+    got = {(r.sample, r.target): (r.tpm, r.rpkm) for r in out.collect()}
+    want = {(r.sample, r.target): (r.tpm, r.rpkm) for r in ref.collect()}
+    assert got == want and len(got) == 8
+    assert got[("a", "T0")] == (None, None)
+    assert got[("z", "T1")] == got[("z", "T2")] == (None, None)
+    assert got[("a", "T1")][0] == 5e5
+    sums = {r.sample: r.s for r in
+            out.groupBy("sample").agg(F.sum("tpm").alias("s")).collect()}
+    assert sums == {"a": 1e6, "b": 1e6, "z": None}
 
 
 def test_bin_summary_view(spark, contigs):

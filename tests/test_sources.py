@@ -148,7 +148,7 @@ def test_warehouse_incremental_append_is_idempotent(spark, tmp_path):
     # re-load same samples + one new -> only the new one lands
     df2 = spark.createDataFrame([("s1", 99), ("s3", 3)], ["sample", "v"])
     assert wh.incremental_append(df2, "t", "sample") == 1
-    out = wh.read(spark, "t")
+    out = wh.read(spark, "t", df1.schema)
     assert out.count() == 3
     assert out.filter(F.col("sample") == "s1").collect()[0]["v"] == 1  # not 99
 

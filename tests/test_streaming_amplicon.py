@@ -6,6 +6,7 @@ import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from glamr_omics_pipelines_spark.operators import amplicon
 from glamr_omics_pipelines_spark.pipelines import glamr
@@ -182,6 +183,8 @@ def test_stream_foreachbatch_warehouse_merge(spark, tmp_path):
     wh = Warehouse(str(tmp_path / "wh"))
     src = tmp_path / "stream_in"
     src.mkdir()
+    schema = StructType([StructField("sample", StringType()),
+                         StructField("reads", LongType())])
 
     def write_file(name, rows):
         import csv
@@ -192,7 +195,7 @@ def test_stream_foreachbatch_warehouse_merge(spark, tmp_path):
 
     def run_once():
         stream = (spark.readStream.format("csv")
-                  .schema("sample string, reads long")
+                  .schema(schema)
                   .option("sep", "\t").option("header", True)
                   .load(str(src)))
         q = (stream.writeStream
@@ -208,7 +211,7 @@ def test_stream_foreachbatch_warehouse_merge(spark, tmp_path):
     write_file("b.csv", [("s2", 999), ("s3", 300)])
     run_once()
     got = {r.sample: r.reads
-           for r in wh.read(spark, "read_count").collect()}
+           for r in wh.read(spark, "read_count", schema).collect()}
     # s2's re-delivery was anti-joined away: first-load value retained
     assert got == {"s1": 100, "s2": 200, "s3": 300}
 

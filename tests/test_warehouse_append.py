@@ -1,8 +1,10 @@
 """Warehouse.incremental_append on small local frames: the listing
 anti-join across load -> incremental -> no-op for string, integer and
-path-escaped keys, the null key, files written on a no-op, and the one
-Spark job an append costs."""
+path-escaped keys, the null key, files written on a no-op, the one
+Spark job an append costs, the rows each write logs, and the schema-given
+read that keeps the key's type and runs no job."""
 
+import json
 import os
 
 import pytest
@@ -13,15 +15,34 @@ from pyspark.sql.types import (IntegerType, StringType, StructField,
 from glamr_omics_pipelines_spark.sources.warehouse import Warehouse
 
 
+def _schema(key_type):
+    return StructType([StructField("k", key_type),
+                       StructField("v", IntegerType())])
+
+
 def _frame(spark, key_type, rows):
-    schema = StructType([StructField("k", key_type),
-                         StructField("v", IntegerType())])
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(rows, _schema(key_type))
 
 
 def _data_files(path):
     return sorted(os.path.join(d, f) for d, _, files in os.walk(path)
                   for f in files if f.endswith(".parquet"))
+
+
+def _jobs(spark, name, fn):
+    """Run ``fn`` under its own job group; return its Spark job count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def _ledger(wh):
+    with open(wh.ledger_path) as fh:
+        return [json.loads(line) for line in fh]
 
 
 @pytest.mark.parametrize("key_type,keys", [
@@ -40,7 +61,7 @@ def test_append_load_incremental_noop(spark, tmp_path, key_type, keys):
         _frame(spark, key_type, [(b, 99), (c, 4), (c, 5)]), "t", "k") == 1
     assert wh.incremental_append(
         _frame(spark, key_type, [(a, 99), (b, 99), (c, 99)]), "t", "k") == 0
-    out = wh.read(spark, "t")
+    out = wh.read(spark, "t", _schema(key_type))
     assert out.count() == 5
     assert sorted((r["k"], r["v"]) for r in out.collect()) == sorted(
         [(a, 1), (a, 2), (b, 3), (c, 4), (c, 5)])
@@ -55,7 +76,7 @@ def test_append_null_key_is_idempotent(spark, tmp_path):
     # Spark writes the empty string to the null key's partition too
     assert wh.incremental_append(
         _frame(spark, StringType(), [("", 3)]), "t", "k") == 0
-    assert wh.read(spark, "t").count() == 2
+    assert wh.read(spark, "t", df.schema).count() == 2
 
 
 def test_append_null_int_key_is_idempotent(spark, tmp_path):
@@ -66,7 +87,8 @@ def test_append_null_int_key_is_idempotent(spark, tmp_path):
     assert wh.incremental_append(df, "t", "k") == 2
     assert wh.incremental_append(
         _frame(spark, IntegerType(), [(None, 3), (1, 4), (2, 5)]), "t", "k") == 1
-    assert sorted(r["v"] for r in wh.read(spark, "t").collect()) == [1, 2, 5]
+    assert sorted(r["v"] for r in wh.read(spark, "t", df.schema).collect()) \
+        == [1, 2, 5]
 
 
 def test_append_noop_writes_no_data_file(spark, tmp_path):
@@ -86,11 +108,44 @@ def test_append_runs_one_spark_job(spark, tmp_path, second):
     wh.incremental_append(_frame(spark, StringType(), [("s1", 1), ("s2", 2)]),
                           "t", "k")
     df = _frame(spark, StringType(), second)
-    sc = spark.sparkContext
     group = f"append-{tmp_path.name}"
-    sc.setJobGroup(group, "second incremental_append")
-    try:
-        wh.incremental_append(df, "t", "k")
-    finally:
-        sc._jsc.clearJobGroup()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert _jobs(spark, group,
+                 lambda: wh.incremental_append(df, "t", "k")) == 1
+    # the same job counted the rows it wrote (s1 is filtered out)
+    assert _ledger(wh)[-1]["rows"] == len(second) - 1
+
+
+def test_string_key_round_trips_as_string(spark, tmp_path):
+    """Inferred from the directory names, ``k=007`` would read back as the
+    int 7; the given schema keeps the key a string."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    df = _frame(spark, StringType(), [("007", 1), ("010", 2)])
+    wh.incremental_append(df, "t", "k")
+    out = wh.read(spark, "t", df.schema)
+    assert out.schema["k"].dataType == StringType()
+    assert sorted(r["k"] for r in out.collect()) == ["007", "010"]
+
+
+def test_schema_read_runs_no_spark_job(spark, tmp_path):
+    wh = Warehouse(str(tmp_path / "wh"))
+    df = _frame(spark, StringType(), [("s1", 1), ("s2", 2), ("s3", 3)])
+    wh.incremental_append(df, "t", "k")
+    group = f"read-{tmp_path.name}"
+    assert _jobs(spark, group, lambda: wh.read(spark, "t", df.schema)
+                 .schema) == 0
+
+
+def test_ledger_rows_are_rows_written(spark, tmp_path):
+    """Each write's observed row count lands in the ledger as ``rows``:
+    N on a load, 0 on a no-op rerun, the new rows on an incremental
+    load and every row on a view refresh."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    first = _frame(spark, StringType(), [("s1", 1), ("s1", 2), ("s2", 3)])
+    wh.incremental_append(first, "t", "k")
+    wh.incremental_append(first, "t", "k")
+    wh.incremental_append(
+        _frame(spark, StringType(), [("s2", 9), ("s3", 4), ("s3", 5)]),
+        "t", "k")
+    wh.save_view(wh.read(spark, "t", first.schema), "v")
+    assert [r["rows"] for r in _ledger(wh)] == [3, 0, 2, 5]
+    assert [r.get("new_keys") for r in _ledger(wh)] == [2, 0, 1, None]
