@@ -113,16 +113,22 @@ def cmd_query(args) -> int:
     qs = mod.queries()
     if args.name not in qs:
         raise SystemExit(f"unknown query {args.name!r}; see list-queries")
+    from glamr_omics_pipelines_spark.operators import _cache, _ckpt
     spark = _spark(args)
-    df = qs[args.name](spark, args.sf_dir)
-    if args.out:
-        df.write.mode("overwrite").parquet(args.out)
-        print(json.dumps({"query": args.name, "out": args.out}))
-    else:
-        df.show(args.limit, truncate=False)
-    # some operators persist() intermediates their lazy API cannot unpersist;
-    # drop them so repeated CLI queries in one session don't accumulate
-    spark.catalog.clearCache()
+    try:
+        df = qs[args.name](spark, args.sf_dir)
+        if args.out:
+            df.write.mode("overwrite").parquet(args.out)
+            print(json.dumps({"query": args.name, "out": args.out}))
+        else:
+            df.show(args.limit, truncate=False)
+    finally:
+        # operators persist() and localCheckpoint() intermediates their lazy
+        # API cannot release; free them on every path so repeated CLI
+        # queries in one session don't accumulate blocks or handles
+        spark.catalog.clearCache()
+        _ckpt.release_checkpoints()
+        _cache.release_caches()
     return 0
 
 

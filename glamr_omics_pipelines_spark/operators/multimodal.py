@@ -23,12 +23,31 @@ installed (same 601-2 fixed-point luma as PIL's convert("L")), so a blob
 decodes identically in every environment. The Spark-side plumbing
 (schema, batch iteration, partitioning, UDF signature) is identical on
 both paths and tested on both.
+
+One kernel contract (:func:`_map_blobs`): every operator below reads
+(media_id, content) and supplies only a per-blob ``decode(bytes) -> rows``
+(one row per blob for the hash/feature/resize kernels, one per sampled
+frame or window for the video/audio kernels). A bad blob never kills the
+task; each output row carries one status:
+
+- ``null_content``: the content is null (decode is not called);
+- ``empty_content``: decode returned no rows (zero-length audio, a
+  stub video shorter than one window, a video with no frames);
+- ``decode_error``: decode raised (corrupt, truncated or foreign bytes);
+- ``ok``: one per decoded row.
+
+A non-ok blob yields exactly one placeholder row. ``NotImplementedError``
+is not a row status: a blob that needs PIL while PIL is absent fails the
+task with the install hint.
 """
 
 from __future__ import annotations
 
+import functools
+import io
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -79,7 +98,6 @@ def _import_pil_image():
 # stdlib decoder or PIL's convert("L"), so results never depend on which
 # environment decoded it.
 def _rgb_to_gray(rgb):
-    import numpy as np
     r = rgb[..., 0].astype("u4")
     g = rgb[..., 1].astype("u4")
     b = rgb[..., 2].astype("u4")
@@ -91,7 +109,6 @@ def _parse_netpbm(buf: bytes):
     reduced via the 601-2 luma). Returns None when the magic isn't netpbm
     (caller falls through to PIL); raises on a malformed/truncated raster
     (caller maps that to a row-level decode_error)."""
-    import numpy as np
     if buf[:2] not in (b"P5", b"P6"):
         return None
     pos, fields = 2, []
@@ -149,7 +166,6 @@ def _parse_bmp(buf: bytes):
     4-byte row padding and both bottom-up (height > 0) and top-down
     (height < 0) row orders. Returns None when the magic isn't 'BM';
     raises on compressed / palettized / truncated files."""
-    import numpy as np
     if buf[:2] != b"BM":
         return None
     if len(buf) < 54:
@@ -181,7 +197,6 @@ def _unfilter_png_row(ftype: int, row, prev, ch: int):
     None/Up/Sub are vectorized (Up: uint8 wrap-add; Sub: per-lane cumsum
     mod 256); Average/Paeth carry a non-linear left-pixel dependence and
     run as an int loop over the row."""
-    import numpy as np
     if ftype == 0:
         return row
     if ftype == 2:
@@ -228,7 +243,7 @@ _PNG_DEPTHS = {0: {1, 2, 4, 8, 16}, 2: {8, 16}, 3: {1, 2, 4, 8},
                4: {8, 16}, 6: {8, 16}}
 
 
-def _png_subimage(raw, off: int, w: int, h: int, depth: int, ch: int, np):
+def _png_subimage(raw, off: int, w: int, h: int, depth: int, ch: int):
     """Unfilter one (sub)image's scanlines starting at ``raw[off]``;
     returns (uint16 sample array (h, w, ch), next offset). Filters
     operate byte-wise with the spec's bpp (bytes per complete pixel,
@@ -276,7 +291,6 @@ def _parse_png(buf: bytes):
     out-of-range palette indices)."""
     import struct
     import zlib
-    import numpy as np
     if buf[:8] != b"\x89PNG\r\n\x1a\n":
         return None
     pos, width, idat, plte = 8, None, [], None
@@ -320,8 +334,7 @@ def _parse_png(buf: bytes):
     except zlib.error as exc:
         raise ValueError(f"PNG inflate failed: {exc}") from None
     if interlace == 0:
-        samples, off = _png_subimage(raw, 0, width, height, bit_depth,
-                                     ch, np)
+        samples, off = _png_subimage(raw, 0, width, height, bit_depth, ch)
     else:                             # Adam7: scatter each pass's grid
         # validate the EXACT interlaced raster length BEFORE allocating
         # the sample grid: a hostile IHDR with dimensions near 2^32 must
@@ -341,7 +354,7 @@ def _parse_png(buf: bytes):
         for x0, y0, xs, ys in _ADAM7:
             pw = (width - x0 + xs - 1) // xs
             ph = (height - y0 + ys - 1) // ys
-            sub, off = _png_subimage(raw, off, pw, ph, bit_depth, ch, np)
+            sub, off = _png_subimage(raw, off, pw, ph, bit_depth, ch)
             if sub is not None:
                 samples[y0::ys, x0::xs] = sub
     if off != len(raw):
@@ -427,7 +440,6 @@ def _parse_gif(buf: bytes):
     first frame's sub-rectangle take the background color. Returns None
     when the magic isn't GIF; raises ValueError on corrupt files."""
     import struct
-    import numpy as np
     if buf[:6] not in (b"GIF87a", b"GIF89a"):
         return None
     if len(buf) < 13:
@@ -525,38 +537,36 @@ def _parse_gif(buf: bytes):
     raise ValueError("GIF has no image data")
 
 
-def _decode_image_gray(buf: bytes):
-    """Dependency-free decode of the formats the stdlib+numpy parsers
-    handle — netpbm P5/P6, uncompressed BMP, every valid PNG (all depths,
-    palette, Adam7), GIF (LZW, first frame), and baseline/progressive
-    JPEG (luma plane; operators/_jpeg.py) — to a grayscale uint8 array. Returns None for
-    any other format (the caller falls through to PIL, now needed only
-    for arithmetic/lossless/12-bit JPEG). Tried
-    FIRST even when PIL is installed, so a given blob decodes identically
-    in every environment."""
+def _decode_image_gray(buf: bytes, size: tuple[int, int] | None = None):
+    """Image blob → grayscale uint8 array, resampled to ``size`` =
+    (width, height) when given. The dependency-free parsers run FIRST in
+    every environment — netpbm P5/P6, uncompressed BMP, every valid PNG
+    (all depths, palette, Adam7), GIF (LZW, first frame) and
+    baseline/progressive JPEG (luma plane; operators/_jpeg.py) — so a given
+    blob decodes identically everywhere. Any other format falls through to
+    PIL's convert("L") (``NotImplementedError`` with an install hint when
+    PIL is absent); each path resamples with its own bilinear: the stdlib
+    array with :func:`_bilinear_resize`, a PIL image with PIL's BILINEAR.
+    Raises on a malformed blob of a recognized format."""
     from glamr_omics_pipelines_spark.operators._jpeg import decode_jpeg_luma
-    arr = _parse_netpbm(buf)
-    if arr is None:
-        arr = _parse_bmp(buf)
-    if arr is None:
-        arr = _parse_png(buf)
-    if arr is None:
-        arr = _parse_gif(buf)
-    if arr is None:
-        arr = decode_jpeg_luma(buf)
-    return arr
+    for parse in (_parse_netpbm, _parse_bmp, _parse_png, _parse_gif,
+                  decode_jpeg_luma):
+        arr = parse(buf)
+        if arr is not None:
+            return arr if size is None else _bilinear_resize(arr, *size)
+    Image = _import_pil_image()
+    img = Image.open(io.BytesIO(buf)).convert("L")
+    if size is not None:
+        img = img.resize(size, Image.BILINEAR)
+    return np.asarray(img, dtype=np.uint8)
 
 
-import functools as _functools
-
-
-@_functools.lru_cache(maxsize=64)
+@functools.lru_cache(maxsize=64)
 def _resize_grid(sh: int, sw: int, width: int, height: int):
     """Memoized pixel-center sample grid for :func:`_bilinear_resize`:
     (y0, y1, x0, x1, fy, fx), all read-only. Grid construction is pure
     shape arithmetic that the hash kernels were redoing per FRAME
     (guide §4.5)."""
-    import numpy as np
     x = (np.arange(width) + 0.5) * (sw / width) - 0.5
     y = (np.arange(height) + 0.5) * (sh / height) - 0.5
     x0 = np.clip(np.floor(x).astype("i8"), 0, sw - 1)
@@ -576,7 +586,6 @@ def _bilinear_resize(arr, width: int, height: int):
     uint8 array (the textbook sample-grid form; NOT PIL's antialiased
     BILINEAR, which widens its kernel when downscaling — this path is the
     stdlib decoder's companion and defines its own contract)."""
-    import numpy as np
     sh, sw = arr.shape
     y0, y1, x0, x1, fy, fx = _resize_grid(sh, sw, width, height)
     a = arr[np.ix_(y0, x0)].astype("f8")
@@ -600,7 +609,6 @@ def _fold_histogram(hist, feature_dim: int) -> list[float]:
     (~60% of its wall at sf0.1). Values are bit-identical to the loop form:
     every addend is a small non-negative integer, so both sums are exact in
     float64 regardless of association order."""
-    import numpy as np
     a = np.frombuffer(hist, dtype=np.uint8).astype(np.int64) \
         if isinstance(hist, (bytes, bytearray, memoryview)) \
         else np.asarray(hist, dtype=np.int64)
@@ -613,49 +621,50 @@ def _fold_histogram(hist, feature_dim: int) -> list[float]:
     return [v / total for v in acc.tolist()]
 
 
-def _decode_image_batch(pdf: pd.DataFrame, feature_dim: int, stub: bool) -> pd.DataFrame:
-    """Per-batch decode kernel. STUB: features = normalized byte histogram
-    folded to feature_dim (deterministic in content). REAL (stub=False):
-    grayscale pixel histogram folded the same way — netpbm/BMP decode via
-    the dependency-free numpy parser (always available, tried first), other
-    formats via PIL when installed (``NotImplementedError`` with an install
-    hint when a blob needs PIL and PIL is absent). Malformed blobs of a
-    recognized format flag decode_error instead of failing the task."""
-    import io
+def _map_blobs(df: DataFrame, schema: StructType, decode, placeholder: tuple,
+               finish: dict | None = None) -> DataFrame:
+    """The one blob-kernel contract (module docstring): an Arrow-batched
+    ``mapInPandas`` over ``df``'s (media_id, content) emitting ``schema``
+    = (media_id, *row columns, status column).
 
-    import numpy as np
-    feats, oks = [], []
-    for buf in pdf["content"]:
-        if buf is None:
-            feats.append(None)
-            oks.append("null_content")
-            continue
-        if stub:
-            feats.append(_fold_histogram(buf, feature_dim))
-            oks.append("ok")
-            continue
-        b = bytes(buf)
-        try:
-            arr = _decode_image_gray(b)
-        except Exception:  # recognized magic, malformed body: row-level flag
-            feats.append(None)
-            oks.append("decode_error")
-            continue
-        if arr is not None:
-            hist = np.bincount(arr.ravel(), minlength=256).tolist()
-        else:
-            Image = _import_pil_image()   # raises NotImplementedError if absent
-            try:
-                img = Image.open(io.BytesIO(b))
-                hist = img.convert("L").histogram()
-            except Exception:  # undecodable blob: row-level flag, not task death
-                feats.append(None)
-                oks.append("decode_error")
-                continue
-        feats.append(_fold_histogram(hist, feature_dim))
-        oks.append("ok")
-    return pd.DataFrame({"media_id": pdf["media_id"],
-                         "feature": feats, "decode_ok": oks})
+    ``decode(bytes) -> rows`` turns one non-null blob into the list of its
+    output rows, each a tuple of the row columns. This function owns the
+    rest: the batch loop, the four statuses, ``placeholder`` as the one row
+    of a non-ok blob, and the output frame. ``finish`` maps a row column to a
+    batch-wide stage over that column's whole list (the pHash stage, which
+    hashes every decoded array of the Arrow batch at once — §4.2). A
+    ``LongType`` column whose placeholder is null is emitted as pandas
+    ``Int64``, so a 64-bit hash never passes through float64."""
+    names = schema.names[1:-1]
+    nullable_long = [n for n, v in zip(names, placeholder)
+                     if v is None and schema[n].dataType == LongType()]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, rows, statuses = [], [], []
+            for mid, buf in zip(pdf["media_id"], pdf["content"]):
+                got, status = [], "null_content"
+                if buf is not None:
+                    try:
+                        got = decode(bytes(buf))
+                        status = "ok" if got else "empty_content"
+                    except NotImplementedError:  # needs PIL, PIL absent
+                        raise
+                    except Exception:
+                        got, status = [], "decode_error"
+                for row in got or [placeholder]:
+                    ids.append(mid)
+                    rows.append(row)
+                    statuses.append(status)
+            cols = {n: [r[j] for r in rows] for j, n in enumerate(names)}
+            for n, stage in (finish or {}).items():
+                cols[n] = stage(cols[n])
+            for n in nullable_long:
+                cols[n] = pd.array(cols[n], dtype="Int64")
+            yield pd.DataFrame({"media_id": ids, **cols,
+                                schema.names[-1]: statuses})
+
+    return df.select("media_id", "content").mapInPandas(run, schema)
 
 
 PHASH_SCHEMA = StructType([
@@ -665,16 +674,12 @@ PHASH_SCHEMA = StructType([
 ])
 
 
-import functools
-
-
 @functools.lru_cache(maxsize=8)
 def _dct2_matrix(n: int):
     """Orthonormal DCT-II basis matrix (row 0 scaled by 1/√2). Memoized —
     the hash kernels call this once per FRAME (guide §4.5: heavyweight
     init once per task, not per row); the cached array is marked
     read-only so no caller can corrupt the shared instance."""
-    import numpy as np
     k = np.arange(n).reshape(-1, 1)
     i = np.arange(n).reshape(1, -1)
     m = np.sqrt(2.0 / n) * np.cos(np.pi * (2 * i + 1) * k / (2 * n))
@@ -688,7 +693,6 @@ def _pack_sign_bits(bits) -> int:
     replacement for the former 64-iteration Python shift loop: packbits
     puts bits[0] in the MSB of byte 0, so the big-endian int64 view IS the
     loop's result, sign bit included."""
-    import numpy as np
     return int(np.frombuffer(np.packbits(bits).tobytes(), dtype=">i8")[0])
 
 
@@ -700,7 +704,6 @@ def _phash_of_gray(arr, hash_size: int = 8, img_size: int = 32) -> int:
     brightness shift — which only moves DC — cannot flip a single bit).
     Packed row-major into a signed 64-bit int (two's complement, the
     simhash packing convention)."""
-    import numpy as np
     a = _bilinear_resize(arr, img_size, img_size).astype(np.float64)
     m = _dct2_matrix(img_size)
     c = (m @ a @ m.T)[:hash_size, :hash_size].ravel()
@@ -718,7 +721,6 @@ def _phash_of_gray_many(arrs, hash_size: int = 8, img_size: int = 32):
     and median/packbits vectorize exactly. The win is Python/numpy
     dispatch amortization over the batch (guide §4.2): per-frame grid and
     basis construction disappear and the bit packing is one call."""
-    import numpy as np
     if not arrs:
         return []
     if len(arrs) > 64:
@@ -773,54 +775,14 @@ def _phash_scatter(indexed_arrs):
     return out
 
 
-def _phash_batch(pdf: pd.DataFrame, stub: bool) -> pd.DataFrame:
-    """Per-batch pHash kernel. STUB: content bytes cycled into a 32×32
-    uint8 array (no decode — schema/DCT/packing still real). REAL: the
-    dependency-free grayscale decode (_decode_image_gray; PIL fallback),
-    same row-level decode_error contract as _decode_image_batch."""
-    import io
-
-    import numpy as np
-    n = len(pdf["content"])
-    hashes: list = [None] * n
-    oks: list = [None] * n
-    pending = []  # (row position, decoded gray array)
-    for i, buf in enumerate(pdf["content"]):
-        if buf is None:
-            oks[i] = "null_content"
-            continue
-        b = bytes(buf)
-        arr = None
-        if stub:
-            if not b:
-                oks[i] = "decode_error"
-                continue
-            flat = np.frombuffer(b, dtype=np.uint8)
-            reps = -(-1024 // len(flat))
-            arr = np.tile(flat, reps)[:1024].reshape(32, 32)
-        else:
-            try:
-                arr = _decode_image_gray(b)
-            except Exception:
-                oks[i] = "decode_error"
-                continue
-            if arr is None:
-                Image = _import_pil_image()
-                try:
-                    img = Image.open(io.BytesIO(b))
-                    arr = np.asarray(img.convert("L"), dtype=np.uint8)
-                except Exception:
-                    oks[i] = "decode_error"
-                    continue
-        oks[i] = "ok"
-        pending.append((i, arr))
-    # hash all decoded rows in shape-grouped batches (bit-identical to the
-    # per-row kernel; the batching amortizes the numpy dispatch — §4.2)
-    for pos, h in _phash_scatter(pending).items():
-        hashes[pos] = h
-    return pd.DataFrame({"media_id": pdf["media_id"],
-                         "phash": pd.array(hashes, dtype="Int64"),
-                         "decode_ok": oks})
+def _phash_column(arrs: list) -> list:
+    """The hash kernels' finishing stage: a batch's column of grayscale
+    arrays (None on non-ok rows) → their pHashes, hashed batch-wide in
+    shape-grouped :func:`_phash_of_gray_many` calls (bit-identical to the
+    per-row kernel; the batching amortizes the numpy dispatch — §4.2)."""
+    hashes = _phash_scatter([(i, a) for i, a in enumerate(arrs)
+                             if a is not None])
+    return [hashes.get(i) for i in range(len(arrs))]
 
 
 AFP_SCHEMA = StructType([
@@ -850,9 +812,8 @@ def _afp_matrix(samples, frame: int = 1024, hop: int = 512,
                 bands: int = 16):
     """The spectrogram-normalization half of :func:`_afp_of_samples`,
     returning the uint8 log-energy matrix the pHash kernel consumes —
-    split out so :func:`_afp_batch` can batch the hash stage across a
+    split out so :func:`afp_signatures` can batch the hash stage across a
     whole Arrow batch (§4.2)."""
-    import numpy as np
     x = np.asarray(samples, dtype=np.float64)
     if len(x) < frame:
         raise ValueError("clip shorter than one analysis frame")
@@ -876,53 +837,28 @@ def _afp_matrix(samples, frame: int = 1024, hop: int = 512,
     return m.astype(np.uint8)
 
 
-def _afp_batch(pdf: pd.DataFrame, stub: bool) -> pd.DataFrame:
-    """Per-batch audio-fingerprint kernel. STUB: raw bytes re-centered as
-    crude 8-bit samples (no decode — framing/FFT/hash still real). REAL:
-    _decode_wav_samples (PCM 8/16/24/32, G.711, IMA ADPCM; stereo
-    averaged), same row-level decode_error contract as the image path."""
-    import numpy as np
-    n = len(pdf["content"])
-    out: list = [None] * n
-    oks: list = [None] * n
-    pending = []  # (row position, normalized spectrogram matrix)
-    for i, buf in enumerate(pdf["content"]):
-        if buf is None:
-            oks[i] = "null_content"
-            continue
-        b = bytes(buf)
-        try:
-            if stub:
-                samples = np.frombuffer(b, dtype=np.uint8).astype(
-                    np.float64) - 128.0
-            else:
-                samples = _decode_wav_samples(b)
-                if samples is None:
-                    raise ValueError("not a decodable WAV")
-            pending.append((i, _afp_matrix(samples)))
-            oks[i] = "ok"
-        except Exception:
-            oks[i] = "decode_error"
-    # hash stage batched across the Arrow batch (bit-identical — §4.2)
-    for pos, h in _phash_scatter(pending).items():
-        out[pos] = h
-    return pd.DataFrame({"media_id": pdf["media_id"],
-                         "afp": pd.array(out, dtype="Int64"),
-                         "decode_ok": oks})
-
-
 def afp_signatures(df: DataFrame, stub: bool = True) -> DataFrame:
     """binary audio content → 64-bit gain-invariant fingerprint via
     Arrow-batched mapInPandas — the audio member of the signature-dedup
     triangle (text simhash / image phash / audio afp); near-dup pairs
     come from dedup.hamming_candidates' banded equi join. Scale shape:
     hashing is scan-stage; only the 8-byte fingerprint reaches a
-    shuffle."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _afp_batch(pdf, stub)
+    shuffle.
 
-    return df.select("media_id", "content").mapInPandas(run, AFP_SCHEMA)
+    STUB kernel: raw bytes re-centered as crude 8-bit samples (no decode —
+    framing/FFT/hash still real). REAL kernel (``stub=False``):
+    :func:`_decode_wav_samples` (PCM 8/16/24/32, G.711, IMA ADPCM; stereo
+    averaged). A clip shorter than one analysis frame flags
+    ``decode_error``."""
+    def decode(b: bytes):
+        if stub:
+            samples = np.frombuffer(b, np.uint8).astype(np.float64) - 128.0
+        else:
+            samples = _decode_wav_samples(b)
+        return [(_afp_matrix(samples),)]
+
+    return _map_blobs(df, AFP_SCHEMA, decode, (None,),
+                      {"afp": _phash_column})
 
 
 def phash_images(df: DataFrame, stub: bool = True) -> DataFrame:
@@ -937,28 +873,46 @@ def phash_images(df: DataFrame, stub: bool = True) -> DataFrame:
     Scale shape: hashing is scan-stage (batches stream through each task);
     the 8-byte hash is all that ever reaches a shuffle — at 100 TB of
     images the dedup runs on ~0.1 GB per billion images of signature data.
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _phash_batch(pdf, stub)
 
-    return df.select("media_id", "content").mapInPandas(run, PHASH_SCHEMA)
+    STUB kernel: content bytes cycled into a 32×32 uint8 array (no decode —
+    schema/DCT/packing still real; empty content flags ``decode_error``).
+    REAL kernel (``stub=False``): :func:`_decode_image_gray`.
+    """
+    def decode(b: bytes):
+        if not stub:
+            return [(_decode_image_gray(b),)]
+        if not b:
+            raise ValueError("no bytes to cycle into a stub image")
+        flat = np.frombuffer(b, dtype=np.uint8)
+        reps = -(-1024 // len(flat))
+        return [(np.tile(flat, reps)[:1024].reshape(32, 32),)]
+
+    return _map_blobs(df, PHASH_SCHEMA, decode, (None,),
+                      {"phash": _phash_column})
 
 
 def extract_image_features(df: DataFrame, feature_dim: int = 16,
                            stub: bool = True) -> DataFrame:
     """binary content → feature vector via Arrow-batched mapInPandas.
 
+    STUB kernel: the normalized byte histogram folded to ``feature_dim``
+    (deterministic in content; empty content is ``ok``). REAL kernel
+    (``stub=False``): the grayscale pixel histogram of
+    :func:`_decode_image_gray`, folded the same way.
+
     Scale shape: batches stream through each task (constant memory in rows ×
     batch size, never whole-partition materialization); repartition upstream
     by media_id range if individual blobs are large so tasks stay balanced.
     """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_image_batch(pdf, feature_dim, stub)
+    if feature_dim < 1:
+        raise ValueError("extract_image_features: feature_dim must be >= 1")
 
-    cols = df.select("media_id", "content")
-    return cols.mapInPandas(run, IMAGE_FEATURES_SCHEMA)
+    def decode(b: bytes):
+        hist = b if stub else np.bincount(_decode_image_gray(b).ravel(),
+                                          minlength=256)
+        return [(_fold_histogram(hist, feature_dim),)]
+
+    return _map_blobs(df, IMAGE_FEATURES_SCHEMA, decode, (None,))
 
 
 RESIZED_SCHEMA = StructType([
@@ -977,56 +931,24 @@ def resize_images(df: DataFrame, width: int, height: int,
     STUB kernel: emits a deterministic content transform (byte stream
     truncated/cycled to width*height bytes) so schema, batch iteration and
     output sizing are real. REAL kernel (stub=False): decode + bilinear
-    resize to (width, height), grayscale raw bytes out — netpbm/BMP via the
-    dependency-free numpy parser + pixel-center bilinear (tried first, no
-    third-party codec needed), other formats via PIL's convert("L") +
-    BILINEAR when installed (NotImplementedError with an install hint when
-    a blob needs PIL and PIL is absent). Same constant-memory batch shape
-    as extract_image_features.
+    resize to (width, height), grayscale raw bytes out, through
+    :func:`_decode_image_gray` — the dependency-free parsers +
+    pixel-center bilinear (tried first, no third-party codec needed),
+    other formats via PIL's convert("L") + BILINEAR. Same constant-memory
+    batch shape as extract_image_features.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        for pdf in batches:
-            out_content, oks = [], []
-            target = width * height
-            for buf in pdf["content"]:
-                if buf is None:
-                    out_content.append(None)
-                    oks.append("null_content")
-                    continue
-                if stub:
-                    reps = (target // max(len(buf), 1)) + 1
-                    out_content.append((bytes(buf) * reps)[:target])
-                    oks.append("ok")
-                    continue
-                b = bytes(buf)
-                try:
-                    arr = _decode_image_gray(b)
-                except Exception:  # recognized magic, malformed body
-                    out_content.append(None)
-                    oks.append("decode_error")
-                    continue
-                if arr is not None:
-                    out_content.append(
-                        _bilinear_resize(arr, width, height).tobytes())
-                    oks.append("ok")
-                    continue
-                Image = _import_pil_image()   # raises if genuinely absent
-                try:
-                    img = Image.open(io.BytesIO(b))
-                    resized = img.convert("L").resize((width, height),
-                                                      Image.BILINEAR)
-                    out_content.append(resized.tobytes())
-                    oks.append("ok")
-                except Exception:
-                    out_content.append(None)
-                    oks.append("decode_error")
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"], "content": out_content,
-                "width": [width] * len(pdf), "height": [height] * len(pdf),
-                "resize_ok": oks})
+    if width < 1 or height < 1:
+        raise ValueError("resize_images: width and height must be >= 1")
+    target = width * height
 
-    return df.select("media_id", "content").mapInPandas(kernel, RESIZED_SCHEMA)
+    def decode(b: bytes):
+        if stub:
+            out = (b * (target // max(len(b), 1) + 1))[:target]
+        else:
+            out = _decode_image_gray(b, (width, height)).tobytes()
+        return [(out, width, height)]
+
+    return _map_blobs(df, RESIZED_SCHEMA, decode, (None, width, height))
 
 
 def sample_video_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -1051,7 +973,6 @@ def _parse_y4m_luma_frames(buf: bytes):
     `FRAME...\\n` + raw planes) — the video analog of netpbm: numpy-parseable
     with no codec. Raises on malformed/truncated input; unsupported chroma
     modes raise too (caller maps to a row-level decode_error)."""
-    import numpy as np
     if not buf.startswith(b"YUV4MPEG2"):
         return None
     nl = buf.find(b"\n")
@@ -1149,10 +1070,13 @@ def _parse_avi_mjpeg_frames(buf: bytes):
 
 def _parse_video_luma_frames(buf: bytes):
     """Dispatch the dependency-free video parsers: Y4M (uncompressed),
-    then MJPEG AVI. None when no magic matches."""
+    then MJPEG AVI. Raises ValueError when no magic matches (video has no
+    PIL fall-through)."""
     frames = _parse_y4m_luma_frames(buf)
     if frames is None:
         frames = _parse_avi_mjpeg_frames(buf)
+    if frames is None:
+        raise ValueError("not a YUV4MPEG2 / MJPEG-AVI stream")
     return frames
 
 
@@ -1185,8 +1109,8 @@ def vhash_frames(df: DataFrame, every_n: int = 1,
     32×32 pseudo-frames (partial tail window dropped) — no decode, the
     1→N shape and hashing real. REAL kernel (``stub=False``):
     dependency-free Y4M / MJPEG-AVI luma decode
-    (_parse_video_luma_frames); unrecognized/truncated blobs flag ONE
-    ``decode_error`` row.
+    (_parse_video_luma_frames). Frames are hashed batch-wide
+    (:func:`_phash_column`).
 
     Scale: hashing is scan-stage; a clip collapses to ~n_frames × 8
     bytes of signature — what :func:`video_dup_pairs`' inverted-index
@@ -1194,57 +1118,18 @@ def vhash_frames(df: DataFrame, every_n: int = 1,
     """
     if every_n < 1:
         raise ValueError("vhash_frames: every_n must be >= 1")
-    import numpy as np
 
-    def one(buf):
-        if buf is None:
-            return [(None, None, "null_content")]
-        b = bytes(buf)
-        rows = []
-        try:
-            if stub:
-                flat = np.frombuffer(b, dtype=np.uint8)
-                frames = ((i, flat[i * 1024:(i + 1) * 1024]
-                           .reshape(32, 32))
-                          for i in range(len(flat) // 1024))
-            else:
-                frames = _parse_video_luma_frames(b)
-                if frames is None:
-                    raise ValueError("unrecognized video container")
-            for idx, plane in frames:
-                if idx % every_n:
-                    continue
-                rows.append((idx, plane, "ok"))
-        except Exception:
-            return [(None, None, "decode_error")]
-        if not rows:
-            return [(None, None, "empty_content")]
-        return rows
+    def decode(b: bytes):
+        if stub:
+            flat = np.frombuffer(b, dtype=np.uint8)
+            frames = ((i, flat[i * 1024:(i + 1) * 1024].reshape(32, 32))
+                      for i in range(len(flat) // 1024))
+        else:
+            frames = _parse_video_luma_frames(b)
+        return [(idx, plane) for idx, plane in frames if idx % every_n == 0]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, planes, oks = [], [], [], []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                # decode only here; hashing runs batch-wide below so the
-                # DCT kernel is amortized over ALL the batch's frames
-                # (bit-identical per-frame values — §4.2)
-                for idx, plane, ok in one(buf):
-                    ids.append(mid)
-                    idxs.append(idx)
-                    planes.append(plane)
-                    oks.append(ok)
-            hs: list = [None] * len(planes)
-            for pos, h in _phash_scatter(
-                    [(i, p) for i, p in enumerate(planes)
-                     if p is not None]).items():
-                hs[pos] = h
-            yield pd.DataFrame({
-                "media_id": ids,
-                "frame_idx": pd.array(idxs, dtype="Int64"),
-                "vhash": pd.array(hs, dtype="Int64"),
-                "decode_ok": oks})
-
-    return df.select("media_id", "content").mapInPandas(run, VHASH_SCHEMA)
+    return _map_blobs(df, VHASH_SCHEMA, decode, (None, None),
+                      {"vhash": _phash_column})
 
 
 def video_dup_pairs(frames: DataFrame, min_shared: int = 1,
@@ -1307,58 +1192,21 @@ def extract_video_frame_features(df: DataFrame, every_n: int = 1,
     rows are emitted per batch, and only every_n-th frame's histogram is
     materialized — a long recording never lives as one Python list.
     """
-    if every_n < 1:
-        raise ValueError("every_n must be >= 1")
+    if every_n < 1 or feature_dim < 1:
+        raise ValueError("every_n and feature_dim must be >= 1")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            ids, idxs, feats, oks = [], [], [], []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                if buf is None:
-                    ids.append(mid); idxs.append(0)
-                    feats.append(None); oks.append("null_content")
-                    continue
-                b = bytes(buf)
-                if stub:
-                    if not b:
-                        ids.append(mid); idxs.append(0)
-                        feats.append(None); oks.append("empty_content")
-                        continue
-                    for i in range(0, (len(b) + 1023) // 1024):
-                        if i % every_n:
-                            continue
-                        ids.append(mid); idxs.append(i)
-                        feats.append(_fold_histogram(b[i * 1024:(i + 1) * 1024],
-                                                     feature_dim))
-                        oks.append("ok")
-                    continue
-                try:
-                    frames = _parse_video_luma_frames(b)
-                    if frames is None:
-                        raise ValueError("not a YUV4MPEG2 / MJPEG-AVI "
-                                         "stream")
-                except Exception:
-                    ids.append(mid); idxs.append(0)
-                    feats.append(None); oks.append("decode_error")
-                    continue
-                if not frames:
-                    ids.append(mid); idxs.append(0)
-                    feats.append(None); oks.append("empty_content")
-                    continue
-                for idx, y in frames:
-                    if idx % every_n:
-                        continue
-                    hist = np.bincount(y.ravel(), minlength=256).tolist()
-                    ids.append(mid); idxs.append(idx)
-                    feats.append(_fold_histogram(hist, feature_dim))
-                    oks.append("ok")
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs,
-                                "feature": feats, "decode_ok": oks})
+    def decode(b: bytes):
+        if stub:
+            return [(i, _fold_histogram(b[i * 1024:(i + 1) * 1024],
+                                        feature_dim))
+                    for i in range(0, (len(b) + 1023) // 1024, every_n)]
+        return [(idx, _fold_histogram(np.bincount(y.ravel(), minlength=256),
+                                      feature_dim))
+                for idx, y in _parse_video_luma_frames(b)
+                if idx % every_n == 0]
 
-    return (df.filter(F.col("media_type") == "video")
-            .select("media_id", "content")
-            .mapInPandas(kernel, VIDEO_FRAME_SCHEMA))
+    return _map_blobs(df.filter(F.col("media_type") == "video"),
+                      VIDEO_FRAME_SCHEMA, decode, (0, None))
 
 
 AUDIO_FEATURES_SCHEMA = StructType([
@@ -1377,7 +1225,6 @@ def _g711_luts():
     """256-entry decode tables for G.711 companded audio (the CCITT
     reference expansion, ITU-T G.711 / classic g711.c): returns
     (ulaw_to_linear16, alaw_to_linear16) int32 numpy arrays."""
-    import numpy as np
     b = np.arange(256, dtype=np.int32)
     # mu-law
     u = (~b) & 0xFF
@@ -1402,7 +1249,6 @@ def _parse_wav_companded(buf: bytes):
     4-bit compressed WAV — r8), both to linear 16-bit. Returns
     (samples_i32 interleaved, nchannels) or None when the container
     isn't RIFF/WAVE or the format tag isn't one of these."""
-    import numpy as np
     if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
         return None
     pos, fmt, data = 12, None, None
@@ -1470,7 +1316,6 @@ def _decode_ima_adpcm(data: bytes, nch: int, block_align: int):
     first output sample — then nibble payload in 4-byte per-channel
     groups, low nibble first. Trailing partial blocks are decoded as far
     as they go (encoders pad the final block)."""
-    import numpy as np
     if nch not in (1, 2):
         raise ValueError(f"unsupported IMA ADPCM channel count {nch}")
     if block_align < 4 * nch or block_align % (4 * nch):
@@ -1517,10 +1362,7 @@ def _decode_wav_samples(buf: bytes):
     which ``wave`` rejects) are expanded to linear 16-bit through the
     CCITT reference tables. Raises on non-WAV / truncated buffers — the
     caller maps that to a row-level decode_error flag."""
-    import io
     import wave
-
-    import numpy as np
     try:
         with wave.open(io.BytesIO(buf), "rb") as wf:
             nch = wf.getnchannels()
@@ -1591,49 +1433,20 @@ def extract_audio_windows(df: DataFrame, window_bytes: int | None = None,
         raise ValueError("window_bytes applies to the stub path; use "
                          "window_samples for the real decode path "
                          "(stub=False)")
-    wb = window_bytes if window_bytes is not None else 1024
-    ws = window_samples if window_samples is not None else 1024
+    size = window_bytes if stub else window_samples
+    size = 1024 if size is None else size
+    if size < 1:
+        raise ValueError("extract_audio_windows: window size must be >= 1")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, widx, rms, oks = [], [], [], []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                if buf is None:
-                    ids.append(mid); widx.append(0)
-                    rms.append(None); oks.append("null_content")
-                    continue
-                b = bytes(buf)
-                if stub:
-                    if not b:
-                        ids.append(mid); widx.append(0)
-                        rms.append(None); oks.append("empty_content")
-                        continue
-                    for w in range(0, len(b), wb):
-                        win = b[w:w + wb]
-                        ids.append(mid)
-                        widx.append(w // wb)
-                        rms.append((sum(x * x for x in win) / len(win)) ** 0.5)
-                        oks.append("ok")
-                    continue
-                try:
-                    samples = _decode_wav_samples(b)
-                except Exception:
-                    ids.append(mid); widx.append(0)
-                    rms.append(None); oks.append("decode_error")
-                    continue
-                if len(samples) == 0:
-                    ids.append(mid); widx.append(0)
-                    rms.append(None); oks.append("empty_content")
-                    continue
-                for w in range(0, len(samples), ws):
-                    win = samples[w:w + ws]
-                    ids.append(mid)
-                    widx.append(w // ws)
-                    rms.append(float((win * win).mean() ** 0.5))
-                    oks.append("ok")
-            yield pd.DataFrame({"media_id": ids, "window_idx": widx,
-                                "rms": rms, "decode_ok": oks})
+    def rms(win) -> float:
+        if stub:  # exact integer arithmetic until the one final sqrt
+            return (sum(x * x for x in win) / len(win)) ** 0.5
+        return float((win * win).mean() ** 0.5)
 
-    return (df.filter(F.col("media_type") == "audio")
-            .select("media_id", "content")
-            .mapInPandas(kernel, AUDIO_FEATURES_SCHEMA))
+    def decode(b: bytes):
+        data = b if stub else _decode_wav_samples(b)
+        return [(w // size, rms(data[w:w + size]))
+                for w in range(0, len(data), size)]
+
+    return _map_blobs(df.filter(F.col("media_type") == "audio"),
+                      AUDIO_FEATURES_SCHEMA, decode, (0, None))

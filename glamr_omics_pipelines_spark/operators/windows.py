@@ -50,10 +50,6 @@ def epoch_us(col) -> "F.Column":
     return F.unix_micros(c.cast("timestamp"))
 
 
-# Backwards-compatible alias (pre-round-4 name).
-_epoch_us = epoch_us
-
-
 def top1_per_group(df: DataFrame, group_cols: list[str], order_cols: list) -> DataFrame:
     """Deterministic best-row-per-group: row_number()==1 over the given order.
 

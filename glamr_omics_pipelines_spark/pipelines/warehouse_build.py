@@ -27,9 +27,11 @@ no Spark job), not from a `count()`. On perfbench's seeded inputs
 rerun. The bracken stage loads only the long form
 (`glamr.bracken_long`): the wide pivots of `merge_bracken` would each
 run a distinct-values job for nothing, and the tpm stage attaches both
-per-sample totals with one aggregate (`abundance.tpm_rpkm`). Views are
-recomputed from base tables — the staleness contract is "as of last
-build_warehouse run" (the reference's nightly cron analog).
+per-sample totals with one aggregate (`abundance.tpm_rpkm`). Both views
+are recomputed on every run from the in-memory `frames`, not from the
+warehouse's base tables: `bin_summary` from checkm/gtdb/drep and the anvio
+MV from kofam. The staleness contract is "as of last build_warehouse run"
+(the reference's nightly cron analog).
 """
 
 from __future__ import annotations

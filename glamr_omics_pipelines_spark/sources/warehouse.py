@@ -132,14 +132,6 @@ class Warehouse:
                             else _unescape(value))
         return out
 
-    def overwrite_partitions(self, df: DataFrame, table: str, key: str) -> None:
-        """Upsert semantics via dynamic partition overwrite — replaces only
-        the partitions present in ``df`` (the MERGE analog without Delta)."""
-        (df.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(key).parquet(self.path(table)))
-        self._log(table=table, key=key, mode="overwrite_partitions")
-
     def save_bucketed(self, df: DataFrame, table: str, key: str,
                       buckets: int = 16) -> None:
         """Bucketed table write — the engine's replacement for the reference's

@@ -17,13 +17,12 @@ def spark():
 # a DEFAULT run must finish well under 20 min or a real failure is
 # indistinguishable from a timeout. Tests marked @pytest.mark.slow (the
 # iterative-graph agreement suites, full-catalog plan sweeps, multi-round
-# property tests) are SKIPPED by default and run with --runslow;
-# tools/closing_gates.py passes --runslow so the end-of-round gate still
-# covers everything.
+# property tests) are SKIPPED by default; `pytest --runslow` runs the
+# whole suite, slow tests included.
 
 def pytest_addoption(parser):
     parser.addoption("--runslow", action="store_true", default=False,
-                     help="also run tests marked slow (full closing gate)")
+                     help="also run tests marked slow (the whole suite)")
 
 
 def pytest_collection_modifyitems(config, items):

@@ -81,3 +81,28 @@ def test_validate_cli_rejects_unknown_rule(spark):
     with _pytest.raises(SystemExit):
         main(["validate", "/root/testdata/sf0.001/orders.parquet",
               "--rule", "bogus:o_custkey"])
+
+
+def test_query_releases_materializations(spark, tmp_path, monkeypatch):
+    """`query` frees every localCheckpoint and persist handle it made, on
+    success and when the query raises (here: its --out lies under a file)."""
+    import os
+
+    import pytest as _pytest
+
+    from glamr_omics_pipelines_spark.operators import _cache, _ckpt
+    made = []
+    checkpoint = _ckpt.checkpoint
+    monkeypatch.setattr(_ckpt, "checkpoint",
+                        lambda df: made.append(1) or checkpoint(df))
+    entry = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "__spark_entry__.py")
+    argv = ["query", "dup_clusters", "--entry", entry, "--out"]
+    assert main(argv + [str(tmp_path / "ok")]) == 0
+    assert made and _ckpt._HANDLES == [] and _cache._HANDLES == []
+    made.clear()
+    blocker = tmp_path / "blocker"
+    blocker.write_text("")
+    with _pytest.raises(Exception):
+        main(argv + [str(blocker / "out")])
+    assert made and _ckpt._HANDLES == [] and _cache._HANDLES == []

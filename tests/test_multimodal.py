@@ -96,10 +96,34 @@ def test_extract_audio_windows_explodes_and_computes_rms(spark):
 import sys
 import types
 
+import numpy as np
 import pandas as pd
 
 from glamr_omics_pipelines_spark.operators.multimodal import (
-    _decode_image_batch, _fold_histogram, _import_pil_image)
+    _fold_histogram, _import_pil_image)
+
+
+class _KernelOf:
+    """Stands in for a DataFrame: an operator called on it returns the
+    (kernel, schema) pair it hands to ``mapInPandas``."""
+
+    def filter(self, *_):
+        return self
+
+    select = filter
+
+    def mapInPandas(self, fn, schema):
+        return fn, schema
+
+
+def _run_kernel(op, kwargs, contents):
+    """Run operator ``op``'s kernel on one batch of blobs (media_id 1..n);
+    returns (output frame, output schema)."""
+    fn, schema = getattr(multimodal, op)(_KernelOf(), **kwargs)
+    pdf = pd.DataFrame({"media_id": list(range(1, len(contents) + 1)),
+                        "content": contents})
+    (out,) = list(fn(iter([pdf])))
+    return out, schema
 
 
 @pytest.mark.skipif(_pil_available(), reason="absence test is meaningful "
@@ -111,24 +135,13 @@ def test_import_pil_raises_not_implemented_without_pil():
 
 
 class _FakeImg:
-    def __init__(self):
-        self.size = (4, 4)
-
     def convert(self, mode):
         assert mode == "L"
         return self
 
-    def histogram(self):
-        h = [0] * 256
-        h[0], h[255] = 12, 4
-        return h
-
-    def resize(self, wh, resample=None):
-        self._wh = wh
-        return self
-
-    def tobytes(self):
-        return b"\x7f" * (self._wh[0] * self._wh[1])
+    def __array__(self, dtype=None, copy=None):
+        # 4x4 gray pixels: 12 black, 4 white
+        return np.array([0] * 12 + [255] * 4, dtype=dtype).reshape(4, 4)
 
 
 class _FakeImageMod:
@@ -154,10 +167,9 @@ def _with_fake_pil(fn):
 
 
 def test_real_decode_kernel_with_pil_histogram_features():
-    pdf = pd.DataFrame({"media_id": [1, 2, 3],
-                        "content": [b"IMG!....", b"garbage", None]})
-    out = _with_fake_pil(
-        lambda: _decode_image_batch(pdf, feature_dim=4, stub=False))
+    out, _ = _with_fake_pil(lambda: _run_kernel(
+        "extract_image_features", {"feature_dim": 4, "stub": False},
+        [b"IMG!....", b"garbage", None]))
     by_id = dict(zip(out["media_id"], zip(out["feature"], out["decode_ok"])))
     feat, ok = by_id[1]
     assert ok == "ok"
@@ -173,8 +185,8 @@ def test_fold_histogram_normalizes():
 
 def test_stub_kernel_unchanged_by_real_path():
     # the oracle hashes the stub path — it must stay bit-identical
-    pdf = pd.DataFrame({"media_id": [1], "content": [bytes([1, 2, 3, 4])]})
-    out = _decode_image_batch(pdf, feature_dim=4, stub=True)
+    out, _ = _run_kernel("extract_image_features", {"feature_dim": 4},
+                         [bytes([1, 2, 3, 4])])
     assert out["feature"][0] == [0.1, 0.2, 0.3, 0.4]
 
 
@@ -187,8 +199,6 @@ def test_stub_kernel_unchanged_by_real_path():
 import io
 import struct
 import wave
-
-import numpy as np
 
 from glamr_omics_pipelines_spark.operators.multimodal import _decode_wav_samples
 
@@ -1449,3 +1459,129 @@ def test_phash_batched_kernel_bit_identical():
     samples = rng.normal(0, 1000, 4096)
     assert M._afp_of_samples(samples) == M._phash_of_gray(
         M._afp_matrix(samples))
+
+
+# ---------------------------------------------------------------------------
+# The blob-kernel contract, pinned per kernel and path: a batch of
+# [null, empty, foreign/corrupt, valid] blobs maps to per-row statuses and
+# placeholder rows without failing the task. The edge cases differ per
+# kernel on purpose (empty bytes: phash-stub decode_error, image-features
+# stub ok, audio/video empty_content) and must stay that way.
+# ---------------------------------------------------------------------------
+
+_RAW = bytes(range(256)) * 8                 # 2 stub windows of 1024 bytes
+_IMG = _pgm(2, 2, [0, 64, 128, 255])
+_IMG_BAD = b"P5\n2 2\n255\n\x00"              # netpbm magic, truncated raster
+_VID = _y4m(32, 32, [list(range(32)) * 32, [200] * 1024])
+_VID_BAD = b"YUV4MPEG2 W16 H16\nFRAME\nshort"
+_WAV = _wav_bytes([int(1000 * np.sin(i / 5)) for i in range(2048)])
+_FOREIGN = b"not a media blob"
+
+_NULL, _EMPTY, _ERR = "null_content", "empty_content", "decode_error"
+_FEATS = {"media_id": "int64", "feature": "object", "decode_ok": "object"}
+_PHASH = {"media_id": "int64", "phash": "Int64", "decode_ok": "object"}
+_AFP = {"media_id": "int64", "afp": "Int64", "decode_ok": "object"}
+_RESIZED = {"media_id": "int64", "content": "object", "width": "int64",
+            "height": "int64", "resize_ok": "object"}
+_VHASH = {"media_id": "int64", "frame_idx": "Int64", "vhash": "Int64",
+          "decode_ok": "object"}
+_FRAMES = {"media_id": "int64", "frame_idx": "int64", "feature": "object",
+           "decode_ok": "object"}
+_WINDOWS = {"media_id": "int64", "window_idx": "int64", "rms": "float64",
+            "decode_ok": "object"}
+_STUB_IN = [None, b"", _FOREIGN, _RAW]
+
+# (operator, kwargs, contents, statuses per blob, placeholder row of a
+#  non-ok blob (columns between media_id and the status), dtypes)
+_CONTRACT = {
+    "image_features_stub": (
+        "extract_image_features", {}, _STUB_IN,
+        [[_NULL], ["ok"], ["ok"], ["ok"]], (None,), _FEATS),
+    "image_features_real": (
+        "extract_image_features", {"stub": False}, [None, _IMG_BAD, _IMG],
+        [[_NULL], [_ERR], ["ok"]], (None,), _FEATS),
+    "phash_stub": (
+        "phash_images", {}, _STUB_IN,
+        [[_NULL], [_ERR], ["ok"], ["ok"]], (None,), _PHASH),
+    "phash_real": (
+        "phash_images", {"stub": False}, [None, _IMG_BAD, _IMG],
+        [[_NULL], [_ERR], ["ok"]], (None,), _PHASH),
+    "afp_stub": (
+        "afp_signatures", {}, _STUB_IN,
+        [[_NULL], [_ERR], [_ERR], ["ok"]], (None,), _AFP),
+    "afp_real": (
+        "afp_signatures", {"stub": False}, [None, b"", _WAV[:30], _WAV],
+        [[_NULL], [_ERR], [_ERR], ["ok"]], (None,), _AFP),
+    "resize_stub": (
+        "resize_images", {"width": 3, "height": 2}, _STUB_IN,
+        [[_NULL], ["ok"], ["ok"], ["ok"]], (None, 3, 2), _RESIZED),
+    "resize_real": (
+        "resize_images", {"width": 3, "height": 2, "stub": False},
+        [None, _IMG_BAD, _IMG],
+        [[_NULL], [_ERR], ["ok"]], (None, 3, 2), _RESIZED),
+    "vhash_stub": (
+        "vhash_frames", {}, _STUB_IN,
+        [[_NULL], [_EMPTY], [_EMPTY], ["ok", "ok"]], (None, None), _VHASH),
+    "vhash_real": (
+        "vhash_frames", {"stub": False}, [None, b"", _VID_BAD, _VID],
+        [[_NULL], [_ERR], [_ERR], ["ok", "ok"]], (None, None), _VHASH),
+    "video_features_stub": (
+        "extract_video_frame_features", {}, _STUB_IN,
+        [[_NULL], [_EMPTY], ["ok"], ["ok", "ok"]], (0, None), _FRAMES),
+    "video_features_real": (
+        "extract_video_frame_features", {"stub": False},
+        [None, b"", _VID_BAD, _VID],
+        [[_NULL], [_ERR], [_ERR], ["ok", "ok"]], (0, None), _FRAMES),
+    "audio_windows_stub": (
+        "extract_audio_windows", {}, _STUB_IN,
+        [[_NULL], [_EMPTY], ["ok"], ["ok", "ok"]], (0, None), _WINDOWS),
+    "audio_windows_real": (
+        "extract_audio_windows", {"stub": False},
+        [None, b"", _WAV[:30], _WAV],
+        [[_NULL], [_ERR], [_ERR], ["ok", "ok"]], (0, None), _WINDOWS),
+}
+
+
+def _cell(v):
+    return v if isinstance(v, list) or not pd.isna(v) else None
+
+
+@pytest.mark.parametrize("case", sorted(_CONTRACT))
+def test_blob_kernel_contract(spark, case):
+    op, kwargs, contents, statuses, placeholder, dtypes = _CONTRACT[case]
+    out, schema = _run_kernel(op, kwargs, contents)
+    assert list(out.columns) == schema.names
+    assert {c: str(t) for c, t in out.dtypes.items()} == dtypes
+    status = schema.names[-1]
+    for mid, want in enumerate(statuses, start=1):
+        rows = out[out["media_id"] == mid]
+        assert list(rows[status]) == want, (mid, list(rows[status]))
+        if want != ["ok"] * len(want):
+            (row,) = rows[schema.names[1:-1]].itertuples(index=False)
+            assert tuple(_cell(v) for v in row) == placeholder, (mid, row)
+
+
+@pytest.mark.skipif(_pil_available(), reason="with PIL installed these "
+                    "blobs decode (or flag decode_error) instead of raising")
+@pytest.mark.parametrize("op", ["extract_image_features", "phash_images",
+                                "resize_images"])
+@pytest.mark.parametrize("blob", [b"", _FOREIGN], ids=["empty", "foreign"])
+def test_blob_needing_pil_raises_without_pil(spark, op, blob):
+    kwargs = {"stub": False}
+    if op == "resize_images":
+        kwargs.update(width=2, height=2)
+    with pytest.raises(NotImplementedError, match="PIL"):
+        _run_kernel(op, kwargs, [_IMG, blob])
+
+
+@pytest.mark.parametrize("op, kwargs", [
+    ("extract_image_features", {"feature_dim": 0}),
+    ("extract_video_frame_features", {"feature_dim": 0}),
+    ("resize_images", {"width": 0, "height": 2}),
+    ("extract_audio_windows", {"window_bytes": 0}),
+    ("extract_audio_windows", {"stub": False, "window_samples": 0}),
+])
+def test_out_of_range_size_raises_before_any_decode(spark, op, kwargs):
+    # a bad size must fail the call, not flag every blob decode_error
+    with pytest.raises(ValueError, match=">= 1"):
+        getattr(multimodal, op)(_KernelOf(), **kwargs)

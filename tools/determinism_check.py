@@ -33,16 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 
-
-def normalize(df):
-    """check.py's normalize: columns sorted by name, object cols rendered,
-    rows fully sorted — the driver-hash canonical form."""
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns),
-                          kind="mergesort").reset_index(drop=True)
+from tools.check import normalize  # noqa: E402 - check.py's canonical form
 
 
 def frame_hash(df) -> str:
@@ -57,6 +48,7 @@ def frame_hash(df) -> str:
 
 def run(out_path: str, only: set[str] | None = None) -> int:
     import __spark_entry__ as entry_mod
+    from glamr_omics_pipelines_spark.operators import _cache, _ckpt
     from glamr_omics_pipelines_spark.session import get_spark
 
     shuffle = os.environ.get("DET_SHUFFLE")
@@ -80,6 +72,8 @@ def run(out_path: str, only: set[str] | None = None) -> int:
             manifest[name] = {"error": f"{type(e).__name__}: {e}"[:200]}
             print(f"ERR  {name}: {manifest[name]['error']}")
         spark.catalog.clearCache()
+        _ckpt.release_checkpoints()
+        _cache.release_caches()
     with open(out_path, "w") as fh:
         json.dump({"master": spark.sparkContext.master,
                    "shuffle_partitions":

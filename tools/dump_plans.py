@@ -42,6 +42,7 @@ def props(plan: str) -> dict:
 
 
 def main() -> int:
+    from glamr_omics_pipelines_spark.operators import _cache, _ckpt
     from glamr_omics_pipelines_spark.session import get_spark
     import __spark_entry__ as E
     spark = get_spark("plan-dump")
@@ -124,13 +125,15 @@ def main() -> int:
             plan = df._jdf.queryExecution().executedPlan().toString()
             # AQE toString carries Final AND Initial plans — count only Final
             plan = plan.split("== Initial Plan ==")[0]
-            spark.catalog.clearCache()
             p = props(plan)
             print(f"| {name} | {p['joins']} | {p['exchanges']} | "
                   f"{p['pushed_scans']} | {p['codegen']} | {p['python_eval']} | "
                   f"{p['window']} |")
         except Exception as e:  # pragma: no cover
             print(f"| {name} | ERROR: {type(e).__name__} | | | | | |")
+        spark.catalog.clearCache()
+        _ckpt.release_checkpoints()
+        _cache.release_caches()
     spark.stop()
     return 0
 
