@@ -217,9 +217,14 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--demo", metavar="DIR",
                    help="generate fixture inputs under DIR instead of "
                         "--frames-dir/globs")
-    p.add_argument("--frames-dir")
-    p.add_argument("--bracken-glob")
-    p.add_argument("--rpkm-glob")
+    p.add_argument("--frames-dir",
+                   help="directory of <frame>.parquet inputs. A rerun skips "
+                        "a stage whose inputs are unchanged, but parquet "
+                        "frames are not in-memory LocalRelations and cannot "
+                        "be fingerprinted without a Spark job, so the "
+                        "stages that read them run on every build")
+    p.add_argument("--bracken-glob", help="local glob of bracken reports")
+    p.add_argument("--rpkm-glob", help="local glob of bbmap rpkm files")
     p.set_defaults(fn=cmd_warehouse_build)
 
     p = sub.add_parser("query", help="run a catalog query")

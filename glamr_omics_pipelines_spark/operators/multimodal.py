@@ -547,13 +547,16 @@ def _decode_image_gray(buf: bytes, size: tuple[int, int] | None = None):
     PIL's convert("L") (``NotImplementedError`` with an install hint when
     PIL is absent); each path resamples with its own bilinear: the stdlib
     array with :func:`_bilinear_resize`, a PIL image with PIL's BILINEAR.
-    Raises on a malformed blob of a recognized format."""
+    Raises on a malformed blob of a recognized format, and ``ValueError``
+    on an empty one, which no format (PIL's included) decodes."""
     from glamr_omics_pipelines_spark.operators._jpeg import decode_jpeg_luma
     for parse in (_parse_netpbm, _parse_bmp, _parse_png, _parse_gif,
                   decode_jpeg_luma):
         arr = parse(buf)
         if arr is not None:
             return arr if size is None else _bilinear_resize(arr, *size)
+    if not buf:
+        raise ValueError("empty image blob")
     Image = _import_pil_image()
     img = Image.open(io.BytesIO(buf)).convert("L")
     if size is not None:

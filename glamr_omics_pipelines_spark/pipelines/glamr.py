@@ -43,20 +43,27 @@ RPKM_SCHEMA = StructType([
     StructField("FPKM", DoubleType()),
 ])
 
+# where each file-fed loader finds its wildcard columns in a file's path
+BRACKEN_PATTERN = "{sample}/bracken_{database}.tsv"
+RPKM_PATTERN = "{sample}_genes.rpkm"
 
-def bracken_long(spark: SparkSession, glob: str,
+
+def bracken_long(spark: SparkSession, paths: str | list[str],
                  tax_info: DataFrame) -> DataFrame:
-    """The long form of code/merge_bracken.R (SURVEY §7.1): glob-scan
-    per-sample bracken TSVs (S4 path columns), broadcast-join taxonomy (J1),
-    drop refseq rows duplicating GTDB domains (P2), per-sample rel_abund
-    (A5). Lazy: no Spark job runs until the caller acts on it.
+    """The long form of code/merge_bracken.R (SURVEY §7.1): scan per-sample
+    bracken TSVs (a glob or a list of files; S4 path columns),
+    broadcast-join taxonomy (J1), drop refseq rows duplicating GTDB domains
+    (P2), per-sample rel_abund (A5). Lazy: no Spark job runs until the
+    caller acts on it.
 
     One scan over all files — the reference's per-file read loop
     (merge_bracken.R:39-47) becomes a single multi-file DataFrame;
-    `sample`/`database` come from the path.
+    `sample`/`database` come from the path (``BRACKEN_PATTERN``). Every
+    value is per sample, so a scan of a subset of the samples' files gives
+    those samples' rows unchanged.
     """
-    raw = read_typed_csv(spark, glob, schema=BRACKEN_SCHEMA, header=False)
-    scanned = with_path_columns(raw, "{sample}/bracken_{database}.tsv")
+    raw = read_typed_csv(spark, paths, schema=BRACKEN_SCHEMA, header=False)
+    scanned = with_path_columns(raw, BRACKEN_PATTERN)
     tax = tax_info.select("tax_id", "std_lineage", "kingdom")
     joined = scanned.join(F.broadcast(tax), "tax_id", "left")
     # P2: refseq rows whose lineage is a GTDB domain are duplicates
@@ -154,18 +161,20 @@ def read_ladder(read_counts: DataFrame) -> DataFrame:
                                         out="percent_retained")
 
 
-def load_gene_abundance(spark: SparkSession, glob: str) -> DataFrame:
+def load_gene_abundance(spark: SparkSession,
+                        paths: str | list[str]) -> DataFrame:
     """gene_abundance ingestion (postgres.Rmd:1169-1259): bbmap rpkm files
-    with prodigal headers. The two-stage separate (R6) splits '#Name' into
+    (a glob or a list of files; ``RPKM_PATTERN`` names the sample) with
+    prodigal headers. The two-stage separate (R6) splits '#Name' into
     gene coordinates + the key=value attribute block; FPKM→TPM per sample
     (postgres.Rmd:1193).
 
     comment='#' drops both the 4 preamble lines and the '#Name' header, so
     the explicit schema is the contract (inferred-then-pinned, SURVEY §1.2).
     """
-    raw = read_typed_csv(spark, glob, schema=RPKM_SCHEMA, header=False,
+    raw = read_typed_csv(spark, paths, schema=RPKM_SCHEMA, header=False,
                          comment="#")
-    raw = with_path_columns(raw, "{sample}_genes.rpkm")
+    raw = with_path_columns(raw, RPKM_PATTERN)
     # try_element_at / try_cast / nullif: a malformed prodigal header (fewer
     # ' # '-separated fields, or a non-numeric coordinate) yields null fields
     # for THAT row — under plain element_at/cast, ANSI mode would abort the

@@ -117,6 +117,11 @@ class Warehouse:
                   rows=obs.get["rows"])
         return new_keys
 
+    def log_up_to_date(self, table: str, key: str) -> None:
+        """The ledger row of a load skipped because its inputs did not
+        change: no key is new and no row was written."""
+        self._log(table=table, key=key, new_keys=0, rows=0)
+
     def _listed_keys(self, table: str, key: str) -> set[str | None]:
         """The loaded values of partition column ``key``, from the table's
         directory names; ``None`` stands for the default (null) partition."""

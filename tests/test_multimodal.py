@@ -1498,14 +1498,15 @@ _CONTRACT = {
         "extract_image_features", {}, _STUB_IN,
         [[_NULL], ["ok"], ["ok"], ["ok"]], (None,), _FEATS),
     "image_features_real": (
-        "extract_image_features", {"stub": False}, [None, _IMG_BAD, _IMG],
-        [[_NULL], [_ERR], ["ok"]], (None,), _FEATS),
+        "extract_image_features", {"stub": False},
+        [None, b"", _IMG_BAD, _IMG],
+        [[_NULL], [_ERR], [_ERR], ["ok"]], (None,), _FEATS),
     "phash_stub": (
         "phash_images", {}, _STUB_IN,
         [[_NULL], [_ERR], ["ok"], ["ok"]], (None,), _PHASH),
     "phash_real": (
-        "phash_images", {"stub": False}, [None, _IMG_BAD, _IMG],
-        [[_NULL], [_ERR], ["ok"]], (None,), _PHASH),
+        "phash_images", {"stub": False}, [None, b"", _IMG_BAD, _IMG],
+        [[_NULL], [_ERR], [_ERR], ["ok"]], (None,), _PHASH),
     "afp_stub": (
         "afp_signatures", {}, _STUB_IN,
         [[_NULL], [_ERR], [_ERR], ["ok"]], (None,), _AFP),
@@ -1517,8 +1518,8 @@ _CONTRACT = {
         [[_NULL], ["ok"], ["ok"], ["ok"]], (None, 3, 2), _RESIZED),
     "resize_real": (
         "resize_images", {"width": 3, "height": 2, "stub": False},
-        [None, _IMG_BAD, _IMG],
-        [[_NULL], [_ERR], ["ok"]], (None, 3, 2), _RESIZED),
+        [None, b"", _IMG_BAD, _IMG],
+        [[_NULL], [_ERR], [_ERR], ["ok"]], (None, 3, 2), _RESIZED),
     "vhash_stub": (
         "vhash_frames", {}, _STUB_IN,
         [[_NULL], [_EMPTY], [_EMPTY], ["ok", "ok"]], (None, None), _VHASH),
@@ -1565,7 +1566,7 @@ def test_blob_kernel_contract(spark, case):
                     "blobs decode (or flag decode_error) instead of raising")
 @pytest.mark.parametrize("op", ["extract_image_features", "phash_images",
                                 "resize_images"])
-@pytest.mark.parametrize("blob", [b"", _FOREIGN], ids=["empty", "foreign"])
+@pytest.mark.parametrize("blob", [_FOREIGN], ids=["foreign"])
 def test_blob_needing_pil_raises_without_pil(spark, op, blob):
     kwargs = {"stub": False}
     if op == "resize_images":

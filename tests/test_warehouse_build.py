@@ -1,13 +1,18 @@
 """Layer-C capstone: the full warehouse build run twice — second run must
-load ZERO new rows (the reference's anti-join idempotence contract)."""
+load ZERO new rows (the reference's anti-join idempotence contract) — and
+the DAG's up-to-date rule over reruns."""
 
 import json
+import os
+import shutil
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from glamr_omics_pipelines_spark import fixtures
 from glamr_omics_pipelines_spark.pipelines import warehouse_build
+from glamr_omics_pipelines_spark.plans.dag import read_ledger
 
 
 def _frames(spark):
@@ -80,6 +85,174 @@ def test_schema_contract_enforced(spark, tmp_path):
     import os
     pinned = os.listdir(f"{root}/_schemas")
     assert "tax_info.schema.json" in pinned and "tpm2.schema.json" in pinned
+
+
+STAGES = ["tax_info", "bracken", "gene_abundance", "read_count", "tpm",
+          "bin_summary_view", "kofam_mv"]
+BASE_TABLES = ["tax_info", "bracken_species", "gene_abundance", "read_count",
+               "tpm2"]
+VIEWS = ["bin_summary", "kofam_scan_signif_anvio"]
+
+
+def _frame_rows(samples: list[str]) -> dict[str, list[dict]]:
+    """The fixture frames' rows, restricted to ``samples`` where a row
+    belongs to one."""
+    taxonomy = fixtures.make_taxonomy()
+    contigs = fixtures.make_contigs()
+    checkm, gtdb, drep, _ = fixtures.make_bins(contigs)
+    mapping, lookup, index = fixtures.make_uniref_mapping(taxonomy)
+    prefixes = tuple(samples)
+
+    def of(rows, col):
+        return [r for r in rows if r[col].startswith(prefixes)]
+    return {"tax_info": taxonomy, "checkm": of(checkm, "bin"),
+            "gtdb": of(gtdb, "bin"), "drep": of(drep, "sample"),
+            "kofam": of(fixtures.make_kofam(contigs), "gene"),
+            "read_counts": of(fixtures.make_read_counts(), "sample"),
+            "read_mapping": of(mapping, "sample"),
+            "uniref_lookup": lookup, "uniref_index": index}
+
+
+def _local_frames(spark, rows: dict) -> dict:
+    """In-memory frames from pandas: ``LocalRelation``s, which the DAG
+    fingerprints without a Spark job (a list of dicts gives a LogicalRDD)."""
+    return {k: spark.createDataFrame(pd.DataFrame(v).sort_index(axis=1))
+            for k, v in rows.items()}
+
+
+def _input_tree(tmp_path, samples: list[str]) -> tuple[str, str]:
+    """Bracken and rpkm files of ``samples`` in a directory of their own;
+    returns (bracken_glob, rpkm_glob)."""
+    full = tmp_path / "inputs_all"
+    if not full.exists():
+        fixtures.write_bracken_tree(
+            str(full / "bracken"),
+            fixtures.make_bracken_counts(fixtures.make_taxonomy()))
+        fixtures.make_gene_rpkm_files(str(full / "rpkm"),
+                                      fixtures.make_contigs())
+    tree = tmp_path / ("inputs_" + "_".join(samples))
+    if not tree.exists():
+        os.makedirs(tree / "rpkm")
+        for s in samples:
+            shutil.copytree(full / "bracken" / s, tree / "bracken" / s)
+            shutil.copy(full / "rpkm" / f"{s}_genes.rpkm", tree / "rpkm")
+    return (str(tree / "bracken" / "*" / "bracken_*.tsv"),
+            str(tree / "rpkm" / "*_genes.rpkm"))
+
+
+class _Builds:
+    """Builds into one root; each build returns its run-ledger rows, its
+    load-ledger rows and its Spark job count (by job group)."""
+
+    def __init__(self, spark, root: str):
+        self.spark, self.root, self.n = spark, root, 0
+
+    def __call__(self, globs: tuple[str, str], frames: dict):
+        runs = read_ledger(f"{self.root}/_run_ledger.jsonl")
+        loads = read_ledger(f"{self.root}/_load_ledger.jsonl")
+        sc = self.spark.sparkContext
+        self.n += 1
+        group = f"warehouse-rerun-{id(self)}-{self.n}"
+        sc.setJobGroup(group, "build_warehouse")
+        try:
+            warehouse_build.build_warehouse(self.spark, self.root, *globs,
+                                            frames)
+        finally:
+            sc._jsc.clearJobGroup()
+        return (read_ledger(f"{self.root}/_run_ledger.jsonl")[len(runs):],
+                read_ledger(f"{self.root}/_load_ledger.jsonl")[len(loads):],
+                len(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def _ran(runs: list[dict]) -> list[str]:
+    return [r["stage"] for r in runs if not r["up_to_date"]]
+
+
+def _rows(spark, root: str, table: str) -> int:
+    return spark.read.parquet(f"{root}/{table}").count()
+
+
+def test_rerun_skips_up_to_date_stages(spark, tmp_path):
+    root = str(tmp_path / "wh")
+    globs = _input_tree(tmp_path, fixtures.SAMPLES)
+    rows = _frame_rows(fixtures.SAMPLES)
+    build = _Builds(spark, root)
+
+    runs, _, _ = build(globs, _local_frames(spark, rows))
+    assert _ran(runs) == STAGES
+
+    # no-op: every stage up to date, and every base table still logs a load
+    runs, loads, jobs = build(globs, _local_frames(spark, rows))
+    assert [r["stage"] for r in runs] == STAGES and _ran(runs) == []
+    assert all("seconds" in r and len(r["fingerprint"]) == 64 for r in runs)
+    assert jobs <= 1   # at most tax_info's partition-listing job
+    assert {r["table"]: (r["new_keys"], r["rows"]) for r in loads} \
+        == dict.fromkeys(BASE_TABLES, (0, 0))
+
+    # a changed frame reruns only the stage that reads it
+    kofam = [dict(r) for r in rows["kofam"]]
+    kofam[0]["score"] += 1.0
+    rows = {**rows, "kofam": kofam}
+    runs, _, _ = build(globs, _local_frames(spark, rows))
+    assert _ran(runs) == ["kofam_mv"]
+
+    # a deleted partition directory reruns its stage, which restores it
+    n = _rows(spark, root, "bracken_species")
+    shutil.rmtree(f"{root}/bracken_species/sample=samp_T2")
+    runs, loads, _ = build(globs, _local_frames(spark, rows))
+    assert _ran(runs) == ["bracken"]
+    assert [(r["table"], r["new_keys"]) for r in loads
+            if r["table"] == "bracken_species"] == [("bracken_species", 1)]
+    assert _rows(spark, root, "bracken_species") == n
+
+    # a touched input file reruns its stage, which appends nothing: the
+    # file's sample is loaded
+    rpkm = os.path.join(os.path.dirname(globs[1]), "samp_T1_genes.rpkm")
+    st = os.stat(rpkm)
+    os.utime(rpkm, ns=(st.st_atime_ns, st.st_mtime_ns + 10 ** 9))
+    runs, loads, _ = build(globs, _local_frames(spark, rows))
+    assert _ran(runs) == ["gene_abundance"]
+    assert [(r["new_keys"], r["rows"]) for r in loads
+            if r["table"] == "gene_abundance"] == [(0, 0)]
+
+    # a frame that is not a LocalRelation cannot be fingerprinted: its
+    # stage runs on every build
+    for _ in range(2):
+        frames = _local_frames(spark, rows)
+        frames["read_counts"] = spark.createDataFrame(rows["read_counts"])
+        runs, _, _ = build(globs, frames)
+        assert _ran(runs) == ["read_count"]
+        assert next(r for r in runs
+                    if r["stage"] == "read_count")["fingerprint"] is None
+
+
+def _table(spark, root: str, table: str) -> pd.DataFrame:
+    df = spark.read.parquet(f"{root}/{table}").toPandas()
+    df = df.reindex(sorted(df.columns), axis=1)
+    return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+
+def test_incremental_builds_equal_a_fresh_build(spark, tmp_path):
+    """initial -> incremental -> no-op -> incremental leaves the same rows
+    as one build of the final inputs."""
+    samples = fixtures.SAMPLES
+    build = _Builds(spark, str(tmp_path / "wh"))
+    for n in (1, 2, 2, 3):
+        runs, loads, _ = build(_input_tree(tmp_path, samples[:n]),
+                               _local_frames(spark, _frame_rows(samples[:n])))
+    # tax_info did not change, nor did kofam: its fixture rows all belong
+    # to the first two samples
+    assert _ran(runs) == STAGES[1:-1]
+    assert {r["table"]: r["new_keys"] for r in loads if "new_keys" in r} \
+        == {**dict.fromkeys(BASE_TABLES, 1), "tax_info": 0}
+
+    fresh = _Builds(spark, str(tmp_path / "fresh"))
+    fresh(_input_tree(tmp_path, samples),
+          _local_frames(spark, _frame_rows(samples)))
+    for table in BASE_TABLES + VIEWS:
+        pd.testing.assert_frame_equal(
+            _table(spark, build.root, table), _table(spark, fresh.root, table),
+            check_exact=False, rtol=1e-12, atol=0)
 
 
 def test_agg_snapshot_merge_equals_rescan(spark):
