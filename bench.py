@@ -19,8 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from glamr_omics_pipelines_spark.session import get_spark  # noqa: E402
-from glamr_omics_pipelines_spark.operators import _cache, _ckpt  # noqa: E402
+from glamr_omics_pipelines_spark.session import get_spark, release  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 
 # The benched queries, in catalog order, and the r1-r3 30-query subset that
@@ -99,28 +98,22 @@ def main() -> None:
         try:
             for _ in range(n_runs):
                 t0 = time.perf_counter()
-                fn(spark, sf_dir).collect()
-                runs.append(time.perf_counter() - t0)
-                # COLD-RUN PROTOCOL (r12, VERDICT r11 item 2): release the
-                # operators' registered persists/checkpoints between RUNS,
-                # not just queries. Spark's CacheManager matches canonicalized
-                # plans, so without this, run 2-3 of a persist-style operator
-                # (dbscan, tfidf_doc_pairs, mash_distance) silently read run
-                # 1's cache and the min-of-3 records a warm run — which
-                # systematically flatters persist-style changes. Release time
-                # is outside the timed region (cleanup, not query work), the
-                # same accounting the old per-query release used. This is a
-                # MEASUREMENT-BUG FIX: r12 per-query numbers for persist-style
-                # queries are expected to read HIGHER than r11's warm numbers
-                # at identical code (movement quantified in
-                # OPTIMIZATION_r12.md; r11 logs retained).
-                # SPARK_GRAFT_BENCH_WARM=1 restores the r1-r11 per-query
-                # release for producing a cross-round-comparable number in
-                # the round log ONLY — never the default.
-                if not os.environ.get("SPARK_GRAFT_BENCH_WARM"):
-                    spark.catalog.clearCache()
-                    _ckpt.release_checkpoints()
-                    _cache.release_caches()
+                try:
+                    fn(spark, sf_dir).collect()
+                    runs.append(time.perf_counter() - t0)
+                finally:
+                    # COLD-RUN PROTOCOL (r12, VERDICT r11 item 2): release
+                    # the operators' registered persists/checkpoints after
+                    # every RUN, failed ones included. Spark's CacheManager
+                    # matches canonicalized plans, so without this, run 2-3
+                    # of a persist-style operator (dbscan, tfidf_doc_pairs,
+                    # mash_distance) silently read run 1's cache and the
+                    # min-of-3 records a warm run — which systematically
+                    # flatters persist-style changes; and a failed run's
+                    # pinned RDDs would inflate every later query 2-5x.
+                    # Release time is outside the timed region (cleanup, not
+                    # query work).
+                    release(spark)
                 # Record the protocol timing the moment the first 3 runs are
                 # in: a transient failure on (non-protocol) run 4 or 5 must
                 # not erase a protocol-valid min-of-3 measurement and silently
@@ -137,18 +130,6 @@ def main() -> None:
                 # and the round stays comparable; log the flake separately so
                 # it never inflates n_errors / total_incomparable.
                 extra_run_errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-        finally:
-            # safety net for the exception path: the per-run release above
-            # already ran after every completed run, but a failed run leaves
-            # its persists/checkpoints registered — without this, ~50 pinned
-            # RDDs accumulate over the run and GC/eviction pressure inflates
-            # later queries 2-5x. (localCheckpoint blocks are a SEPARATE
-            # resource clearCache() cannot touch — DataFrame.unpersist() is
-            # a no-op for them.) Double release is harmless: the registries
-            # clear their handles.
-            spark.catalog.clearCache()
-            _ckpt.release_checkpoints()
-            _cache.release_caches()  # drop the (now-unpersisted) handles
 
     total = round(sum(timings.values()), 3)
     # The r1-r3 30-query headline set: the ONLY total that is comparable

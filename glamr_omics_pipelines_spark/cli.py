@@ -69,21 +69,28 @@ def cmd_warehouse_build(args) -> int:
     spark = _spark(args)
     from glamr_omics_pipelines_spark.pipelines import warehouse_build
     if args.demo:
+        import pandas as pd
         from glamr_omics_pipelines_spark import fixtures
+
+        def local(rows):  # pandas-built: a LocalRelation the DAG can
+            # fingerprint, with the schema a list of dicts infers
+            schema = spark.createDataFrame(rows).schema
+            return spark.createDataFrame(
+                pd.DataFrame(rows, columns=schema.names), schema)
         taxonomy = fixtures.make_taxonomy()
         contigs = fixtures.make_contigs()
         checkm, gtdb, drep, _ = fixtures.make_bins(contigs)
         mapping, lookup, index = fixtures.make_uniref_mapping(taxonomy)
         frames = {
-            "tax_info": spark.createDataFrame(taxonomy),
-            "checkm": spark.createDataFrame(checkm),
-            "gtdb": spark.createDataFrame(gtdb),
-            "drep": spark.createDataFrame(drep),
-            "kofam": spark.createDataFrame(fixtures.make_kofam(contigs)),
-            "read_counts": spark.createDataFrame(fixtures.make_read_counts()),
-            "read_mapping": spark.createDataFrame(mapping),
-            "uniref_lookup": spark.createDataFrame(lookup),
-            "uniref_index": spark.createDataFrame(index),
+            "tax_info": local(taxonomy),
+            "checkm": local(checkm),
+            "gtdb": local(gtdb),
+            "drep": local(drep),
+            "kofam": local(fixtures.make_kofam(contigs)),
+            "read_counts": local(fixtures.make_read_counts()),
+            "read_mapping": local(mapping),
+            "uniref_lookup": local(lookup),
+            "uniref_index": local(index),
         }
         rows = fixtures.make_bracken_counts(taxonomy)
         bracken_glob = fixtures.write_bracken_tree(
@@ -113,7 +120,7 @@ def cmd_query(args) -> int:
     qs = mod.queries()
     if args.name not in qs:
         raise SystemExit(f"unknown query {args.name!r}; see list-queries")
-    from glamr_omics_pipelines_spark.operators import _cache, _ckpt
+    from glamr_omics_pipelines_spark.session import release
     spark = _spark(args)
     try:
         df = qs[args.name](spark, args.sf_dir)
@@ -126,9 +133,7 @@ def cmd_query(args) -> int:
         # operators persist() and localCheckpoint() intermediates their lazy
         # API cannot release; free them on every path so repeated CLI
         # queries in one session don't accumulate blocks or handles
-        spark.catalog.clearCache()
-        _ckpt.release_checkpoints()
-        _cache.release_caches()
+        release(spark)
     return 0
 
 

@@ -13,6 +13,7 @@ Everything is seeded (random.Random(67)) and tiny: 3 samples, 2 kingdoms →
 from __future__ import annotations
 
 import os
+import pathlib
 import random
 
 SAMPLES = ["samp_T1", "samp_T2", "samp_T3"]
@@ -89,20 +90,27 @@ def make_bracken_counts(taxonomy: list[dict]) -> list[dict]:
     return rows
 
 
+def _write_text(path: str, lines: list[str]) -> None:
+    """Write ``lines`` unless ``path`` already holds them, so a regenerated
+    input keeps its mtime (the warehouse DAG's up-to-date check)."""
+    f, text = pathlib.Path(path), "".join(lines)
+    if not f.exists() or f.read_text() != text:
+        f.write_text(text)
+
+
 def write_bracken_tree(root: str, rows: list[dict]) -> str:
     """Reference layout: {root}/{sample}/bracken_{db}.tsv, headerless
     (merge_bracken.R:39-58 reads these by glob)."""
     for sample in SAMPLES:
         os.makedirs(os.path.join(root, sample), exist_ok=True)
         for db in ["gtdb", "refseq"]:
-            path = os.path.join(root, sample, f"bracken_{db}.tsv")
-            with open(path, "w") as f:
-                for r in rows:
-                    if r["sample"] == sample and r["database"] == db:
-                        f.write("\t".join(str(r[c]) for c in
-                                          ["percent_abund", "count_w_subtax",
-                                           "count_direct", "rank", "tax_id",
-                                           "name"]) + "\n")
+            _write_text(
+                os.path.join(root, sample, f"bracken_{db}.tsv"),
+                ["\t".join(str(r[c]) for c in
+                           ["percent_abund", "count_w_subtax", "count_direct",
+                            "rank", "tax_id", "name"]) + "\n"
+                 for r in rows
+                 if r["sample"] == sample and r["database"] == db])
     return os.path.join(root, "*", "bracken_*.tsv")
 
 
@@ -122,25 +130,25 @@ def make_gene_rpkm_files(root: str, contigs: list[dict]) -> str:
     rng = _rng()
     os.makedirs(root, exist_ok=True)
     for sample in SAMPLES:
-        path = os.path.join(root, f"{sample}_genes.rpkm")
         sc = [c for c in contigs if c["sample"] == sample][:30]
-        with open(path, "w") as f:
-            for c in ["#File", "#Reads", "#Mapped", "#RefSequences"]:
-                f.write(f"{c}\t_\n")
-            f.write("#Name\tLength\tBases\tCoverage\tReads\tRPKM\tFrags\tFPKM\n")
-            for c in sc:
-                for k in range(1, rng.randint(2, 5)):
-                    left = rng.randint(1, 5000)
-                    right = left + rng.randint(90, 2400)
-                    header = (f"{c['contig']}_{k} # {left} # {right} # 1 # "
-                              f"ID={k}_{k};partial=00;start_type=ATG;"
-                              f"rbs_motif=None;rbs_spacer=None;"
-                              f"gc_cont={round(rng.uniform(0.3, 0.7), 3)}")
-                    fpkm = round(rng.uniform(0.5, 800.0), 4)
-                    f.write(f"{header}\t{right - left + 1}\t{rng.randint(100, 9000)}"
-                            f"\t{round(rng.uniform(0.1, 60), 4)}\t{rng.randint(1, 900)}"
-                            f"\t{round(rng.uniform(0.1, 500), 4)}\t{rng.randint(0, 400)}"
-                            f"\t{fpkm}\n")
+        lines = [f"{c}\t_\n" for c in
+                 ["#File", "#Reads", "#Mapped", "#RefSequences"]]
+        lines.append("#Name\tLength\tBases\tCoverage\tReads\tRPKM\tFrags\tFPKM\n")
+        for c in sc:
+            for k in range(1, rng.randint(2, 5)):
+                left = rng.randint(1, 5000)
+                right = left + rng.randint(90, 2400)
+                header = (f"{c['contig']}_{k} # {left} # {right} # 1 # "
+                          f"ID={k}_{k};partial=00;start_type=ATG;"
+                          f"rbs_motif=None;rbs_spacer=None;"
+                          f"gc_cont={round(rng.uniform(0.3, 0.7), 3)}")
+                fpkm = round(rng.uniform(0.5, 800.0), 4)
+                lines.append(
+                    f"{header}\t{right - left + 1}\t{rng.randint(100, 9000)}"
+                    f"\t{round(rng.uniform(0.1, 60), 4)}\t{rng.randint(1, 900)}"
+                    f"\t{round(rng.uniform(0.1, 500), 4)}\t{rng.randint(0, 400)}"
+                    f"\t{fpkm}\n")
+        _write_text(os.path.join(root, f"{sample}_genes.rpkm"), lines)
     return os.path.join(root, "*_genes.rpkm")
 
 

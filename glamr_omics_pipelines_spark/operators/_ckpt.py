@@ -16,19 +16,13 @@ The working release path is the RDD handle inside the checkpoint's
 ``LogicalRDD`` plan node: ``df._jdf.queryExecution().analyzed().rdd()
 .unpersist()`` frees the blocks immediately.
 
-Usage mirrors ``_cache``:
-
-    from glamr_omics_pipelines_spark.operators import _ckpt
-    ck = _ckpt.checkpoint(df)          # localCheckpoint(eager=True) + register
-    _ckpt.free(prev)                   # free one round's blocks NOW
-    ...
-    _ckpt.release_checkpoints()        # library consumer: free everything
-
-Freeing is safe once no live DataFrame needs the blocks: a freed
-checkpoint does NOT recompute — reading it raises
-CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — so operators free only rounds they
-have already replaced, and final results are freed only by the consumer
-via ``release_checkpoints()`` (bench.py does this between queries).
+Usage mirrors ``_cache``: ``checkpoint(df)`` materializes and registers,
+and ``free(prev)`` frees one replaced round now. Freeing is safe once no
+live DataFrame needs the blocks: a freed checkpoint does NOT recompute —
+reading it raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — so operators free
+only rounds they have already replaced, and final results are freed only
+by the consumer via ``session.release(spark)`` (bench.py does this
+between runs).
 """
 
 from __future__ import annotations

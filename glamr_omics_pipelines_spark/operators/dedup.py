@@ -510,10 +510,27 @@ def _cc_local(half: DataFrame) -> DataFrame:
     return half.coalesce(1).mapInPandas(kernel, out_schema)
 
 
+def _cc_front(pairs: DataFrame, id_a: str,
+              id_b: str) -> tuple[DataFrame, DataFrame | None]:
+    """Both CC operators' front: one EAGER cut of the upstream pair plan
+    and the ``_LOCAL_CC_MAX_PAIRS`` gate (its count reads the checkpoint).
+    Returns (checkpointed (u, v) pairs, the :func:`_cc_local` result or
+    None when the pairs do not fit one task)."""
+    half = _ckpt.checkpoint(
+        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")))
+    if half.count() <= _LOCAL_CC_MAX_PAIRS:
+        return half, _cc_local(half)
+    return half, None
+
+
+def _symmetric(half: DataFrame) -> DataFrame:
+    """Both directions of every (u, v) edge, deduplicated."""
+    return half.unionByName(
+        half.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
+
+
 def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-                 max_iter: int = 20,
-                 broadcast_labels: bool | None = None,
-                 local_fold: bool | None = None) -> DataFrame:
+                 max_iter: int = 20) -> DataFrame:
     """Connected components over near-dup pairs → (id, cluster_id) with
     cluster_id = min doc id in the component. The step every dedup pipeline
     needs after pair generation (X2-X5 emit PAIRS; keeping one survivor per
@@ -528,43 +545,37 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     rounds on any diameter); the reference point is the classic CC-over-
     candidate-pairs stage of web-scale dedup pipelines.
 
-    ``broadcast_labels`` (None = auto at ≤1M nodes): the label frame is
-    node-grain, so when it fits a broadcast each round joins it into the
-    edge scan and the neighbor-min back into the labels without shuffling
-    either side — measured −12% on a 150-pair graph (interleaved
-    min-of-5), identical labels. Past the ceiling the shuffle join is the
-    scale-safe form.
+    Label broadcast (at ≤ ``_BROADCAST_LABELS_MAX_NODES`` nodes): the
+    label frame is node-grain, so when it fits a broadcast each round
+    joins it into the edge scan and the neighbor-min back into the labels
+    without shuffling either side — measured −12% on a 150-pair graph
+    (interleaved min-of-5), identical labels. Past the ceiling the
+    shuffle join is the scale-safe form.
 
-    ``local_fold`` (None = auto at ≤ ``_LOCAL_CC_MAX_PAIRS`` pairs): when
-    the pair list fits one task, skip the loop entirely and run
-    single-task union-find (:func:`_cc_local`) — identical labels
-    (min-label is order-independent integer math), zero per-round
-    barriers. The pair count gates it via the same eager checkpoint the
-    loop needed anyway, so the upstream pipeline still executes once.
+    Local fold (at ≤ ``_LOCAL_CC_MAX_PAIRS`` pairs): when the pair list
+    fits one task, skip the loop entirely and run single-task union-find
+    (:func:`_cc_local`) — identical labels (min-label is order-independent
+    integer math), zero per-round barriers.
+
+    Both distributed forms stay because each wins on some input (local
+    fold off, ``local[4]``, min of 3): this loop vs star took 1.50 vs
+    2.75 s on the sf0.1 ``dup_clusters`` pairs and 3.56 vs 7.64 s on a
+    150k-pair shallow graph (identical labels); on a 40-node chain this
+    loop raises at ``max_iter=20`` while star converges in 7.51 s.
     """
-    half = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    # EAGER lineage cut on the RAW pair list: the pair-generation plan
-    # upstream (typically a full LSH+verify pipeline) executes exactly once
-    # here, and the count that gates the local path reads the checkpoint.
-    half = _ckpt.checkpoint(half)
-    if local_fold is None:
-        local_fold = half.count() <= _LOCAL_CC_MAX_PAIRS
-    if local_fold:
-        return _cc_local(half)
-    edges = _ckpt.checkpoint(
-        half.unionByName(half.select(F.col("v").alias("u"),
-                                     F.col("u").alias("v")))
-        .distinct())
+    half, local = _cc_front(pairs, id_a, id_b)
+    if local is not None:
+        return local
+    edges = _ckpt.checkpoint(_symmetric(half))
     _ckpt.free(half)  # the symmetric edge set carries everything the loop needs
     labels = _ckpt.checkpoint(
         edges.select(F.col("u").alias("id")).distinct()
         .withColumn("label", F.col("id")))
     labels_ck = labels
-    if broadcast_labels is None:
-        # labels are NODE-grain (docs touched by any near-dup pair) — when
-        # they fit a broadcast, each round's two label joins skip the edge
-        # shuffle entirely (cheap count: labels is already materialized)
-        broadcast_labels = labels.count() <= _BROADCAST_LABELS_MAX_NODES
+    # labels are NODE-grain (docs touched by any near-dup pair) — when
+    # they fit a broadcast, each round's two label joins skip the edge
+    # shuffle entirely (cheap count: labels is already materialized)
+    broadcast_labels = labels.count() <= _BROADCAST_LABELS_MAX_NODES
     for _ in range(max_iter):
         label_side = F.broadcast(labels) if broadcast_labels else labels
         nbr_min = (edges.join(label_side, edges.v == labels.id)
@@ -710,8 +721,7 @@ def embedding_cosine_dups(emb: DataFrame, id_col: str, vec_col: str,
 
 
 def dup_clusters_star(pairs: DataFrame, id_a: str = "id_a",
-                      id_b: str = "id_b", max_iter: int = 25,
-                      local_fold: bool | None = None) -> DataFrame:
+                      id_b: str = "id_b", max_iter: int = 25) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
     the web-scale formulation ``dup_clusters`` documents as its
@@ -725,28 +735,21 @@ def dup_clusters_star(pairs: DataFrame, id_a: str = "id_a",
     case. Each phase is one groupBy + one join on node ids carrying two
     longs per edge; per-round plans are pinned constant-size with eager
     localCheckpoints exactly like dup_clusters.
+
+    Same ``_LOCAL_CC_MAX_PAIRS`` local fold as ``dup_clusters``, and both
+    distributed forms stay: this one is ~2× slower on shallow graphs but
+    alone converges on long chains (measured in ``dup_clusters``).
     """
+    raw, local = _cc_front(pairs, id_a, id_b)
+    if local is not None:
+        return local
     # node set from the RAW pairs (a node whose only edge is a self-loop
     # must still get a self-label, matching dup_clusters' contract); the
     # edge set then drops self-loops
-    raw = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    # one eager lineage cut of the (expensive) upstream pair plan; the
-    # local-path gate count reads it for free (union-find handles
-    # self-loops natively — a self-loop node unions with itself and
-    # self-labels — so the local form needs no node/edge split)
-    raw = _ckpt.checkpoint(raw)
-    if local_fold is None:
-        local_fold = raw.count() <= _LOCAL_CC_MAX_PAIRS
-    if local_fold:
-        return _cc_local(raw)
     nodes = _ckpt.checkpoint(
         raw.select(F.col("u").alias("id"))
         .unionByName(raw.select(F.col("v").alias("id"))).distinct())
-    e = raw.filter(F.col("u") != F.col("v"))
-    edges = _ckpt.checkpoint(
-        e.unionByName(e.select(F.col("v").alias("u"),
-                               F.col("u").alias("v")))
-        .distinct())
+    edges = _ckpt.checkpoint(_symmetric(raw.filter(F.col("u") != F.col("v"))))
     _ckpt.free(raw)
 
     def large_star(ed: DataFrame) -> DataFrame:
@@ -769,16 +772,9 @@ def dup_clusters_star(pairs: DataFrame, id_a: str = "id_a",
     for _ in range(max_iter):
         after_large = _ckpt.checkpoint(large_star(edges))
         # re-symmetrize for the next phase's neighborhood views
-        sym = (after_large.unionByName(
-            after_large.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .distinct())
-        after_small = _ckpt.checkpoint(small_star(sym))
+        after_small = _ckpt.checkpoint(small_star(_symmetric(after_large)))
         _ckpt.free(after_large)
-        new_sym = _ckpt.checkpoint(
-            after_small.unionByName(
-                after_small.select(F.col("v").alias("u"),
-                                   F.col("u").alias("v")))
-            .distinct())
+        new_sym = _ckpt.checkpoint(_symmetric(after_small))
         _ckpt.free(after_small)
         changed = (new_sym.exceptAll(edges).limit(1).count()
                    + edges.exceptAll(new_sym).limit(1).count())

@@ -191,9 +191,7 @@ def _pagerank_local(e: DataFrame, damping: float,
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              weight_col: str | None = "weight", iterations: int = 10,
-             damping: float = 0.85,
-             broadcast_ranks: bool | None = None,
-             local_fold: bool | None = None) -> DataFrame:
+             damping: float = 0.85) -> DataFrame:
     """Weighted PageRank over a directed edge list, fixed ``iterations``:
 
         rank ← (1−d)/N + d · Σ_in rank_src · w / wout_src
@@ -208,22 +206,22 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     Output: (node, rank). Lineage is truncated per-iteration with eager
     localCheckpoints.
 
-    ``local_fold`` (None = auto at ≤ ``_LOCAL_FOLD_MAX_EDGES`` edges):
-    when the edge list fits one task, run all iterations as a single-task
-    numpy fold (:func:`_pagerank_local`) — zero supersteps, zero
+    Local fold (at ≤ ``_LOCAL_FOLD_MAX_EDGES`` edges): when the edge list
+    fits one task, run all iterations as a single-task numpy fold
+    (:func:`_pagerank_local`) — zero supersteps, zero
     broadcasts/checkpoints; above the ceiling the superstep loop below is
     the scale path.
 
-    Superstep join strategy (``broadcast_ranks``): ranks are NODE-grain —
-    tiny next to the edge set on any real graph. When the node count is
-    within ``_BROADCAST_RANKS_MAX_NODES`` (or the caller forces True),
-    each iteration broadcasts the rank frame into the edge join and the
-    contribution frame back into the base join, leaving ONE exchange per
-    superstep (the partial-aggregated contribution shuffle) and never
-    moving the edge side at all — measured −24% end-to-end at sf0.1
-    (interleaved min-of-4: 14.3 → 11.0 s, identical values to 1e-12).
-    Above the ceiling (None → auto-off) the shuffle-join form is the
-    scale-safe shape: both sides hash-partitioned, edges cache-resident.
+    Superstep join strategy: ranks are NODE-grain — tiny next to the edge
+    set on any real graph. When the node count is within
+    ``_BROADCAST_RANKS_MAX_NODES``, each iteration broadcasts the rank
+    frame into the edge join and the contribution frame back into the
+    base join, leaving ONE exchange per superstep (the partial-aggregated
+    contribution shuffle) and never moving the edge side at all —
+    measured −24% end-to-end at sf0.1 (interleaved min-of-4: 14.3 → 11.0
+    s, identical values to 1e-12). Above the ceiling the shuffle-join
+    form is the scale-safe shape: both sides hash-partitioned, edges
+    cache-resident.
     """
     w = (F.col(weight_col).cast("double") if weight_col is not None
          else F.lit(1.0))
@@ -242,8 +240,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # Result: every iteration's joins find the big edge side already
     # clustered; only the (small) rank frame and the partial-aggregated
     # contributions move per superstep, never the edges — the Pregel
-    # edge-partition-reuse layout. Caches are registered for release via
-    # _cache.release_caches().
+    # edge-partition-reuse layout.
     # Cache the edge projection before anything fans out from it: the
     # pre-loop scaffold reads `e` four times (nodes union twice, outdeg,
     # rated) and each read would otherwise recompute whatever produced the
@@ -252,9 +249,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # as soon as `rated` (the loop's own cache) is built.
     e = _cache.register(e)
     n_edges = e.count()
-    if local_fold is None:
-        local_fold = n_edges <= _LOCAL_FOLD_MAX_EDGES
-    if local_fold:
+    if n_edges <= _LOCAL_FOLD_MAX_EDGES:
         # the whole post-edges computation is ONE narrow task: no
         # supersteps, no broadcast builds, no checkpoints — the edge
         # cache (materialized by the gate count just taken) feeds the
@@ -275,10 +270,9 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
         .distinct())
-    if broadcast_ranks is None:
-        # node count gates the broadcast form; counting here materializes
-        # the nodes cache that base.count() below would pay for anyway
-        broadcast_ranks = nodes.count() <= _BROADCAST_RANKS_MAX_NODES
+    # node count gates the broadcast form; counting here materializes
+    # the nodes cache that base.count() below would pay for anyway
+    broadcast_ranks = nodes.count() <= _BROADCAST_RANKS_MAX_NODES
     n_total = F.broadcast(nodes.agg(F.count(F.lit(1)).alias("_n")))
     outdeg = e.groupBy("_src").agg(F.sum("_w").alias("_wout"))
     # contribution rate per edge is iteration-invariant: precompute w/wout
@@ -300,7 +294,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # nodes, outdeg, rated and base are all materialized now — the edge
     # input cache served its four pre-loop scans and can go before the
     # loop allocates anything else.
-    e.unpersist()
+    _cache.free(e)
     ranks = base.select("node", F.col("_init").alias("rank"))
     # Checkpoint cadence: every 3rd superstep. Supersteps chain lazily
     # between eager localCheckpoints — fewer materialization barriers per
@@ -513,9 +507,7 @@ def _k_core_local(half: DataFrame, k: int, rounds: int) -> DataFrame:
 
 
 def k_core(edges: DataFrame, src: str = "src", dst: str = "dst",
-           k: int = 3, rounds: int = 12,
-           broadcast_alive: bool | None = None,
-           local_fold: bool | None = None) -> DataFrame:
+           k: int = 3, rounds: int = 12) -> DataFrame:
     """k-core decomposition (fixed-round peeling): repeatedly drop nodes
     whose degree in the surviving subgraph is < k; what remains is the
     k-core — the dense backbone of a co-occurrence network (community
@@ -530,11 +522,11 @@ def k_core(edges: DataFrame, src: str = "src", dst: str = "dst",
     is what localCheckpoint pins between rounds. O(rounds) passes, each
     O(E) — the standard distributed peel.
 
-    ``broadcast_alive`` (None = auto at ≤1M frontier nodes, the pagerank/
-    dup_clusters gate): the frontier is node-grain and only SHRINKS, so
-    when the initial frontier fits a broadcast both per-round semi-joins
-    run broadcast-side and the cached edge list never re-shuffles; past
-    the ceiling the hash-partitioned semi-joins are the scale shape.
+    Frontier broadcast (at ≤ ``_BROADCAST_RANKS_MAX_NODES``, the pagerank
+    gate): the frontier is node-grain and only SHRINKS, so when the
+    initial frontier fits a broadcast both per-round semi-joins run
+    broadcast-side and the cached edge list never re-shuffles; past the
+    ceiling the hash-partitioned semi-joins are the scale shape.
     """
     half = edges.select(F.least(src, dst).alias("u"),
                         F.greatest(src, dst).alias("v"))
@@ -546,9 +538,7 @@ def k_core(edges: DataFrame, src: str = "src", dst: str = "dst",
     # ROUND distributed (guide §2.4: remove shuffles outright). The
     # distributed loop below remains the 100 TB path.
     sym_half = _cache.register(sym_half)
-    if local_fold is None:
-        local_fold = sym_half.count() <= _LOCAL_FOLD_MAX_EDGES
-    if local_fold:
+    if sym_half.count() <= _LOCAL_FOLD_MAX_EDGES:
         return _k_core_local(sym_half, k, rounds)
     sym = _cache.register(
         sym_half.unionByName(sym_half.select(F.col("v").alias("u"),
@@ -561,11 +551,10 @@ def k_core(edges: DataFrame, src: str = "src", dst: str = "dst",
     # the count above materialized sym (which read sym_half's cache twice,
     # its purpose on this path) — drop the half-edge cache now so the peel
     # holds ONE copy of the edge list, not 1.5x
-    sym_half.unpersist()
-    if broadcast_alive is None:
-        # the frontier only shrinks, so gating on the initial count (free:
-        # just taken for the early-exit ledger) covers every round
-        broadcast_alive = n_prev <= _BROADCAST_RANKS_MAX_NODES
+    _cache.free(sym_half)
+    # the frontier only shrinks, so gating on the initial count (free:
+    # just taken for the early-exit ledger) covers every round
+    broadcast_alive = n_prev <= _BROADCAST_RANKS_MAX_NODES
 
     def _alive_side(col_name):
         side = alive.withColumnRenamed("node", col_name)

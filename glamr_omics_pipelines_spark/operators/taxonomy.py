@@ -92,15 +92,31 @@ def _rank_dict(df: DataFrame, path_col: str) -> DataFrame:
         d.withColumn("_rk", F.dense_rank().over(w).cast("long")))
 
 
-def _fetch_paths(agg: DataFrame, dic: DataFrame) -> DataFrame:
-    """Join the min/max ranks back to their paths (broadcast, left —
-    a group whose every path was NULL keeps NULL ``_mn``/``_mx``,
-    exactly the direct form's output for that group)."""
+def _rank_proxy(df: DataFrame,
+                path_col: str) -> tuple[DataFrame, DataFrame | None]:
+    """The LCA aggregates' one scale gate: above ``_RANK_PROXY_MIN_BYTES``
+    of input, ``df`` with each path's dense rank joined in as ``_rk``, and
+    the rank dictionary; below it ``(df, None)`` — the direct form."""
+    if _est_plan_bytes(df) < _RANK_PROXY_MIN_BYTES:
+        return df, None
+    dic = _rank_dict(df, path_col)
+    return df.join(F.broadcast(dic), F.col(path_col) == F.col("_path"),
+                   "left"), dic
+
+
+def _fetch_paths(agg: DataFrame, dic: DataFrame | None) -> DataFrame:
+    """Swap the min/max ranks in ``_mn``/``_mx`` for their paths
+    (broadcast, left — a group whose every path was NULL keeps NULL
+    ``_mn``/``_mx``, exactly the direct form's output for that group).
+    Without a dictionary (the direct form) they hold paths already."""
+    if dic is None:
+        return agg
     fetch_mn = dic.select(F.col("_rk").alias("_mnr"),
                           F.col("_path").alias("_mn"))
     fetch_mx = dic.select(F.col("_rk").alias("_mxr"),
                           F.col("_path").alias("_mx"))
-    return (agg.join(F.broadcast(fetch_mn), "_mnr", "left")
+    return (agg.withColumnsRenamed({"_mn": "_mnr", "_mx": "_mxr"})
+            .join(F.broadcast(fetch_mn), "_mnr", "left")
             .join(F.broadcast(fetch_mx), "_mxr", "left")
             .drop("_mnr", "_mxr"))
 
@@ -149,11 +165,11 @@ def closure_from_parent_edges(edges: DataFrame, child: str = "child",
     runs on the driver but the data never does.
 
     EAGER: the returned closure is materialized (and left persisted —
-    released via ``_cache.release_caches()`` or ``.unpersist()``) before the
-    per-iteration frontier caches are dropped; previously every frontier
-    stayed pinned for the session. Closures are dimension-scale (#nodes ×
-    depth) by design, so pinning the result, not the intermediates, is the
-    right trade.
+    released via ``session.release(spark)`` or ``.unpersist()``) before the
+    per-iteration frontier caches are freed, on every path including a
+    non-converging one. Closures are dimension-scale (#nodes × depth) by
+    design, so pinning the result, not the intermediates, is the right
+    trade.
     """
     from glamr_omics_pipelines_spark.operators import _cache
     # self-rows for EVERY node — children AND parents; a root appears only on
@@ -170,31 +186,33 @@ def closure_from_parent_edges(edges: DataFrame, child: str = "child",
                             F.lit(1).alias("depth"))
     e = edges.select(F.col(child).alias("_c"), F.col(parent).alias("_p"))
     frontiers = []
-    converged = False
-    for _ in range(max_depth):
-        closure = closure.unionByName(frontier)
-        nxt = (frontier.join(e, frontier.ancestor == e._c, "inner")
-               .select("descendant", F.col("_p").alias("ancestor"),
-                       (F.col("depth") + 1).alias("depth")))
-        frontier = nxt.persist()
-        frontiers.append(frontier)
-        if frontier.isEmpty():
-            converged = True
-            break
-    if not converged and not frontier.isEmpty():
-        # a silent break here would return a TRUNCATED closure and
-        # subtree_rollup would undercount deep ancestors with no symptom —
-        # fail loudly instead (a >max_depth tree or a parent-edge cycle)
+    try:
+        for _ in range(max_depth):
+            closure = closure.unionByName(frontier)
+            frontier = _cache.register(
+                frontier.join(e, frontier.ancestor == e._c, "inner")
+                .select("descendant", F.col("_p").alias("ancestor"),
+                        (F.col("depth") + 1).alias("depth")))
+            frontiers.append(frontier)
+            if frontier.isEmpty():
+                break
+        else:
+            # a silent break here would return a TRUNCATED closure and
+            # subtree_rollup would undercount deep ancestors with no
+            # symptom — fail loudly instead (a >max_depth tree or a
+            # parent-edge cycle)
+            if not frontier.isEmpty():
+                raise ValueError(
+                    f"closure_from_parent_edges did not converge in "
+                    f"{max_depth} levels: tree deeper than max_depth, or the "
+                    f"edges contain a cycle; raise max_depth or break the "
+                    f"cycle")
+        out = _cache.register(
+            closure.dropDuplicates(["ancestor", "descendant"]))
+        out.count()  # materialize while the frontier caches are still live
+    finally:
         for f in frontiers:
-            f.unpersist()
-        raise ValueError(
-            f"closure_from_parent_edges did not converge in {max_depth} "
-            f"levels: tree deeper than max_depth, or the edges contain a "
-            f"cycle; raise max_depth or break the cycle")
-    out = _cache.register(closure.dropDuplicates(["ancestor", "descendant"]))
-    out.count()  # materialize while the frontier caches are still live
-    for f in frontiers:
-        f.unpersist()
+            _cache.free(f)
     return out
 
 
@@ -227,8 +245,7 @@ def rank_ladder_rollup(df: DataFrame, rank_cols: list[str], agg_exprs: list) -> 
 
 
 def lca_aggregate(df: DataFrame, group_cols: list[str], path_col: str,
-                  out_path: str = "lca_path",
-                  rank_proxy: bool | None = None) -> DataFrame:
+                  out_path: str = "lca_path") -> DataFrame:
     """Lowest-common-ancestor lineage per group (SURVEY A11, MakeLCA).
 
     Exact and shuffle-light: the common prefix of ALL paths in a group equals
@@ -237,7 +254,7 @@ def lca_aggregate(df: DataFrame, group_cols: list[str], path_col: str,
     state; the prefix is computed with higher-order array functions — no UDF,
     no collect_list.
 
-    ``rank_proxy`` (None = auto above ``_RANK_PROXY_MIN_BYTES``): array
+    Rank proxy (above ``_RANK_PROXY_MIN_BYTES`` of input): array
     min/max buffers are not hash-aggregable — the direct form plans a
     SortAggregate that double-sorts around its exchange AND ships the
     lineage arrays through it. The proxy form maps each distinct path to a
@@ -247,18 +264,11 @@ def lca_aggregate(df: DataFrame, group_cols: list[str], path_col: str,
     identical (agreement-tested, incl. NULL paths); at local SFs the gate
     never fires and the plan is byte-identical to the direct form.
     """
-    if rank_proxy is None:
-        rank_proxy = _est_plan_bytes(df) >= _RANK_PROXY_MIN_BYTES
-    if rank_proxy:
-        dic = _rank_dict(df, path_col)
-        fact = df.join(F.broadcast(dic), F.col(path_col) == F.col("_path"),
-                       "left")
-        agg = (fact.groupBy(*group_cols)
-               .agg(F.min("_rk").alias("_mnr"), F.max("_rk").alias("_mxr")))
-        return _common_prefix(_fetch_paths(agg, dic), out_path)
-    mn, mx = F.min(path_col).alias("_mn"), F.max(path_col).alias("_mx")
-    agg = df.groupBy(*group_cols).agg(mn, mx)
-    return _common_prefix(agg, out_path)
+    fact, dic = _rank_proxy(df, path_col)
+    v = path_col if dic is None else "_rk"
+    agg = fact.groupBy(*group_cols).agg(F.min(v).alias("_mn"),
+                                        F.max(v).alias("_mx"))
+    return _common_prefix(_fetch_paths(agg, dic), out_path)
 
 
 def _common_prefix(agg: DataFrame, out_path: str,
@@ -295,13 +305,12 @@ def _common_prefix(agg: DataFrame, out_path: str,
 
 def kingdom_priority_lca(df: DataFrame, group_cols: list[str], path_col: str,
                          kingdom_col: str, priority: list[str],
-                         out_path: str = "lca_path",
-                         rank_proxy: bool | None = None) -> DataFrame:
+                         out_path: str = "lca_path") -> DataFrame:
     """MakeLCA's kingdom-priority buckets (AnnotateContigs.pl:690-696):
     compute the LCA within the highest-priority kingdom present in the group
     (e.g. G > I > B), ignoring hits from lower-priority kingdoms.
 
-    ``rank_proxy``: same scale gate and dictionary as ``lca_aggregate`` —
+    Rank proxy: same scale gate and dictionary as ``lca_aggregate`` —
     the struct aggregates below carry ``(int, long)`` instead of
     ``(int, array)``, becoming hash-aggregable and array-free through the
     exchange. Struct ordering is field-wise, and rank order == path order
@@ -312,33 +321,19 @@ def kingdom_priority_lca(df: DataFrame, group_cols: list[str], path_col: str,
                           for x in (F.lit(k), F.lit(i))])
     ranked = df.withColumn("_prio", F.coalesce(prio[F.col(kingdom_col)],
                                                F.lit(len(priority))))
-    if rank_proxy is None:
-        rank_proxy = _est_plan_bytes(df) >= _RANK_PROXY_MIN_BYTES
     # ONE shuffle, no join-back: struct ordering is lexicographic, so
     #   min(struct(prio, path))  = min path within the best (lowest) priority
     #   max(struct(-prio, path)) = max path within that same priority
     # — both partially aggregable, carrying the priority filter inside the
     # aggregate itself instead of a groupBy + equi-join + second groupBy.
-    if rank_proxy:
-        dic = _rank_dict(ranked, path_col)
-        fact = ranked.join(F.broadcast(dic),
-                           F.col(path_col) == F.col("_path"), "left")
-        mn_s = F.min(F.struct(F.col("_prio").alias("p"),
-                              F.col("_rk").alias("v")))
-        mx_s = F.max(F.struct((-F.col("_prio")).alias("p"),
-                              F.col("_rk").alias("v")))
-        agg = (fact.groupBy(*group_cols)
-               .agg(mn_s.getField("v").alias("_mnr"),
-                    mx_s.getField("v").alias("_mxr")))
-        return _common_prefix(_fetch_paths(agg, dic), out_path)
-    mn_s = F.min(F.struct(F.col("_prio").alias("p"),
-                          F.col(path_col).alias("v")))
-    mx_s = F.max(F.struct((-F.col("_prio")).alias("p"),
-                          F.col(path_col).alias("v")))
-    agg = (ranked.groupBy(*group_cols)
+    fact, dic = _rank_proxy(ranked, path_col)
+    v = F.col(path_col if dic is None else "_rk").alias("v")
+    mn_s = F.min(F.struct(F.col("_prio").alias("p"), v))
+    mx_s = F.max(F.struct((-F.col("_prio")).alias("p"), v))
+    agg = (fact.groupBy(*group_cols)
            .agg(mn_s.getField("v").alias("_mn"),
                 mx_s.getField("v").alias("_mx")))
-    return _common_prefix(agg, out_path)
+    return _common_prefix(_fetch_paths(agg, dic), out_path)
 
 
 def ncbi_majority_vote(votes: DataFrame, group_cols: list[str],

@@ -96,3 +96,13 @@ def get_spark(app_name: str = "glamr-omics-spark", master: str | None = None,
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
+
+def release(spark: SparkSession) -> None:
+    """Free what a query left materialized: the SQL cache, the operators'
+    registered localCheckpoints (which ``clearCache`` cannot free) and
+    their persist handles. Call it once results are collected or written,
+    in a ``finally`` so a failing query frees them too."""
+    from glamr_omics_pipelines_spark.operators import _cache, _ckpt
+    spark.catalog.clearCache()
+    _ckpt.release_checkpoints()
+    _cache.release_caches()

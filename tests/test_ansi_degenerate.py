@@ -234,6 +234,22 @@ def test_closure_raises_on_depth_overflow(spark):
     assert full.count() == 7 + sum(range(1, 7))  # self rows + all ancestors
 
 
+def test_closure_frees_frontier_caches_when_a_level_fails(spark):
+    """A level whose job fails (here a row that raises) must not leave the
+    frontier persists behind: they are freed on the error path too."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+    from glamr_omics_pipelines_spark.operators import taxonomy
+    spark.catalog.clearCache()
+    edges = (spark.createDataFrame([(i + 1, i) for i in range(6)],
+                                   "child int, parent int")
+             .withColumn("parent", F.when(F.col("child") == 3,
+                                          F.raise_error(F.lit("boom")))
+                         .otherwise(F.col("parent"))))
+    with _pytest.raises(Exception, match="boom"):
+        taxonomy.closure_from_parent_edges(edges, "child", "parent")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
 def test_embedding_candidates_path_has_no_nested_loop_join(spark):
     from glamr_omics_pipelines_spark.operators import dedup
     emb = spark.createDataFrame(

@@ -21,6 +21,22 @@ def test_fixtures_and_warehouse_demo(spark, tmp_path, capsys):
     assert counts["bracken"] > 0 and counts["tpm"] > 0
 
 
+def test_warehouse_demo_rerun_is_up_to_date(spark, tmp_path):
+    """A second ``--demo`` build into the same root reruns no stage: the
+    demo frames are pandas-built LocalRelations, which the DAG
+    fingerprints, and the demo input files keep their mtimes."""
+    from glamr_omics_pipelines_spark.plans.dag import read_ledger
+    argv = ["warehouse-build", "--root", str(tmp_path / "wh"),
+            "--demo", str(tmp_path / "demo")]
+    assert main(argv) == 0
+    n_first = len(read_ledger(str(tmp_path / "wh" / "_run_ledger.jsonl")))
+    assert main(argv) == 0
+    rows = read_ledger(str(tmp_path / "wh" / "_run_ledger.jsonl"))
+    second = rows[n_first:]
+    assert len(second) == n_first == 7
+    assert all(r["up_to_date"] for r in second), second
+
+
 def test_query_and_list(spark, tmp_path, capsys):
     assert main(["list-queries", "--entry", "/root/repo/__spark_entry__.py"]) == 0
     names = dict(line.split("\t") for line in

@@ -190,31 +190,32 @@ def test_simhash_omits_tokenless_docs(spark):
     assert [r["doc_id"] for r in out.collect()] == [1]
 
 
-def test_dup_clusters_raises_on_nonconvergence(spark):
+def test_dup_clusters_raises_on_nonconvergence(spark, monkeypatch):
     import pytest as _pytest
     chain = [(i, i + 1) for i in range(10)]  # diameter 10 > max_iter 2
     df = spark.createDataFrame(chain, ["id_a", "id_b"])
+    # the convergence guard belongs to the distributed loop; the
+    # single-task union-find path (the auto choice at this size) always
+    # converges, so the gate is closed to every pair count
+    monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_PAIRS", 0)
     with _pytest.raises(RuntimeError, match="did not converge"):
-        # local_fold=False: the convergence guard belongs to the
-        # distributed loop; the single-task union-find path (the auto
-        # choice at this size) always converges.
-        dedup.dup_clusters(df, max_iter=2, local_fold=False)
+        dedup.dup_clusters(df, max_iter=2)
 
 
-def test_dup_clusters_local_and_loop_forms_agree(spark):
+def test_dup_clusters_local_and_loop_forms_agree(spark, monkeypatch):
     """The single-task union-find path and the distributed min-label loop
     are two physical plans of the same contract: identical (id, label)
-    sets, including chains, merged components, and self-loops."""
+    sets, including chains, merged components, and self-loops. The
+    distributed forms are forced by closing ``_LOCAL_CC_MAX_PAIRS``."""
     pairs = ([(i, i + 1) for i in range(1, 9)]
              + [(50, 51), (60, 61), (51, 60), (70, 70)])
     df = spark.createDataFrame(pairs, ["id_a", "id_b"])
-    a = sorted(map(tuple, dedup.dup_clusters(df, local_fold=True).collect()))
-    b = sorted(map(tuple, dedup.dup_clusters(df, local_fold=False).collect()))
+    a = sorted(map(tuple, dedup.dup_clusters(df).collect()))
+    c = sorted(map(tuple, dedup.dup_clusters_star(df).collect()))
+    monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_PAIRS", 0)
+    b = sorted(map(tuple, dedup.dup_clusters(df).collect()))
     assert a == b
-    c = sorted(map(tuple,
-                   dedup.dup_clusters_star(df, local_fold=True).collect()))
-    d = sorted(map(tuple,
-                   dedup.dup_clusters_star(df, local_fold=False).collect()))
+    d = sorted(map(tuple, dedup.dup_clusters_star(df).collect()))
     assert c == d
     assert a == c
     assert (70, 70) in a  # self-loop node keeps its self-label
@@ -295,16 +296,17 @@ def test_hash_keyed_variants_match_string_keyed(spark):
         assert a == b, fn.__name__
 
 
-def test_dup_clusters_broadcast_and_shuffle_forms_agree(spark):
-    """broadcast_labels=True/False are two physical plans of the same
+def test_dup_clusters_broadcast_and_shuffle_forms_agree(spark, monkeypatch):
+    """The broadcast and shuffle label joins (forced through
+    ``_BROADCAST_LABELS_MAX_NODES``) are two physical plans of the same
     min-label propagation: identical labels, including on a chain whose
     diameter forces several rounds."""
     pairs = [(i, i + 1) for i in range(1, 9)] + [(50, 51), (60, 61), (51, 60)]
     df = spark.createDataFrame(pairs, ["id_a", "id_b"])
-    a = sorted(map(tuple, dedup.dup_clusters(
-        df, broadcast_labels=True, local_fold=False).collect()))
-    b = sorted(map(tuple, dedup.dup_clusters(
-        df, broadcast_labels=False, local_fold=False).collect()))
+    monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_PAIRS", 0)
+    a = sorted(map(tuple, dedup.dup_clusters(df).collect()))
+    monkeypatch.setattr(dedup, "_BROADCAST_LABELS_MAX_NODES", 0)
+    b = sorted(map(tuple, dedup.dup_clusters(df).collect()))
     assert a == b
     assert {(i, 1) for i in range(1, 10)} <= set(a)
     assert {(50, 50), (51, 50), (60, 50), (61, 50)} <= set(a)

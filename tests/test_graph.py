@@ -94,10 +94,11 @@ def test_association_rules_hand_computed(spark):
                                    min_pair_count=4).count() == 0
 
 
-def test_pagerank_broadcast_and_shuffle_forms_agree(spark):
+def test_pagerank_broadcast_and_shuffle_forms_agree(spark, monkeypatch):
     """The broadcast-ranks superstep (auto for small graphs) and the
     forced shuffle-join form are two physical plans of the SAME recurrence:
-    ranks must agree to float noise on an asymmetric weighted graph."""
+    ranks must agree to float noise on an asymmetric weighted graph. Each
+    form is forced through its gate's threshold."""
     import random
     rng = random.Random(11)
     pairs = []
@@ -106,22 +107,43 @@ def test_pagerank_broadcast_and_shuffle_forms_agree(spark):
         if a != b:
             pairs.append((f"n{a}", f"n{b}", rng.randint(1, 4)))
     e = _edges(spark, pairs)
-    bc = {r.node: r.rank
-          for r in graph.pagerank(e, iterations=6, broadcast_ranks=True,
-                                  local_fold=False).collect()}
-    sh = {r.node: r.rank
-          for r in graph.pagerank(e, iterations=6, broadcast_ranks=False,
-                                  local_fold=False).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(graph, "_LOCAL_FOLD_MAX_EDGES", 0)
+        bc = {r.node: r.rank
+              for r in graph.pagerank(e, iterations=6).collect()}
+        m.setattr(graph, "_BROADCAST_RANKS_MAX_NODES", 0)
+        sh = {r.node: r.rank
+              for r in graph.pagerank(e, iterations=6).collect()}
     assert set(bc) == set(sh)
     for n in bc:
         assert math.isclose(bc[n], sh[n], rel_tol=1e-12, abs_tol=1e-15), n
     # the single-task numpy fold (the auto choice at this size) is a third
     # physical plan of the same recurrence: same agreement bar
     lf = {r.node: r.rank
-          for r in graph.pagerank(e, iterations=6, local_fold=True).collect()}
+          for r in graph.pagerank(e, iterations=6).collect()}
     assert set(lf) == set(bc)
     for n in bc:
         assert math.isclose(lf[n], bc[n], rel_tol=1e-12, abs_tol=1e-15), n
+
+
+def test_pagerank_frees_its_edge_cache_and_handle(spark, monkeypatch):
+    """The distributed pagerank frees its edge-projection persist as soon
+    as the loop's own caches are built, handle included: only the nodes,
+    rated-edge and base caches are left for the consumer's release."""
+    from glamr_omics_pipelines_spark.operators import _cache
+    from glamr_omics_pipelines_spark.session import release
+    monkeypatch.setattr(graph, "_LOCAL_FOLD_MAX_EDGES", 0)
+    e = _edges(spark, [("a", "b", 1), ("b", "c", 2), ("c", "a", 1)])
+    before = list(_cache._HANDLES)
+    try:
+        ranks = graph.pagerank(e, iterations=3)
+        left = [h.columns for h in _cache._HANDLES
+                if not any(h is b for b in before)]
+        assert left == [["node"], ["_src", "_dst", "_rate"],
+                        ["node", "_base", "_init"]]
+        assert len(ranks.collect()) == 3
+    finally:
+        release(spark)
 
 
 def test_pagerank_local_fold_dense_and_sparse_id_paths_agree(spark):
@@ -153,39 +175,41 @@ def test_pagerank_local_fold_dense_and_sparse_id_paths_agree(spark):
                             rel_tol=1e-12, abs_tol=1e-15), n
 
 
-def test_k_core_broadcast_and_shuffle_forms_agree(spark):
-    """broadcast_alive=True/False are two physical plans of the same peel:
-    identical k-core membership and core degrees on a graph where peeling
-    cascades (removing leaves drops interior nodes below k)."""
+def test_k_core_broadcast_and_shuffle_forms_agree(spark, monkeypatch):
+    """The broadcast and shuffle semi-join forms of the distributed peel
+    (forced through ``_BROADCAST_RANKS_MAX_NODES``) are two physical plans
+    of the same peel: identical k-core membership and core degrees on a
+    graph where peeling cascades (removing leaves drops interior nodes
+    below k)."""
     pairs = [("a", "b"), ("b", "c"), ("c", "a"),      # triangle: 2-core
              ("c", "d"), ("d", "e"),                  # tail peels away
              ("x", "y")]                              # isolated edge peels
     e = spark.createDataFrame(
         [(s, d, 1.0) for s, d in pairs], "src string, dst string, weight double")
-    a = sorted(map(tuple, graph.k_core(e, k=2, broadcast_alive=True,
-                                       local_fold=False).collect()))
-    b = sorted(map(tuple, graph.k_core(e, k=2, broadcast_alive=False,
-                                       local_fold=False).collect()))
+    monkeypatch.setattr(graph, "_LOCAL_FOLD_MAX_EDGES", 0)
+    a = sorted(map(tuple, graph.k_core(e, k=2).collect()))
+    monkeypatch.setattr(graph, "_BROADCAST_RANKS_MAX_NODES", 0)
+    b = sorted(map(tuple, graph.k_core(e, k=2).collect()))
     assert a == b == [("a", 2), ("b", 2), ("c", 2)]
 
 
-def test_k_core_local_fold_agrees_with_distributed(spark):
-    """r11: the auto-gated single-task peel (local_fold=True) must produce
-    exactly the distributed loop's output, including the fixed-round
-    semantics on a graph that needs several peel rounds (a chain peels one
-    node per round) and string node ids (the sparse remap path)."""
+def test_k_core_local_fold_agrees_with_distributed(spark, monkeypatch):
+    """r11: the auto-gated single-task peel must produce exactly the
+    distributed loop's output (forced by ``_LOCAL_FOLD_MAX_EDGES`` = 0),
+    including the fixed-round semantics on a graph that needs several
+    peel rounds (a chain peels one node per round) and string node ids
+    (the sparse remap path)."""
     pairs = [("a", "b"), ("b", "c"), ("c", "a"),      # 2-core triangle
              ("c", "d"), ("d", "e"), ("e", "f"),      # chain peels per round
              ("x", "y"), ("b", "a"), ("a", "a")]      # dup edge + self loop
     e = spark.createDataFrame(
         [(s, d, 1.0) for s, d in pairs], "src string, dst string, weight double")
-    loc = sorted(map(tuple, graph.k_core(e, k=2, local_fold=True).collect()))
-    dist = sorted(map(tuple, graph.k_core(e, k=2, local_fold=False).collect()))
-    assert loc == dist == [("a", 2), ("b", 2), ("c", 2)]
+    loc = sorted(map(tuple, graph.k_core(e, k=2).collect()))
     # fixed-round truncation must match too: rounds=1 leaves the partially
     # peeled chain in BOTH forms (early exit cannot have fired yet)
-    loc1 = sorted(map(tuple, graph.k_core(e, k=2, rounds=1,
-                                          local_fold=True).collect()))
-    dist1 = sorted(map(tuple, graph.k_core(e, k=2, rounds=1,
-                                           local_fold=False).collect()))
+    loc1 = sorted(map(tuple, graph.k_core(e, k=2, rounds=1).collect()))
+    monkeypatch.setattr(graph, "_LOCAL_FOLD_MAX_EDGES", 0)
+    dist = sorted(map(tuple, graph.k_core(e, k=2).collect()))
+    assert loc == dist == [("a", 2), ("b", 2), ("c", 2)]
+    dist1 = sorted(map(tuple, graph.k_core(e, k=2, rounds=1).collect()))
     assert loc1 == dist1

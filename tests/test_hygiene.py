@@ -47,3 +47,28 @@ def test_no_round_numbered_modules():
     assert not offenders, (
         "round-numbered modules (fold the measurement into perfbench's "
         "--trace record instead):\n" + "\n".join(offenders))
+
+
+def test_release_ritual_lives_in_session():
+    """The cold-protocol release (clearCache, then both registries) is
+    ``session.release(spark)``. A caller that copies the registry calls
+    instead can drift from it, as ``tools/check.py`` did when three
+    ``continue`` paths skipped its copy. Test files may call the registry
+    functions (they test them); ``perfbench/`` keeps its own copy."""
+    banned = {"release_checkpoints", "release_caches"}
+    allowed = {REPO / "glamr_omics_pipelines_spark" / "session.py"}
+    offenders = []
+    for path in sorted(REPO.rglob("*.py")):
+        rel = path.relative_to(REPO)
+        if rel.parts[0] in ("tests", "perfbench") or path in allowed:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Call):
+                f = node.func
+                called = f.attr if isinstance(f, ast.Attribute) else \
+                    getattr(f, "id", None)
+                if called in banned:
+                    offenders.append(f"{rel}:{node.lineno} {called}()")
+    assert not offenders, (
+        "call session.release(spark) instead of the registry release "
+        "functions:\n" + "\n".join(offenders))

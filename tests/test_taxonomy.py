@@ -132,15 +132,24 @@ def _rows_key(rows):
                    is not None else None) for r in rows)
 
 
+def _gate(monkeypatch, proxy: bool):
+    """Force the LCA form through ``_RANK_PROXY_MIN_BYTES``: 0 admits
+    every input to the rank proxy, infinity none."""
+    monkeypatch.setattr(taxonomy, "_RANK_PROXY_MIN_BYTES",
+                        0 if proxy else float("inf"))
+
+
 @pytest.mark.slow
-def test_lca_rank_proxy_agreement(spark):
+def test_lca_rank_proxy_agreement(spark, monkeypatch):
     """The scale-gated rank-proxy form (shuffle 8-byte dense ranks, join
     lineage paths back) must return row-identical output to the direct
     array min/max form on an adversarial corpus."""
     from glamr_omics_pipelines_spark.operators import _cache
     df = _lca_agreement_corpus(spark)
-    direct = taxonomy.lca_aggregate(df, ["gene"], "path", rank_proxy=False)
-    proxy = taxonomy.lca_aggregate(df, ["gene"], "path", rank_proxy=True)
+    _gate(monkeypatch, proxy=False)
+    direct = taxonomy.lca_aggregate(df, ["gene"], "path")
+    _gate(monkeypatch, proxy=True)
+    proxy = taxonomy.lca_aggregate(df, ["gene"], "path")
     try:
         assert _rows_key(direct.collect()) == _rows_key(proxy.collect())
     finally:
@@ -148,27 +157,29 @@ def test_lca_rank_proxy_agreement(spark):
 
 
 @pytest.mark.slow
-def test_kingdom_priority_lca_rank_proxy_agreement(spark):
+def test_kingdom_priority_lca_rank_proxy_agreement(spark, monkeypatch):
     from glamr_omics_pipelines_spark.operators import _cache
     df = _lca_agreement_corpus(spark)
     kw = dict(kingdom_col="kingdom", priority=["G", "I", "B"])
-    direct = taxonomy.kingdom_priority_lca(df, ["gene"], "path",
-                                           rank_proxy=False, **kw)
-    proxy = taxonomy.kingdom_priority_lca(df, ["gene"], "path",
-                                          rank_proxy=True, **kw)
+    _gate(monkeypatch, proxy=False)
+    direct = taxonomy.kingdom_priority_lca(df, ["gene"], "path", **kw)
+    _gate(monkeypatch, proxy=True)
+    proxy = taxonomy.kingdom_priority_lca(df, ["gene"], "path", **kw)
     try:
         assert _rows_key(direct.collect()) == _rows_key(proxy.collect())
     finally:
         _cache.release_caches()
 
 
-def test_lca_rank_proxy_gate_is_size_adaptive(spark):
+def test_lca_rank_proxy_gate_is_size_adaptive(spark, monkeypatch):
     """The auto gate must NOT fire at local test sizes (plans byte-identical
     to the direct form) and MUST fire above _RANK_PROXY_MIN_BYTES."""
     import re
     df = _lca_agreement_corpus(spark)
     auto = taxonomy.lca_aggregate(df, ["gene"], "path")
-    direct = taxonomy.lca_aggregate(df, ["gene"], "path", rank_proxy=False)
+    with monkeypatch.context() as m:
+        _gate(m, proxy=False)
+        direct = taxonomy.lca_aggregate(df, ["gene"], "path")
 
     def norm(d):  # strip expression IDs (fresh per-DataFrame counters)
         return re.sub(r"#\d+", "#", d._jdf.queryExecution()

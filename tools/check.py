@@ -99,9 +99,37 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[st
     return problems
 
 
+def check_query(name, fn, spark, con, oracles) -> bool | None:
+    """Compare one query with its oracle and print its line: True on PASS,
+    False on FAIL, None on SKIP (no oracle)."""
+    t0 = time.time()
+    try:
+        sdf = fn(spark, SF_DIR).toPandas()
+    except Exception as e:
+        print(f"FAIL {name}: spark error: {type(e).__name__}: {e}")
+        return False
+    if name not in oracles:
+        print(f"SKIP {name}: no oracle (rows-only), rows={len(sdf)} "
+              f"[{time.time()-t0:.1f}s]")
+        return None
+    try:
+        ddf = con.sql(oracles[name]).df()
+    except Exception as e:
+        print(f"FAIL {name}: duckdb error: {type(e).__name__}: {e}")
+        return False
+    problems = compare(name, sdf, ddf)
+    if problems:
+        print(f"FAIL {name} rows={len(sdf)}/{len(ddf)} [{time.time()-t0:.1f}s]")
+        for p in problems[:4]:
+            print(f"     {p}")
+        return False
+    print(f"PASS {name} rows={len(sdf)} [{time.time()-t0:.1f}s]")
+    return True
+
+
 def main():
     import __spark_entry__ as entry_mod
-    from glamr_omics_pipelines_spark.session import get_spark
+    from glamr_omics_pipelines_spark.session import get_spark, release
 
     spark = get_spark("check")
     con = duck_con()
@@ -112,36 +140,12 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR).toPandas()
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {type(e).__name__}: {e}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"SKIP {name}: no oracle (rows-only), rows={len(sdf)} "
-                  f"[{time.time()-t0:.1f}s]")
-            continue
-        try:
-            ddf = con.sql(oracles[name]).df()
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {type(e).__name__}: {e}")
-            n_fail += 1
-            continue
-        problems = compare(name, sdf, ddf)
-        if problems:
-            n_fail += 1
-            print(f"FAIL {name} rows={len(sdf)}/{len(ddf)} [{time.time()-t0:.1f}s]")
-            for p in problems[:4]:
-                print(f"     {p}")
-        else:
-            n_pass += 1
-            print(f"PASS {name} rows={len(sdf)} [{time.time()-t0:.1f}s]")
-        spark.catalog.clearCache()  # drop operator-persisted intermediates
-        from glamr_omics_pipelines_spark.operators import _ckpt, _cache
-        _ckpt.release_checkpoints()
-        _cache.release_caches()
+            ok = check_query(name, fn, spark, con, oracles)
+        finally:
+            release(spark)  # every path: a failing query frees its blocks
+        n_pass += ok is True
+        n_fail += ok is False
     print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 

@@ -48,8 +48,7 @@ def frame_hash(df) -> str:
 
 def run(out_path: str, only: set[str] | None = None) -> int:
     import __spark_entry__ as entry_mod
-    from glamr_omics_pipelines_spark.operators import _cache, _ckpt
-    from glamr_omics_pipelines_spark.session import get_spark
+    from glamr_omics_pipelines_spark.session import get_spark, release
 
     shuffle = os.environ.get("DET_SHUFFLE")
     extra = {"spark.sql.shuffle.partitions": shuffle} if shuffle else {}
@@ -71,9 +70,8 @@ def run(out_path: str, only: set[str] | None = None) -> int:
         except Exception as e:  # noqa: BLE001 - isolate per query
             manifest[name] = {"error": f"{type(e).__name__}: {e}"[:200]}
             print(f"ERR  {name}: {manifest[name]['error']}")
-        spark.catalog.clearCache()
-        _ckpt.release_checkpoints()
-        _cache.release_caches()
+        finally:
+            release(spark)
     with open(out_path, "w") as fh:
         json.dump({"master": spark.sparkContext.master,
                    "shuffle_partitions":

@@ -42,8 +42,7 @@ def props(plan: str) -> dict:
 
 
 def main() -> int:
-    from glamr_omics_pipelines_spark.operators import _cache, _ckpt
-    from glamr_omics_pipelines_spark.session import get_spark
+    from glamr_omics_pipelines_spark.session import get_spark, release
     import __spark_entry__ as E
     spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
@@ -131,9 +130,8 @@ def main() -> int:
                   f"{p['window']} |")
         except Exception as e:  # pragma: no cover
             print(f"| {name} | ERROR: {type(e).__name__} | | | | | |")
-        spark.catalog.clearCache()
-        _ckpt.release_checkpoints()
-        _cache.release_caches()
+        finally:
+            release(spark)
     spark.stop()
     return 0
 

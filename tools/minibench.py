@@ -11,8 +11,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from glamr_omics_pipelines_spark.session import get_spark
-from glamr_omics_pipelines_spark.operators import _cache, _ckpt
+from glamr_omics_pipelines_spark.session import get_spark, release
 import __spark_entry__ as E
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -28,10 +27,10 @@ for name in sys.argv[1:]:
     runs = []
     for _ in range(RUNS):
         t0 = time.perf_counter()
-        fn(spark, SF).collect()
-        runs.append(time.perf_counter() - t0)
-        spark.catalog.clearCache()
-        _ckpt.release_checkpoints()
-        _cache.release_caches()
+        try:
+            fn(spark, SF).collect()
+            runs.append(time.perf_counter() - t0)
+        finally:
+            release(spark)
     print(f"QUERY {name} {round(min(runs), 3)}  runs={[round(r, 2) for r in runs]}")
 spark.stop()

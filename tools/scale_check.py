@@ -67,18 +67,18 @@ def build(spark, k: int) -> None:
 
 
 def run(spark, qs, names, sf_dir: str) -> dict[str, float]:
+    from glamr_omics_pipelines_spark.session import release
     t = {}
     for n in names:
         best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            qs[n](spark, sf_dir).collect()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        spark.catalog.clearCache()
-        from glamr_omics_pipelines_spark.operators import _ckpt, _cache
-        _ckpt.release_checkpoints()
-        _cache.release_caches()
+        try:
+            for _ in range(2):
+                t0 = time.perf_counter()
+                qs[n](spark, sf_dir).collect()
+                dt = time.perf_counter() - t0
+                best = dt if best is None else min(best, dt)
+        finally:
+            release(spark)
         t[n] = round(best, 3)
     return t
 
