@@ -743,7 +743,7 @@ def q_ann_recall(spark, sf_dir):
     approx = similarity.ivf_topk(emb, queries_df, "vec_id", "embedding",
                                  cents, k=5, nprobe=2)
     exact = similarity.brute_force_topk(emb, queries_df, "vec_id",
-                                        "embedding", k=5, method="brute")
+                                        "embedding", k=5)
     return similarity.ann_recall(approx, exact)
 
 
@@ -2395,17 +2395,16 @@ def q_doc_bigram_lm(spark, sf_dir):
         """, bench="headline")
 def q_embedding_covariance(spark, sf_dir):
     """Sample covariance matrix of the embedding corpus, long-form
-    (operators/similarity.py:gram_matrix, strategy="arrow"): per-Arrow-batch
-    BLAS partial Gramian XᵀX emitting ≤ d² rows per batch, merged by a
-    bounded groupBy(i, j) — measured 2.3× faster than the nested-posexplode
-    form at sf0.1 and ~d× less map-side CPU at 100 TB (the explode
-    materializes d² cells per corpus ROW; the BLAS form touches each cell
-    once per batch). Equivalence to the explode form is property-tested
-    (test_gram_arrow_matches_explode). The PCA/whitening statistic whose
-    eigen loop then runs driver-side (top_principal_component)."""
+    (operators/similarity.py:gram_matrix): per-Arrow-batch BLAS partial
+    Gramian XᵀX emitting ≤ d² rows per batch, merged by a bounded
+    groupBy(i, j) — measured 2.3× faster at sf0.1 than the nested-
+    posexplode form it replaced, which materialized d² cells per corpus
+    ROW where the BLAS form touches each cell once per batch. The
+    PCA/whitening statistic whose eigen loop then runs driver-side
+    (top_principal_component)."""
     emb = _t(spark, sf_dir, "embeddings")
     out = similarity.gram_matrix(emb, "embedding", centered=True,
-                                 sample_covariance=True, strategy="arrow")
+                                 sample_covariance=True)
     return out.select("i", "j", _r4("value").alias("cov"))
 
 
@@ -5360,8 +5359,7 @@ def q_data_quality(spark, sf_dir):
     ref_lo = validate.referential_report(
         li.select(F.col("l_orderkey").alias("orderkey")),
         o.select(F.col("o_orderkey").alias("orderkey")),
-        ["orderkey"], "lineitem->orders.referential",
-        broadcast_parent=False)
+        ["orderkey"], "lineitem->orders.referential")
     return rep_o.unionByName(rep_li).unionByName(ref_oc).unionByName(ref_lo)
 
 

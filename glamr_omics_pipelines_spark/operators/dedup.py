@@ -660,37 +660,33 @@ def keep_best_per_cluster(corpus: DataFrame, labels: DataFrame,
 
 def embedding_cosine_dups(emb: DataFrame, id_col: str, vec_col: str,
                           threshold: float = 0.95,
-                          candidates: DataFrame | None = None,
-                          pair_gen: str | None = None) -> DataFrame:
+                          candidates: DataFrame | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (sim >= threshold).
 
-    Pair generation is auto-gated (``pair_gen=None``, the default): below
-    ``similarity._BRUTE_PAIRGEN_MAX_ROWS`` corpus rows the exact O(n²)
-    enumeration runs (the oracle baseline); above it, candidates are
+    Pair generation is auto-gated at one site,
+    ``similarity._over_gate``: below ``similarity._BRUTE_PAIRGEN_MAX_ROWS``
+    corpus rows the exact O(n²) enumeration runs (the oracle baseline);
+    above it, candidates are
     auto-derived from :func:`similarity.lsh_candidate_pairs` so no caller
     silently hits n²/2 dot products at scale (recall < 1 by LSH nature —
     every surviving pair is still EXACTLY verified against ``threshold``,
     and the LSH shape is sized via
     :func:`similarity.lsh_params_for_threshold` to reach ≥0.95 candidate
     recall AT this threshold — ADVICE r7: the old fixed 12×4 shape
-    silently dropped ~27% of true pairs at threshold 0.95).
-    ``pair_gen="brute"`` / ``"lsh"`` force a form; an explicit
+    silently dropped ~27% of true pairs at threshold 0.95). An explicit
     ``candidates`` frame (e.g. pre-bucketed and persisted across calls)
-    overrides everything. The auto probe (one bounded limit(N+1)-count)
-    is memoized per logical plan — repeated calls on the same corpus pay
-    it once. Cosine computed with higher-order functions in the JVM.
+    is the pair list instead, and then no probe runs. The auto probe (one
+    bounded limit(N+1)-count) is memoized per logical plan — repeated
+    calls on the same corpus pay it once. Cosine computed with
+    higher-order functions in the JVM.
     """
     from glamr_omics_pipelines_spark.operators import similarity
     from glamr_omics_pipelines_spark.operators.similarity import (
         as_double_vec, dot_col, norm_col)
-    if pair_gen not in (None, "brute", "lsh"):
-        raise ValueError(
-            f"pair_gen must be None|'brute'|'lsh', got {pair_gen!r}")
-    if candidates is None and pair_gen != "brute":
-        if pair_gen == "lsh" or similarity._over_gate(emb):
-            candidates = similarity.lsh_candidate_pairs(
-                emb, id_col, vec_col,
-                **similarity.lsh_params_for_threshold(threshold))
+    if candidates is None and similarity._over_gate(emb):
+        candidates = similarity.lsh_candidate_pairs(
+            emb, id_col, vec_col,
+            **similarity.lsh_params_for_threshold(threshold))
     # per-ROW norm + double-cast below the join: the n² join condition then
     # evaluates only a dot product and one divide per pair, not two norm
     # reductions + two array casts per pair.
@@ -927,8 +923,7 @@ def span_dedup(df: DataFrame, id_col: str, text_col: str,
 
 def semdedup(emb: DataFrame, id_col: str, vec_col: str,
              centroids: list[list[float]], threshold: float = 0.95,
-             round_decimals: int = 6,
-             assign_strategy: str = "auto") -> DataFrame:
+             round_decimals: int = 6) -> DataFrame:
     """Cluster-scoped semantic deduplication (the SemDeDup shape, Abbas et
     al. 2023): assign every embedding to its nearest k-means cell, compute
     cosine similarity ONLY within a cell, and drop each row that has a
@@ -947,7 +942,11 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
     corpus partitioned by ``ivf_cell`` once and the pair stage shuffles
     nothing but the cell keys. The quantizer (``centroids``) is
     metadata-scale (k × dim floats) and rides the plan as expression-tree
-    literals — no second input, no driver round-trip per row. Train it with
+    literals — no second input, no driver round-trip per row, and its
+    shape alone picks the assignment kernel (:func:`similarity.
+    assign_cells`: value-exact expr below ``_ASSIGN_ARROW_MIN_CELL_DIMS``
+    n_cells × dim, the BLAS arrow kernel at production cell counts —
+    measured 26× at 220k rows × 800 cells). Train it with
     :func:`similarity.train_ivf_centroids` (bounded sample, cost
     independent of corpus size) or :func:`similarity.kmeans_lloyd` for
     full-corpus Lloyd iterations.
@@ -969,16 +968,11 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
     # assignment rivals the pair stage itself (measured in
     # tools/semdedup_scale_sweep.py). At 100 TB, checkpoint this frame
     # to parquet instead (it IS the write_ivf_index layout).
-    # ``assign_strategy``: 'auto' (default) stays on the value-exact
-    # expr form below 4096 model cells (every oracle row's regime) and
-    # switches to the BLAS arrow kernel at production cell counts
-    # (measured 26x at 220k rows x 800 cells); see
-    # similarity.assign_cells for the boundary-ulp contract.
     base = _cache.register(
         assign_cells(
             emb.select(F.col(id_col), as_double_vec(vec_col).alias("_v"),
                        norm_col(vec_col).alias("_n")),
-            "_v", centroids, out="ivf_cell", strategy=assign_strategy)
+            "_v", centroids, out="ivf_cell")
         .select(id_col, "ivf_cell", "_v", "_n"))
     a = base.select(F.col(id_col).alias("id_a"), "ivf_cell",
                     F.col("_v").alias("_va"), F.col("_n").alias("_na"))

@@ -78,20 +78,22 @@ def cosine_from_norms(a, b, na, nb) -> Column:
 # _BROADCAST_RANKS_MAX_NODES gate, graph.py): n corpus rows enumerate
 # n(n-1)/2 candidate pairs, so 100k rows is already ~5e9 dot products —
 # past this the O(n²) plan stops being a "documented baseline" and becomes
-# the job. Above the gate the DEFAULT pair generator switches to
-# OR-amplified hyperplane-LSH bucket self-joins (recall < 1 by LSH nature —
-# tunable via num_planes/num_tables); exact stays one keyword away
-# (pair_gen="brute" / method="brute"), which is what the sf0.01 oracles
-# use implicitly (they sit far below the gate).
+# the job. Above the gate the pair generator of embedding_cosine_dups (and
+# dbscan_cosine on top of it) switches to OR-amplified hyperplane-LSH
+# bucket self-joins (recall < 1 by LSH nature — tunable via
+# num_planes/num_tables). The gate alone decides: no caller overrides it
+# (tests force a form by setting this constant), and the sf0.01 oracles sit
+# far below it. brute_force_topk is not gated — its cost is corpus × a
+# broadcast query side, linear in the corpus.
 _BRUTE_PAIRGEN_MAX_ROWS = 100_000
 
 # Memoized gate verdicts / vector widths, keyed by (session id, plan
 # semanticHash, schema hash): the limit(N+1).count() probe and the one-row
 # dim lookup are each a full Spark job (~0.2 s locally), and operators such
-# as brute_force_topk / embedding_cosine_dups / dbscan_cosine re-derive the
-# SAME logical plan on every call — the probe re-ran per call and was the
-# one real perf regression of round 7 (cosine_topk 1.72x). The verdict is a
-# property of the logical plan, so it is cached for the session's lifetime.
+# as embedding_cosine_dups / dbscan_cosine re-derive the SAME logical plan
+# on every call — the probe re-ran per call and was the one real perf
+# regression of round 7 (cosine_topk 1.72x). The verdict is a property of
+# the logical plan, so it is cached for the session's lifetime.
 _GATE_CACHE: dict = {}
 _DIM_CACHE: dict = {}
 _CACHE_MAX = 256
@@ -108,21 +110,20 @@ def _plan_key(df: DataFrame) -> tuple | None:
     component is the Spark applicationId — stable for the session's
     lifetime and never recycled (it embeds a start timestamp), unlike
     id(), which a GC'd session's successor can reuse and inherit a stale
-    verdict through (VERDICT r8 #4). On Connect sessions (no
-    sparkContext) the same id comes from the spark.app.id conf — r9
-    review: raising there would silently disable memoization and
-    reintroduce the per-call probe job."""
+    verdict through (VERDICT r8 #4). On Connect sessions the same id
+    comes from the spark.app.id conf: their ``sparkContext`` raises
+    ``PySparkAttributeError`` (an ``AttributeError``), and giving up there
+    would silently disable memoization and reintroduce the per-call probe
+    job. Any other error propagates — a gate that swallowed it would turn
+    the memo off without a trace."""
+    sess = df.sparkSession
     try:
-        sess = df.sparkSession
-        try:
-            app = sess.sparkContext.applicationId
-        except Exception:  # Spark Connect: no driver-side sparkContext
-            app = sess.conf.get("spark.app.id")
-        if not app:
-            return None
-        return (app, df.semanticHash(), hash(str(df.schema)))
-    except Exception:  # sessions without semanticHash / app id
+        app = sess.sparkContext.applicationId
+    except AttributeError:  # Spark Connect: no driver-side sparkContext
+        app = sess.conf.get("spark.app.id")
+    if not app:
         return None
+    return (app, df.semanticHash(), hash(str(df.schema)))
 
 
 def clear_gate_cache() -> None:
@@ -138,14 +139,15 @@ def clear_gate_cache() -> None:
 
 def _over_gate(df: DataFrame) -> bool:
     """True iff ``df`` has MORE than ``_BRUTE_PAIRGEN_MAX_ROWS`` rows — the
-    auto-gate probe.
+    one site that decides brute↔LSH pair generation for
+    ``dedup.embedding_cosine_dups`` (and so for ``dbscan_cosine``).
 
     limit(gate+1).count() short-circuits the scan on huge corpora (only
     "more than N?" matters, never the exact count); the verdict is
     memoized per (session, logical plan) so repeated calls with the same
     plan — bench reruns, dbscan→embedding_cosine_dups chains — pay the
     probe job once, not per call (VERDICT r7 #2). The gate value is part
-    of the memo key, so a changed ceiling re-probes."""
+    of the memo key, so a test that sets the constant re-probes."""
     gate = _BRUTE_PAIRGEN_MAX_ROWS
     key = _plan_key(df)
     if key is not None:
@@ -266,8 +268,9 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, vec_col: str,
                         num_planes: int = 12, num_tables: int = 4,
                         dim: int | None = None, seed: int = 42) -> DataFrame:
     """Near-duplicate candidate pairs (id_a < id_b) from OR-amplified
-    hyperplane LSH — the scale-path pair generator behind the
-    ``_BRUTE_PAIRGEN_MAX_ROWS`` auto-gate.
+    hyperplane LSH — the pair generator ``dedup.embedding_cosine_dups``
+    switches to above ``_BRUTE_PAIRGEN_MAX_ROWS`` corpus rows; callable
+    directly to build a ``candidates=`` frame at any size.
 
     All ``num_tables`` bucket ids are computed in ONE projection (the
     planes are expression-tree literals), posexploded to (table, bucket)
@@ -282,7 +285,7 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, vec_col: str,
     at sim=0.95, ~0.97 at sim=0.99 and >0.999 only near sim=0.999 —
     derive (num_planes, num_tables) from the caller's threshold with
     :func:`lsh_params_for_threshold` when a recall target must hold (the
-    auto-gated paths in ``dedup.embedding_cosine_dups`` do exactly that);
+    above-gate path of ``dedup.embedding_cosine_dups`` does exactly that);
     :func:`lsh_candidate_recall` evaluates the curve for a given config.
     """
     if dim is None:
@@ -300,38 +303,19 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, vec_col: str,
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
                      vec_col: str, k: int = 5,
-                     query_id: str = "query_id",
-                     method: str | None = None) -> DataFrame:
-    """Cosine top-k neighbors for each query vector.
+                     query_id: str = "query_id") -> DataFrame:
+    """Exact cosine top-k neighbors for each query vector.
 
     queries: (query_id, vec_col). Broadcast the (small) query side; rank per
     query with a deterministic tiebreak on neighbor id.
     Output: (query_id, neighbor_id, cosine, rank).
 
-    ``method``: None (default) auto-gates — corpora above
-    ``_BRUTE_PAIRGEN_MAX_ROWS`` route through :func:`lsh_topk_multi`
-    (same output schema, APPROXIMATE recall: a query may come back with
-    fewer than k neighbors when its buckets are sparse — a logged
-    warning marks the flip, ADVICE r7) so no caller silently gets the
-    exact corpus×queries scan at scale; ``"brute"`` forces exact (the
-    oracle form); ``"lsh"`` forces the bucketed form at any size. The
-    auto probe (one bounded limit(N+1)-count) is memoized per logical
-    plan, so loops over the same corpus pay it once.
+    Always exact, at any corpus size: the cost is corpus × a broadcast
+    query side — linear in the corpus, not the n² that
+    ``_BRUTE_PAIRGEN_MAX_ROWS`` guards — and :func:`ann_recall` takes its
+    ground truth from here, which must never be approximate. The bucketed
+    approximate form is :func:`lsh_topk_multi`.
     """
-    if method not in (None, "brute", "lsh"):
-        raise ValueError(f"method must be None|'brute'|'lsh', got {method!r}")
-    if method == "lsh" or (method is None and _over_gate(corpus)):
-        if method is None:
-            import logging
-            logging.getLogger(__name__).warning(
-                "brute_force_topk: corpus exceeds %d rows — auto-routing "
-                "to lsh_topk_multi (approximate: fewer than k neighbors "
-                "may be returned). Pass method='brute' to force the exact "
-                "scan or method='lsh' to silence this.",
-                _BRUTE_PAIRGEN_MAX_ROWS)
-        return lsh_topk_multi(corpus, queries, id_col, vec_col, k=k,
-                              dim=_vec_dim(corpus, vec_col),
-                              query_id=query_id)
     # norms once per ROW (below the cross join) instead of twice per PAIR:
     # every corpus row meets every query, so the per-row norm is pure
     # savings (n + q norms vs 2·n·q) — value-identical (see cosine_from_norms)
@@ -433,6 +417,13 @@ def _vec_sql(vec_col: str) -> str:
 def _centroids_sql(centroids: list[list[float]]) -> str:
     return "array(" + ",".join(
         "array(" + ",".join(f"{x!r}D" for x in c) + ")" for c in centroids) + ")"
+
+
+# assign_cells' expr↔arrow gate on the model shape: at n_cells × dim ≥ this
+# the interpreted per-row centroid scan starts to dominate, and the BLAS
+# kernel wins (measured 26× at 220k rows × 800 cells,
+# tools/semdedup_scale_sweep.py)
+_ASSIGN_ARROW_MIN_CELL_DIMS = 4096
 
 
 def _nearest_cells_expr(vec_col: str, centroids: list[list[float]],
@@ -621,8 +612,7 @@ def label_centroids(emb: DataFrame, label_col: str, vec_col: str) -> DataFrame:
 
 
 def gram_matrix(df: DataFrame, vec_col: str, centered: bool = False,
-                sample_covariance: bool = False,
-                strategy: str = "explode") -> DataFrame:
+                sample_covariance: bool = False) -> DataFrame:
     """Long-form Gramian XᵀX over an embedding column — (i, j, value) for
     every dimension pair — or the sample covariance matrix with
     ``centered=True, sample_covariance=True`` (divides by n−1). The
@@ -630,69 +620,15 @@ def gram_matrix(df: DataFrame, vec_col: str, centered: bool = False,
     d-dim top eigenvector then costs a driver-side power iteration over
     the d×d result (metadata-scale), never a second corpus scan.
 
-    Two physical strategies, same logical result:
-
-    - ``strategy="explode"`` (default): nested posexplode (row-local, no
-      self-join on a row id) fans each vector to its d² dimension pairs,
-      and the groupBy(i, j) partial-aggregates map-side — the shuffle
-      carries at most d² rows PER PARTITION regardless of corpus size.
-      Dimension means for centering are a d-row broadcast. Pure JVM
-      codegen, tolerant of ragged widths and null elements (null products
-      are sum-skipped per cell) — but the explode materializes d² cells
-      per ROW through the whole-stage pipeline, so the map-side CPU is
-      O(rows·d²) scalar ops.
-
-    - ``strategy="arrow"``: mapInPandas partial Gramian — each Arrow
-      batch computes ``XᵀX`` / ``ΣX`` with one BLAS call and emits d²
-      partial rows; the same bounded groupBy(i, j) merges batches, and
-      centering folds in algebraically (Σxᵢxⱼ − ΣxᵢΣxⱼ/n — one corpus
-      pass, no means broadcast). ~d× less per-row work than the explode
-      at 100 TB; requires fixed-width vectors with non-null elements
-      (the embedding-corpus contract; null VECTORS are dropped like the
-      explode form drops them).
-    """
-    if strategy == "arrow":
-        return _gram_matrix_arrow(df, vec_col, centered, sample_covariance)
-    if strategy != "explode":
-        raise ValueError(f"unknown gram_matrix strategy: {strategy!r}")
-    d = df.select(F.col(vec_col).cast("array<double>").alias("_v"))
-    first = d.select(F.posexplode("_v").alias("i", "_xi"), F.col("_v"))
-    second = first.select("i", "_xi", F.posexplode("_v").alias("j", "_xj"))
-    if centered:
-        means = (d.select(F.posexplode("_v").alias("dim", "_x"))
-                 .groupBy("dim").agg(F.avg("_x").alias("_mu")))
-        second = (second
-                  .join(F.broadcast(means.select(F.col("dim").alias("i"),
-                                                 F.col("_mu").alias("_mi"))),
-                        "i")
-                  .join(F.broadcast(means.select(F.col("dim").alias("j"),
-                                                 F.col("_mu").alias("_mj"))),
-                        "j")
-                  .withColumn("_xi", F.col("_xi") - F.col("_mi"))
-                  .withColumn("_xj", F.col("_xj") - F.col("_mj")))
-    out = (second.groupBy("i", "j")
-           .agg(F.sum(F.col("_xi") * F.col("_xj")).alias("value"),
-                F.count(F.lit(1)).alias("_n")))
-    if sample_covariance:
-        if not centered:
-            raise ValueError("sample_covariance requires centered=True")
-        # try_divide: a single-embedding corpus has n-1 = 0 — sample
-        # covariance is undefined there (null), not a job-killing ANSI error
-        out = out.withColumn("value",
-                             F.try_divide(F.col("value"), F.col("_n") - 1))
-    return out.select(F.col("i").cast("bigint").alias("i"),
-                      F.col("j").cast("bigint").alias("j"), "value")
-
-
-def _gram_matrix_arrow(df: DataFrame, vec_col: str, centered: bool,
-                       sample_covariance: bool) -> DataFrame:
-    """Arrow/BLAS physical form of gram_matrix — see its docstring.
-
-    Each batch emits exactly d² rows (i, j, Σxᵢxⱼ, Σxᵢ, Σxⱼ, n); the
-    shuffle is bounded by d² per batch no matter how many rows the batch
-    holds, and the final combine is plain column arithmetic on the d²-row
-    aggregate. Centered covariance uses the algebraic identity
-    Σ(xᵢ−μᵢ)(xⱼ−μⱼ) = Σxᵢxⱼ − ΣxᵢΣxⱼ/n, so a single corpus pass suffices.
+    Physical form: a mapInPandas partial Gramian — each Arrow batch
+    computes ``XᵀX`` / ``ΣX`` with one BLAS call and emits exactly d²
+    rows (i, j, Σxᵢxⱼ, Σxᵢ, Σxⱼ, n), so the shuffle is bounded by d² per
+    batch no matter how many rows the batch holds; a groupBy(i, j) merges
+    the batches and the final combine is plain column arithmetic on the
+    d²-row aggregate. Centering folds in algebraically,
+    Σ(xᵢ−μᵢ)(xⱼ−μⱼ) = Σxᵢxⱼ − ΣxᵢΣxⱼ/n, so one corpus pass suffices (no
+    means broadcast). Requires fixed-width vectors with non-null elements
+    (the embedding-corpus contract); null VECTORS are dropped.
     """
     if sample_covariance and not centered:
         raise ValueError("sample_covariance requires centered=True")
@@ -726,8 +662,8 @@ def _gram_matrix_arrow(df: DataFrame, vec_col: str, centered: bool,
     if centered:
         value = value - F.col("_sx") * F.col("_sy") / F.col("_n")
     if sample_covariance:
-        # try_divide: n-1 = 0 on a single-vector corpus — undefined (null),
-        # never an ANSI error (same contract as the explode form)
+        # try_divide: n-1 = 0 on a single-vector corpus — sample covariance
+        # is undefined there (null), not a job-killing ANSI error
         value = F.try_divide(value, F.col("_n") - 1)
     return agg.select("i", "j", value.alias("value"))
 
@@ -768,8 +704,8 @@ def top_principal_component(df: DataFrame, vec_col: str,
     100 TB. Sign convention: the component's largest-magnitude entry is
     made positive. Returns a python list of length d.
     """
-    rows = gram_matrix(df, vec_col, centered=True, sample_covariance=True,
-                       strategy="arrow").collect()
+    rows = gram_matrix(df, vec_col, centered=True,
+                       sample_covariance=True).collect()
     d = max(r.i for r in rows) + 1
     cov = [[0.0] * d for _ in range(d)]
     for r in rows:
@@ -789,8 +725,7 @@ def top_principal_component(df: DataFrame, vec_col: str,
 
 def dbscan_cosine(df: DataFrame, id_col: str, vec_col: str,
                   sim_eps: float = 0.999, min_pts: int = 2,
-                  candidates: DataFrame | None = None,
-                  pair_gen: str | None = None) -> DataFrame:
+                  candidates: DataFrame | None = None) -> DataFrame:
     """Density clustering (DBSCAN, Ester et al. 1996) with cosine-similarity
     neighborhoods over an embedding column: a point with >= ``min_pts``
     neighbors at similarity >= ``sim_eps`` is a CORE; connected cores form a
@@ -803,8 +738,8 @@ def dbscan_cosine(df: DataFrame, id_col: str, vec_col: str,
     the neighbor graph comes from :func:`~glamr_omics_pipelines_spark.
     operators.dedup.embedding_cosine_dups` — AUTO-GATED: exact all-pairs
     below ``_BRUTE_PAIRGEN_MAX_ROWS`` corpus rows, LSH-bucketed candidate
-    pairs above (``pair_gen`` forces a form; an explicit ``candidates``
-    frame overrides both) — degree counting is one
+    pairs above (an explicit ``candidates`` frame is the pair list
+    instead) — degree counting is one
     partial agg on the pair list, and the core-core transitive closure is
     :func:`~glamr_omics_pipelines_spark.operators.dedup.dup_clusters`
     (min-label propagation, O(diameter) rounds). Pair lists, never a
@@ -813,8 +748,7 @@ def dbscan_cosine(df: DataFrame, id_col: str, vec_col: str,
     from glamr_omics_pipelines_spark.operators import _cache, dedup
     pairs = dedup.embedding_cosine_dups(df, id_col, vec_col,
                                         threshold=sim_eps,
-                                        candidates=candidates,
-                                        pair_gen=pair_gen)
+                                        candidates=candidates)
     # The neighbor-pair list feeds deg, core_pairs (twice, via sym's two
     # join sides) and border; without a persist every consumer re-evaluates
     # the pair GENERATOR (the all-pairs cross join / LSH pipeline) — ~6
@@ -1068,9 +1002,8 @@ def ivfpq_adc_topk(index: DataFrame, queries: DataFrame,
 
 def kmeans_lloyd(df: DataFrame, vec_col: str,
                  init_centroids: list[list[float]], iters: int = 2,
-                 round_decimals: int = 6,
-                 strategy: str = "auto") -> tuple[list[list[float]],
-                                                  list[int]]:
+                 round_decimals: int = 6) -> tuple[list[list[float]],
+                                                   list[int]]:
     """Distributed Lloyd iterations over the FULL corpus (the k-means the
     SemDeDup/IVF quantizers are trained with when a bounded sample is not
     enough — cf. :func:`train_ivf_centroids`, which Lloyd-iterates a
@@ -1091,6 +1024,12 @@ def kmeans_lloyd(df: DataFrame, vec_col: str,
     Returns ``(centroids, sizes)``: the final k×dim means (round-6) and
     the row count of each cell at the LAST update (0 for empty cells).
 
+    The assignment kernel is :func:`assign_cells`'s, picked by its
+    ``_ASSIGN_ARROW_MIN_CELL_DIMS`` gate on the model shape (k × dim):
+    the value-exact expr form below it, the BLAS arrow kernel at or above
+    it. The round-6 mean barrier absorbs the kernels' ~1-ulp distance
+    differences except on exact Voronoi boundaries.
+
     Scale shape: per iteration one scan + one k×dim-key shuffle; cost is
     O(n·k·dim) compute with no row-grain shuffle — the textbook
     Lloyd-on-MapReduce plan. Beyond-reference operator (SURVEY §8).
@@ -1108,14 +1047,7 @@ def kmeans_lloyd(df: DataFrame, vec_col: str,
         # the argmin into the posexplode select makes Generate re-evaluate
         # it per exploded element (dim× per row) — measured 9× slower at
         # sf0.1 (the Project under Generate survives CollapseProject).
-        # ``strategy`` selects the assignment kernel (see assign_cells):
-        # 'auto' (default) = expr below 4096 model cells (the value-exact
-        # oracle regime), BLAS arrow above (26x at 800 cells); the
-        # ROUND-6 mean barrier
-        # then absorbs the kernels' ~1-ulp distance differences except on
-        # exact Voronoi boundaries.
-        assigned = assign_cells(src, "_v", centroids, out="ci",
-                                strategy=strategy)
+        assigned = assign_cells(src, "_v", centroids, out="ci")
         stats = (assigned
                  .select("ci", F.posexplode("_v").alias("pos", "v"))
                  .groupBy("ci", "pos")
@@ -1141,9 +1073,9 @@ def ann_recall(approx: DataFrame, exact: DataFrame,
     is tuned with ("measure, don't guess").
 
     ``exact`` is the ground-truth neighbor set per query (e.g.
-    :func:`brute_force_topk` with ``method='brute'`` on a held-out
-    sample); ``approx`` the candidate set under test. Output: one row
-    per query — (query_id, n_exact, n_hit, recall) with
+    :func:`brute_force_topk`, always exact, on a held-out sample);
+    ``approx`` the candidate set under test. Output: one row per query
+    — (query_id, n_exact, n_hit, recall) with
     ``recall = n_hit / n_exact`` rounded to 4dp. Queries the approx
     index returned NOTHING for still appear (n_hit=0) — dropped
     queries are the failure mode recall tuning exists to catch.
@@ -1207,37 +1139,30 @@ def ivfpq_probe_partitioned(spark, path: str, queries: DataFrame,
 
 
 def assign_cells(df: DataFrame, vec_col: str,
-                 centroids: list[list[float]], out: str = "ivf_cell",
-                 strategy: str = "auto") -> DataFrame:
+                 centroids: list[list[float]],
+                 out: str = "ivf_cell") -> DataFrame:
     """Nearest-centroid assignment of every row, as a column ``out`` —
     the shared front stage of semdedup / kmeans_lloyd / IVF indexing.
 
-    - ``strategy='expr'``: the centroid literals ride the expression tree
+    Two kernels, gated on the model shape alone (n_cells × dim against
+    ``_ASSIGN_ARROW_MIN_CELL_DIMS`` — deterministic for a given model):
+
+    - below the gate: the centroid literals ride the expression tree
       (codegen-friendly, value-exact vs the SQL oracles). Per-row cost is
       O(n_cells · dim) interpreted — fine for a coarse quantizer (tens of
       cells), quadratic-feeling when cells scale with the corpus (the
       SemDeDup shape: measured in tools/semdedup_scale_sweep.py).
-    - ``strategy='arrow'``: ONE Arrow-batched mapInPandas kernel computes
+    - at or above it: ONE Arrow-batched mapInPandas kernel computes
       all distances as a BLAS matmul (‖x−c‖² = ‖x‖² − 2x·Cᵀ + ‖c‖², with
       ‖x‖² constant per row so argmin needs only −2x·Cᵀ + ‖c‖²) — the
       vectorized form the 100 TB assignment runs. Ties and Voronoi-
       boundary rows: argmin takes the LOWEST index (the expr tiebreak),
       but the float expansion differs from the expr form's (x−y)² fold
       by ~1 ulp, so a row equidistant to machine precision may assign
-      differently — measure-zero on real data, and why oracle rows pin
-      ``strategy='expr'``.
-    - ``strategy='auto'``: 'arrow' when n_cells × dim ≥ 4096 (where the
-      interpreted scan starts to dominate), else 'expr'. The choice
-      depends only on the model shape — deterministic for a given call.
+      differently — measure-zero on real data, and why every oracle row
+      sits below the gate.
     """
-    if strategy not in ("auto", "expr", "arrow"):
-        raise ValueError(
-            f"assign_cells: strategy must be auto|expr|arrow, "
-            f"got {strategy!r}")
-    if strategy == "auto":
-        strategy = ("arrow" if len(centroids) * len(centroids[0]) >= 4096
-                    else "expr")
-    if strategy == "expr":
+    if len(centroids) * len(centroids[0]) < _ASSIGN_ARROW_MIN_CELL_DIMS:
         return df.withColumn(out, F.expr(
             _nearest_centroid_expr(vec_col, centroids)).cast("int"))
     cents = [[float(x) for x in c] for c in centroids]

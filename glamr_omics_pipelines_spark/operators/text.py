@@ -973,6 +973,9 @@ def js_divergence_pairs(df: DataFrame, class_col: str,
             .agg(F.round(F.sum(term), 6).alias("js_divergence")))
 
 
+# bpe_encode's fold↔rank gate on the merge-list size: the row-local fold
+# is exact at any size but costs O(merges × doc_len) per row; above this
+# the per-word min-rank kernel runs instead
 _BPE_FOLD_AUTO_MAX = 1024
 _BPE_FOLD_CHUNK = 128
 # rank-path per-partition word->tokens cache cap: ~1M entries is tens of MB
@@ -1044,17 +1047,17 @@ def _bpe_apply_word(word: str, ranks: dict[tuple[str, str], int],
 
 def bpe_encode(df: DataFrame, text_col: str,
                merges: list[tuple[str, str]],
-               out: str = "bpe_tokens",
-               strategy: str | None = None) -> DataFrame:
+               out: str = "bpe_tokens") -> DataFrame:
     """Apply trained BPE merge rules to a corpus — the INFERENCE side of
     :func:`learn_bpe_merges` (Sennrich et al. 2016), i.e. the operation a
     training-data pipeline actually runs at full corpus scale once the
     tokenizer is frozen. Adds ``out``: the document's BPE token array
     (word-internal merges, ``</w>`` end-of-word markers).
 
-    Two physical forms (``strategy``), auto-selected by merge-list size:
+    Two physical forms, picked by merge-list size alone
+    (``_BPE_FOLD_AUTO_MAX``):
 
-    * ``"fold"`` (default for ≤1024 merges) — row-local JVM expressions,
+    * fold (≤1024 merges) — row-local JVM expressions,
       ZERO shuffle, zero Python: the whole document is encoded once per
       symbol as ``\\x1f c \\x1f`` (words joined by a bare space so no merge
       pattern can cross a word boundary), and every merge rule is ONE plain
@@ -1072,7 +1075,7 @@ def bpe_encode(df: DataFrame, text_col: str,
       pass under local[2] (tests), but per-row work is inherently
       O(merges × doc_len) — the fold is the ORACLE form, not the
       real-vocab form.
-    * ``"rank"`` (default above 1024 merges) — the real-tokenizer path:
+    * rank (above 1024 merges) — the real-tokenizer path:
       one Arrow-batched ``mapInPandas`` scan (the codec-kernel pattern;
       still zero shuffle), applying merges by minimum RANK per word
       (the GPT-2 apply algorithm) with a per-partition word→tokens cache,
@@ -1082,34 +1085,28 @@ def bpe_encode(df: DataFrame, text_col: str,
       Rank merging equals the sequential fold whenever no rule consumes a
       symbol a LATER rule produces — true of every learned merge list by
       construction (hypothesis test: fold == rank on learn_bpe_merges
-      output); auto mode refuses (ValueError) the pathological hand-built
-      lists where they could diverge rather than silently switch
-      semantics. Tokenization matches the fold form byte-for-byte:
-      ASCII-\\s+ split, lowercase, 0x1F stripped.
+      output); a large list where they could diverge (a pathological
+      hand-built one, see :func:`_rank_unsafe_rule`) is refused with a
+      ValueError rather than silently switching semantics. Tokenization
+      matches the fold form byte-for-byte: ASCII-\\s+ split, lowercase,
+      0x1F stripped.
 
     0x1F bytes are stripped from input text up front so symbols can never
     contain the fold form's wrapper; NULL text stays NULL on both paths.
     """
     sep = "\x1f"
     src = F.col(text_col) if isinstance(text_col, str) else text_col
-    if strategy is None:
-        if len(merges) <= _BPE_FOLD_AUTO_MAX:
-            strategy = "fold"
-        else:
-            bad = _rank_unsafe_rule(merges)
-            if bad is not None:
-                raise ValueError(
-                    f"bpe_encode: merge list is not rank-monotone (rule "
-                    f"{bad} consumes a symbol a later rule produces), so "
-                    f"the large-list rank path may diverge from the "
-                    f"sequential fold; pass strategy='fold' (exact, "
-                    f"O(merges*len) — tested to 2,048 merges) or "
-                    f"strategy='rank' (accept GPT-2 min-rank semantics)")
-            strategy = "rank"
-    if strategy == "rank":
+    if len(merges) > _BPE_FOLD_AUTO_MAX:
+        bad = _rank_unsafe_rule(merges)
+        if bad is not None:
+            raise ValueError(
+                f"bpe_encode: merge list is not rank-monotone (rule {bad} "
+                f"consumes a symbol a later rule produces), so the "
+                f"large-list rank path may diverge from the sequential "
+                f"fold; above {_BPE_FOLD_AUTO_MAX} merges only "
+                f"rank-monotone lists (every learned merge list) are "
+                f"accepted")
         return _bpe_encode_rank(df, text_col, merges, out)
-    if strategy != "fold":
-        raise ValueError(f"bpe_encode: unknown strategy {strategy!r}")
 
     clean = F.regexp_replace(src, "\x1f", "")
     word_enc = F.transform(
@@ -1152,8 +1149,8 @@ def bpe_encode(df: DataFrame, text_col: str,
 def _bpe_encode_rank(df: DataFrame, text_col: str,
                      merges: list[tuple[str, str]],
                      out: str = "bpe_tokens") -> DataFrame:
-    """Arrow-batched min-rank BPE application (see :func:`bpe_encode`
-    ``strategy="rank"``). One mapInPandas pass — zero shuffle; the merge
+    """Arrow-batched min-rank BPE application (the above-gate form of
+    :func:`bpe_encode`). One mapInPandas pass — zero shuffle; the merge
     table rides the task closure (~1 MB at 32k rules); a per-partition
     word cache makes warm-vocabulary cost O(doc_len) per document."""
     import re as _re
@@ -1161,7 +1158,7 @@ def _bpe_encode_rank(df: DataFrame, text_col: str,
     from pyspark.sql import types as T
 
     if not isinstance(text_col, str):
-        raise TypeError("bpe_encode strategy='rank' needs a column NAME "
+        raise TypeError("bpe_encode's rank path needs a column NAME "
                         "(the Arrow kernel reads it from the batch); "
                         "select/alias the expression first")
     base = df.drop(out) if out in df.columns else df

@@ -97,15 +97,14 @@ def expectations_report(df: DataFrame, table: str,
 
 
 def referential_report(child: DataFrame, parent: DataFrame,
-                       keys: Sequence[str], name: str,
-                       broadcast_parent: bool = True) -> DataFrame:
+                       keys: Sequence[str], name: str) -> DataFrame:
     """Orphan check: child rows whose ``keys`` have no match in parent
     (null keys are not orphans — SQL FK semantics). One anti join; the
-    parent side ships only its key columns and broadcasts when it is a
-    dimension table."""
+    parent side ships only its distinct key columns, and Spark's join
+    planning (autoBroadcastJoinThreshold plus AQE's runtime sizes) decides
+    whether it broadcasts — a dimension parent does, a fact-sized one
+    shuffles instead of being forced onto every executor."""
     pk = parent.select(*keys).distinct()
-    if broadcast_parent:
-        pk = F.broadcast(pk)
     nonnull = child
     for k in keys:
         nonnull = nonnull.filter(F.col(k).isNotNull())

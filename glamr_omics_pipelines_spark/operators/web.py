@@ -108,19 +108,19 @@ def host_suffixes(host_col) -> Column:
 
 
 def domain_blocklist_filter(df: DataFrame, host_col: str,
-                            blocklist: list[str],
-                            method: str | None = None) -> DataFrame:
+                            blocklist: list[str]) -> DataFrame:
     """Suffix-semantics domain blocklist verdict per row: ``is_blocked``
     plus ``matched_rule`` (the LONGEST matching rule — most specific —
     null when clean). A rule matches when the host equals it or ends with
     ``"." + rule`` (standard adblock/SURBL suffix semantics).
 
-    Two physical forms, auto-gated on ``len(blocklist)``:
+    Two physical forms, picked by ``len(blocklist)`` alone
+    (``_BLOCKLIST_LITERAL_MAX``):
 
-    - ``'literal'`` (default ≤ 256 rules): the blocklist is a codegen
+    - literal (≤ 256 rules): the blocklist is a codegen
       literal array and the whole verdict is ONE row-local projection —
       zero shuffle, zero join; the filter runs in the scan stage.
-    - ``'join'`` (above): suffixes explode (≤ label-count rows per host)
+    - join (above): suffixes explode (≤ label-count rows per host)
       and equi-join the broadcast blocklist frame, then a doc-grain
       struct-max picks the longest match — the 100k-domain-blocklist
       shape where a literal would bloat the plan; the host table is
@@ -131,14 +131,8 @@ def domain_blocklist_filter(df: DataFrame, host_col: str,
     """
     if not blocklist:
         raise ValueError("domain_blocklist_filter: blocklist is empty")
-    if method not in (None, "literal", "join"):
-        raise ValueError(
-            f"method must be None|'literal'|'join', got {method!r}")
-    if method is None:
-        method = ("literal" if len(blocklist) <= _BLOCKLIST_LITERAL_MAX
-                  else "join")
     rules = sorted(set(blocklist))
-    if method == "literal":
+    if len(blocklist) <= _BLOCKLIST_LITERAL_MAX:
         lit = F.array(*[F.lit(r) for r in rules])
         matches = F.filter(host_suffixes(host_col),
                            lambda s: F.array_contains(lit, s))

@@ -170,14 +170,14 @@ def test_exact_dedup_id_winner_of_other_group(spark):
 
 
 def test_cache_registry_release(spark):
-    """Operator-internal persists are released by _cache.release_caches()."""
-    from glamr_omics_pipelines_spark.operators import _cache
-    df = spark.createDataFrame([(1, "aaaa bbbb"), (2, "aaaa bbbb")],
-                               ["doc_id", "text"])
-    cands = dedup.minhash_lsh_candidates(df, "doc_id", "text",
-                                         num_hashes=8, bands=4, shingle_n=3)
-    cands.collect()  # materializes the registered bucket cache
-    assert _cache.release_caches() >= 1
+    """Operator-internal persists are released by _cache.release_caches().
+    triangle_count registers two (its canonical and oriented edge lists);
+    the registry is drained first so the count is this test's own."""
+    from glamr_omics_pipelines_spark.operators import _cache, graph
+    _cache.release_caches()
+    df = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], ["src", "dst"])
+    graph.triangle_count(df).collect()  # materializes the registered caches
+    assert _cache.release_caches() == 2
     assert _cache.release_caches() == 0  # registry drained
 
 
@@ -330,12 +330,20 @@ def test_lsh_candidate_pairs_recall_on_near_dups(spark):
     assert all(a < b for a, b in got)
 
 
+def _cos(a, b):
+    """Plain-Python cosine: the reference the exact Spark forms match."""
+    dot = sum(x * y for x, y in zip(a, b))
+    return dot / (math.sqrt(sum(x * x for x in a))
+                  * math.sqrt(sum(y * y for y in b)))
+
+
 def test_embedding_cosine_dups_pairgen_gate(spark, monkeypatch):
-    """Auto-gate (VERDICT r6 #2): above _BRUTE_PAIRGEN_MAX_ROWS the
-    default pair generation must be the LSH candidate equi-join — no
-    BroadcastNestedLoop / CartesianProduct in the plan — while
-    pair_gen='brute' keeps the exact form at any size, and below the gate
-    brute and auto agree exactly."""
+    """Auto-gate (VERDICT r6 #2): above _BRUTE_PAIRGEN_MAX_ROWS the pair
+    generation must be the LSH candidate equi-join — no
+    BroadcastNestedLoop / CartesianProduct in the plan — and below it the
+    exact all-pairs form returns exactly the pairs a Python reference
+    finds. The LSH form only drops pairs, never invents one, and keeps
+    every identical-vector pair (those collide in every table)."""
     rows = [(i, [float(i % 7), 1.0, float(i % 3)]) for i in range(40)]
     df = spark.createDataFrame(rows, "id int, v array<double>")
     monkeypatch.setattr(similarity, "_BRUTE_PAIRGEN_MAX_ROWS", 10)
@@ -343,36 +351,80 @@ def test_embedding_cosine_dups_pairgen_gate(spark, monkeypatch):
     plan = gated._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoop" not in plan
     assert "CartesianProduct" not in plan
-    brute = dedup.embedding_cosine_dups(df, "id", "v", threshold=0.999,
-                                        pair_gen="brute")
+    monkeypatch.setattr(similarity, "_BRUTE_PAIRGEN_MAX_ROWS", 100_000)
+    brute = dedup.embedding_cosine_dups(df, "id", "v", threshold=0.999)
     bplan = brute._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoop" in bplan or "CartesianProduct" in bplan
-    monkeypatch.setattr(similarity, "_BRUTE_PAIRGEN_MAX_ROWS", 100_000)
-    auto = dedup.embedding_cosine_dups(df, "id", "v", threshold=0.999)
-    assert sorted(map(tuple, auto.collect())) == \
-        sorted(map(tuple, brute.collect()))
-    with pytest.raises(ValueError):
-        dedup.embedding_cosine_dups(df, "id", "v", pair_gen="fast")
+    want = {(i, j) for i, a in rows for j, b in rows
+            if i < j and _cos(a, b) >= 0.999}
+    identical = {(i, j) for i, a in rows for j, b in rows
+                 if i < j and a == b}
+    exact = {(r.id_a, r.id_b) for r in brute.collect()}
+    lsh = {(r.id_a, r.id_b) for r in gated.collect()}
+    assert exact == want
+    assert identical <= lsh <= exact
 
 
-def test_brute_force_topk_method_gate(spark, monkeypatch):
-    """cosine_topk's gate: above the ceiling the auto path routes through
-    lsh_topk_multi (same output schema); method='brute' forces exact."""
+def test_brute_force_topk_stays_exact_above_pairgen_gate(spark,
+                                                         monkeypatch):
+    """brute_force_topk is always exact: its cost is corpus × a broadcast
+    query side (linear in the corpus, not the n² the pair-generation gate
+    guards), and ann_recall takes its ground truth from it. With the gate
+    at 10 rows a 30-row corpus still gets the exact cross-join top-k."""
     rows = [(i, [1.0, float(i), 0.5]) for i in range(30)]
     corpus = spark.createDataFrame(rows, "id int, v array<double>")
-    queries = spark.createDataFrame([(100, [1.0, 3.0, 0.5])],
+    qv = [1.0, 3.0, 0.5]
+    queries = spark.createDataFrame([(100, qv)],
                                     "query_id int, v array<double>")
     monkeypatch.setattr(similarity, "_BRUTE_PAIRGEN_MAX_ROWS", 10)
-    gated = similarity.brute_force_topk(corpus, queries, "id", "v", k=3)
-    plan = gated._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert gated.columns == ["query_id", "neighbor_id", "cosine", "rank"]
-    exact = similarity.brute_force_topk(corpus, queries, "id", "v", k=3,
-                                        method="brute")
-    assert [r.neighbor_id for r in exact.orderBy("rank").collect()][0] == 3
-    with pytest.raises(ValueError):
-        similarity.brute_force_topk(corpus, queries, "id", "v",
-                                    method="turbo")
+    got = similarity.brute_force_topk(corpus, queries, "id", "v", k=3)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoop" in plan
+    want = sorted(((round(_cos(v, qv), 6), i) for i, v in rows),
+                  key=lambda t: (-t[0], t[1]))[:3]
+    out = got.orderBy("rank").collect()
+    assert [r.neighbor_id for r in out] == [i for _, i in want]
+    assert [r.rank for r in out] == [1, 2, 3]
+    for r, (c, _) in zip(out, want):
+        assert math.isclose(r.cosine, c, abs_tol=1e-6)
+
+
+class _ConnectLikeSession:
+    """A session with no driver-side SparkContext: Spark Connect raises
+    PySparkAttributeError (an AttributeError) for ``sparkContext`` and
+    carries the application id in the spark.app.id conf."""
+
+    class conf:
+        @staticmethod
+        def get(key):
+            return "app-connect-1" if key == "spark.app.id" else None
+
+    @property
+    def sparkContext(self):
+        from pyspark.errors import PySparkAttributeError
+        raise PySparkAttributeError(
+            errorClass="JVM_ATTRIBUTE_NOT_SUPPORTED",
+            messageParameters={"attr_name": "sparkContext"})
+
+
+class _StubFrame:
+    schema = "struct<id:int>"
+
+    def __init__(self, semantic_hash):
+        self.sparkSession = _ConnectLikeSession()
+        self._semantic_hash = semantic_hash
+
+    def semanticHash(self):
+        return self._semantic_hash()
+
+
+def test_plan_key_propagates_errors():
+    """Gate code swallows no exceptions: an error from semanticHash()
+    propagates instead of silently turning the gate memo off."""
+    def broken():
+        raise RuntimeError("semanticHash failed")
+    with pytest.raises(RuntimeError, match="semanticHash failed"):
+        similarity._plan_key(_StubFrame(broken))
 
 
 def _gate_at(monkeypatch, df, gate):
@@ -441,30 +493,6 @@ def test_lsh_params_for_threshold_meets_recall():
     assert abs(similarity.lsh_candidate_recall(0.95, 12, 4) - 0.728) < 0.01
     # exact-duplicate threshold needs a single table
     assert similarity.lsh_params_for_threshold(1.0)["num_tables"] == 1
-
-
-def test_brute_force_topk_warns_on_auto_lsh(spark, monkeypatch, caplog):
-    """ADVICE r7: the silent exact->approximate flip must log a warning
-    naming the escape hatches; forced methods stay silent."""
-    import logging
-    rows = [(i, [1.0, float(i), 0.5]) for i in range(30)]
-    corpus = spark.createDataFrame(rows, "id int, v array<double>")
-    queries = spark.createDataFrame([(100, [1.0, 3.0, 0.5])],
-                                    "query_id int, v array<double>")
-    monkeypatch.setattr(similarity, "_BRUTE_PAIRGEN_MAX_ROWS", 10)
-    similarity.clear_gate_cache()
-    with caplog.at_level(logging.WARNING,
-                         logger="glamr_omics_pipelines_spark.operators"
-                                ".similarity"):
-        similarity.brute_force_topk(corpus, queries, "id", "v", k=3)
-    assert any("method='brute'" in r.message for r in caplog.records)
-    caplog.clear()
-    with caplog.at_level(logging.WARNING,
-                         logger="glamr_omics_pipelines_spark.operators"
-                                ".similarity"):
-        similarity.brute_force_topk(corpus, queries, "id", "v", k=3,
-                                    method="lsh")
-    assert not any("method='brute'" in r.message for r in caplog.records)
 
 
 def test_pq_encode_picks_nearest_codeword_and_adc_matches(spark):
@@ -674,28 +702,8 @@ def test_plan_key_connect_fallback_uses_conf_app_id():
     sparkContext) must still yield a stable memo key via the
     spark.app.id conf — raising there would silently disable
     memoization and reintroduce the per-call probe job."""
-    class _Conf:
-        def get(self, k):
-            assert k == "spark.app.id"
-            return "app-20260816-xyz"
-
-    class _Sess:
-        conf = _Conf()
-
-        @property
-        def sparkContext(self):
-            raise RuntimeError("SPARK_CONNECT: no sparkContext")
-
-    class _DF:
-        sparkSession = _Sess()
-        schema = "struct<v:array<double>>"
-
-        def semanticHash(self):
-            return 424242
-
-    key = similarity._plan_key(_DF())
-    assert key == ("app-20260816-xyz", 424242,
-                   hash("struct<v:array<double>>"))
+    key = similarity._plan_key(_StubFrame(lambda: 424242))
+    assert key == ("app-connect-1", 424242, hash("struct<id:int>"))
 
 
 # ---------------------------------------------------------------------------
@@ -850,7 +858,7 @@ def test_ann_recall_probe_all_ivf_is_perfect(spark):
     q = emb.filter(F.col("vec_id") < 3) \
         .select(F.col("vec_id").alias("query_id"), "embedding")
     exact = similarity.brute_force_topk(emb, q, "vec_id", "embedding",
-                                        k=4, method="brute")
+                                        k=4)
     full = similarity.ivf_topk(emb, q, "vec_id", "embedding", cents,
                                k=4, nprobe=4)
     out = similarity.ann_recall(full, exact).collect()
@@ -968,7 +976,14 @@ def test_minhash_incremental_only_cross_pairs(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_assign_cells_strategies_agree(spark):
+def _assign_gate(monkeypatch, form):
+    """Force assign_cells' kernel through its model-shape gate: 'arrow'
+    opens it to every model, 'expr' closes it to every model."""
+    monkeypatch.setattr(similarity, "_ASSIGN_ARROW_MIN_CELL_DIMS",
+                        0 if form == "arrow" else math.inf)
+
+
+def test_assign_cells_strategies_agree(spark, monkeypatch):
     import random
     rng = random.Random(17)
     # well-separated data: rows near one of 3 distant anchors
@@ -978,9 +993,13 @@ def test_assign_cells_strategies_agree(spark):
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     got = {}
     for strat in ("expr", "arrow"):
-        out = similarity.assign_cells(df, "embedding", anchors,
-                                      strategy=strat)
-        got[strat] = {r["vec_id"]: r["ivf_cell"] for r in out.collect()}
+        with monkeypatch.context() as m:
+            _assign_gate(m, strat)
+            out = similarity.assign_cells(df, "embedding", anchors)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert ("MapInPandas" in plan) == (strat == "arrow")
+            got[strat] = {r["vec_id"]: r["ivf_cell"]
+                          for r in out.collect()}
     assert got["expr"] == got["arrow"]
     assert all(got["expr"][i] == i % 3 for i in range(120))
 
@@ -998,29 +1017,29 @@ def test_assign_cells_auto_picks_by_model_size(spark):
     plan = big._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan              # 64x64 >= 4096 -> arrow
     assert big.collect()[0]["ivf_cell"] == 7  # still correct
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        similarity.assign_cells(df64, "embedding", big_cents,
-                                strategy="nope")
 
 
-def test_kmeans_lloyd_arrow_strategy_matches_expr(spark):
+def test_kmeans_lloyd_arrow_strategy_matches_expr(spark, monkeypatch):
     rows = [(1, [0.0, 0.0]), (2, [0.2, 0.0]), (3, [0.0, 0.2]),
             (4, [10.0, 10.0]), (5, [10.2, 10.0]), (6, [10.0, 10.2])]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     init = [[1.0, 1.0], [9.0, 9.0]]
     a = similarity.kmeans_lloyd(df, "embedding", init, iters=3)
-    b = similarity.kmeans_lloyd(df, "embedding", init, iters=3,
-                                strategy="arrow")
+    with monkeypatch.context() as m:
+        _assign_gate(m, "arrow")
+        b = similarity.kmeans_lloyd(df, "embedding", init, iters=3)
     assert a == b
 
 
-def test_semdedup_arrow_strategy_matches_expr(spark):
+def test_semdedup_arrow_strategy_matches_expr(spark, monkeypatch):
     out_e = dedup.semdedup(_semdedup_frame(spark), "vec_id", "embedding",
                            _SEM_CENTS, threshold=0.95)
-    out_a = dedup.semdedup(_semdedup_frame(spark), "vec_id", "embedding",
-                           _SEM_CENTS, threshold=0.95,
-                           assign_strategy="arrow")
+    with monkeypatch.context() as m:
+        _assign_gate(m, "arrow")
+        out_a = dedup.semdedup(_semdedup_frame(spark), "vec_id",
+                               "embedding", _SEM_CENTS, threshold=0.95)
+        plan = out_a._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan
     key = lambda r: r["vec_id"]
     assert sorted(out_e.collect(), key=key) == sorted(out_a.collect(),
                                                       key=key)

@@ -72,3 +72,32 @@ def test_release_ritual_lives_in_session():
     assert not offenders, (
         "call session.release(spark) instead of the registry release "
         "functions:\n" + "\n".join(offenders))
+
+
+FORM_SELECTOR = re.compile(
+    r"^(strategy|method|pair_gen|\w+_strategy|local_fold|rank_proxy|"
+    r"broadcast_\w+)$")
+
+
+def test_operators_take_no_form_selector():
+    """A gate decides an operator's physical form at one site from its
+    module threshold; no function takes a per-call selector, and a test
+    forces a form by monkeypatching the threshold. ``mode`` (write modes)
+    and ``stub`` (codec choice, a different output) are not form
+    selectors and do not match."""
+    offenders = []
+    for path in sorted((REPO / "glamr_omics_pipelines_spark").rglob("*.py")):
+        rel = path.relative_to(REPO)
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.Lambda)):
+                a = node.args
+                params = a.posonlyargs + a.args + a.kwonlyargs + [
+                    p for p in (a.vararg, a.kwarg) if p is not None]
+                offenders += [
+                    f"{rel}:{node.lineno} "
+                    f"{getattr(node, 'name', '<lambda>')}({p.arg})"
+                    for p in params if FORM_SELECTOR.match(p.arg)]
+    assert not offenders, (
+        "per-call form selectors (let the gate's module threshold decide; "
+        "tests monkeypatch it):\n" + "\n".join(offenders))

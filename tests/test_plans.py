@@ -3,6 +3,7 @@ predicate pushdown to the parquet scan, column pruning, dimension broadcast,
 codegen — must survive refactors. These assert plan *properties*, not plan
 strings."""
 
+import math
 import re
 import sys
 
@@ -542,7 +543,7 @@ BNLJ_ALLOWLIST = {
     # only the PQ-coded corpus. The intended PQ shape at any scale.
     "pq_ann",
     # r9: the recall harness's EXACT ground-truth side is brute_force_topk
-    # (method='brute' — the declared baseline class, same as cosine_topk);
+    # (always exact — the declared baseline class, same as cosine_topk);
     # the approx side under test is the IVF equi join.
     "ann_recall",
 }
@@ -624,7 +625,7 @@ def test_pq_encode_zero_shuffle_and_adc_broadcast(spark):
     assert "query_id" in bcast and "vec_id" not in bcast
 
 
-def test_bpe_encode_fold_plan_pure_jvm_zero_shuffle(spark):
+def test_bpe_encode_fold_plan_pure_jvm_zero_shuffle(spark, monkeypatch):
     """r9: the rebuilt fold form (Column tree + chunked projections) must
     stay what the r8 form was — a pure-JVM scan-stage op: no Python eval,
     no exchange, and the chunk barriers must SURVIVE optimization (more
@@ -634,7 +635,8 @@ def test_bpe_encode_fold_plan_pure_jvm_zero_shuffle(spark):
     from glamr_omics_pipelines_spark.operators import text as T
     merges = [("a", "b")] * 300   # 3 chunks of 128/128/44
     df = spark.read.parquet(f"{SF}/documents.parquet").select("text")
-    out = T.bpe_encode(df, "text", merges, strategy="fold")
+    monkeypatch.setattr(T, "_BPE_FOLD_AUTO_MAX", math.inf)
+    out = T.bpe_encode(df, "text", merges)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "MapInPandas" not in plan
     assert "Exchange" not in plan

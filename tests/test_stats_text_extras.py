@@ -364,6 +364,13 @@ def _bpe_reference(words, merges):
     return out
 
 
+def _bpe_form(monkeypatch, form):
+    """Force bpe_encode's form through its merge-count gate: 'fold' opens
+    the fold ceiling to any list, 'rank' closes it to every list."""
+    monkeypatch.setattr(text, "_BPE_FOLD_AUTO_MAX",
+                        math.inf if form == "fold" else 0)
+
+
 def test_bpe_encode_matches_reference_fold(spark):
     """r8: the replace-chain encoder (wrapped-symbol string replaces)
     must equal the reference whole-symbol fold on adversarial content —
@@ -405,7 +412,7 @@ def test_bpe_encode_random_property(spark):
         assert got[doc_id] == _bpe_reference(words, merges), doc_id
 
 
-def test_bpe_encode_fold_2048_merges_column_tree(spark):
+def test_bpe_encode_fold_2048_merges_column_tree(spark, monkeypatch):
     """r9 (VERDICT r8 'what's wrong' #1): the fold form must survive a
     2,048-rule merge list — the judge measured the old F.expr SQL string
     failing at 500 (ParseException) and 2,000 (ANTLR StackOverflowError).
@@ -422,14 +429,15 @@ def test_bpe_encode_fold_2048_merges_column_tree(spark):
                                  for _ in range(rng.randint(1, 8)))
                          for _ in range(6))) for i in range(8)]
     df = spark.createDataFrame(docs, "doc_id int, text string")
+    _bpe_form(monkeypatch, "fold")
     got = {r.doc_id: list(r.bpe_tokens) for r in
-           T.bpe_encode(df, "text", merges, strategy="fold").collect()}
+           T.bpe_encode(df, "text", merges).collect()}
     for doc_id, txt in docs:
         assert got[doc_id] == _bpe_reference(txt.lower().split(), merges), \
             doc_id
 
 
-def test_bpe_encode_rank_equals_fold_on_learned_merges(spark):
+def test_bpe_encode_rank_equals_fold_on_learned_merges(spark, monkeypatch):
     """The rank path (GPT-2 min-rank apply) must equal the sequential fold
     on LEARNED merge lists — the rank-monotonicity property every real
     tokenizer model has by construction."""
@@ -444,9 +452,10 @@ def test_bpe_encode_rank_equals_fold_on_learned_merges(spark):
     merges = T.learn_bpe_merges(df, "text", num_merges=8)
     assert merges
     fold = {r.doc_id: list(r.bpe_tokens) for r in
-            T.bpe_encode(df, "text", merges, strategy="fold").collect()}
+            T.bpe_encode(df, "text", merges).collect()}   # 8 rules: fold
+    _bpe_form(monkeypatch, "rank")
     rank = {r.doc_id: list(r.bpe_tokens) for r in
-            T.bpe_encode(df, "text", merges, strategy="rank").collect()}
+            T.bpe_encode(df, "text", merges).collect()}
     assert fold == rank
 
 
@@ -476,17 +485,17 @@ def test_bpe_encode_rank_32k_merges_real_vocab_scale(spark):
     merges.extend(effective[ei:])
     assert len(merges) >= 32000
     assert T._rank_unsafe_rule(merges) is None
-    got = T.bpe_encode(df, "text", merges)  # auto → rank (len > 1024)
-    want = T.bpe_encode(df, "text", effective, strategy="fold")
+    got = T.bpe_encode(df, "text", merges)  # gate → rank (len > 1024)
+    want = T.bpe_encode(df, "text", effective)  # gate → fold (6 rules)
     g = {r.doc_id: list(r.bpe_tokens) for r in got.collect()}
     w = {r.doc_id: list(r.bpe_tokens) for r in want.collect()}
     assert g == w and len(g) == df.count()
 
 
 def test_bpe_encode_auto_refuses_non_monotone_large_list(spark):
-    """Auto mode must not silently switch semantics: a >1024-rule list
+    """The gate must not silently switch semantics: a >1024-rule list
     where an early rule consumes a later rule's output raises (the fold
-    and rank algorithms can diverge there); explicit strategies accept."""
+    and rank algorithms can diverge there); a short list folds."""
     import pytest
     from glamr_omics_pipelines_spark.operators import text as T
     # rule 0 consumes 'th' which only rule N-1 produces
@@ -495,35 +504,38 @@ def test_bpe_encode_auto_refuses_non_monotone_large_list(spark):
               + [("t", "h")])
     df = spark.createDataFrame([(1, "the")], "doc_id int, text string")
     assert T._rank_unsafe_rule(merges) == 0
-    with pytest.raises(ValueError, match="rank-monotone"):
+    with pytest.raises(ValueError, match="rank-monotone") as err:
         T.bpe_encode(df, "text", merges)
-    # explicit rank: documented GPT-2 semantics — 'th'+'e' after 't'+'h'
-    r = T.bpe_encode(df, "text", merges, strategy="rank").collect()[0]
-    assert list(r.bpe_tokens) == ["the", "</w>"]
-    # explicit fold: rule 0 is a no-op ('th' does not exist yet)
-    f = T.bpe_encode(df, "text", merges[:1] + merges[-1:],
-                     strategy="fold").collect()[0]
+    assert "strategy" not in str(err.value)
+    # two rules fold: rule 0 is a no-op ('th' does not exist yet)
+    f = T.bpe_encode(df, "text", merges[:1] + merges[-1:]).collect()[0]
     assert list(f.bpe_tokens) == ["th", "e", "</w>"]
 
 
-def test_bpe_encode_null_and_empty_text_both_paths(spark):
+def test_bpe_encode_null_and_empty_text_both_paths(spark, monkeypatch):
     from glamr_omics_pipelines_spark.operators import text as T
     df = spark.createDataFrame([(1, None), (2, ""), (3, "ab")],
                                "doc_id int, text string")
     for strat in ("fold", "rank"):
-        got = {r.doc_id: (None if r.bpe_tokens is None else
-                          list(r.bpe_tokens))
-               for r in T.bpe_encode(df, "text", [("a", "b")],
-                                     strategy=strat).collect()}
+        with monkeypatch.context() as m:
+            _bpe_form(m, strat)
+            out = T.bpe_encode(df, "text", [("a", "b")])
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert ("MapInPandas" in plan) == (strat == "rank"), strat
+            got = {r.doc_id: (None if r.bpe_tokens is None else
+                              list(r.bpe_tokens))
+                   for r in out.collect()}
         assert got == {1: None, 2: [], 3: ["ab", "</w>"]}, strat
 
 
-def test_bpe_encode_fold_preserves_colliding_scratch_name(spark):
+def test_bpe_encode_fold_preserves_colliding_scratch_name(spark,
+                                                         monkeypatch):
     """r9 review: an input column named like the fold path's scratch
     column must survive untouched."""
     from glamr_omics_pipelines_spark.operators import text as T
     df = spark.createDataFrame([(1, "ab", "keepme")],
                                "doc_id int, text string, _bpe_tokens_doc string")
-    r = T.bpe_encode(df, "text", [("a", "b")], strategy="fold").collect()[0]
+    _bpe_form(monkeypatch, "fold")
+    r = T.bpe_encode(df, "text", [("a", "b")]).collect()[0]
     assert r._bpe_tokens_doc == "keepme"
     assert list(r.bpe_tokens) == ["ab", "</w>"]

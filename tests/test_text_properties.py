@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+import math
 import re
 from collections import Counter
 
@@ -125,10 +126,16 @@ def test_bpe_fold_and_rank_agree_on_monotone_lists(spark, ds, merges):
     assume(T._rank_unsafe_rule(merges) is None)
     df = spark.createDataFrame(list(enumerate(ds)),
                                "doc_id int, text string")
-    fold = {r.doc_id: list(r.bpe_tokens) for r in
-            T.bpe_encode(df, "text", merges, strategy="fold").collect()}
-    rank = {r.doc_id: list(r.bpe_tokens) for r in
-            T.bpe_encode(df, "text", merges, strategy="rank").collect()}
+    # hypothesis runs many examples per test call, so each form is forced
+    # through the merge-count gate in a context restored before the next
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(T, "_BPE_FOLD_AUTO_MAX", math.inf)
+        fold = {r.doc_id: list(r.bpe_tokens) for r in
+                T.bpe_encode(df, "text", merges).collect()}
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(T, "_BPE_FOLD_AUTO_MAX", 0)
+        rank = {r.doc_id: list(r.bpe_tokens) for r in
+                T.bpe_encode(df, "text", merges).collect()}
     for i, s in enumerate(ds):
         want = _bpe_fold_ref(_tok(s), merges)
         assert fold[i] == want, (i, s, merges)

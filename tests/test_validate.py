@@ -64,9 +64,30 @@ def test_referential_orphans_and_null_fk(spark):
 
 @pytest.mark.slow
 def test_referential_shuffle_path_matches_broadcast(spark):
+    """Spark's join planning picks the anti join's form; with both
+    broadcast thresholds off the parent shuffles instead, and the count
+    is the same."""
     child = spark.createDataFrame([Row(fk=i % 5) for i in range(50)])
     parent = spark.createDataFrame([Row(fk=i) for i in range(3)])
-    a = validate.referential_report(child, parent, ["fk"], "x").collect()[0]
-    b = validate.referential_report(child, parent, ["fk"], "x",
-                                    broadcast_parent=False).collect()[0]
+
+    def run():
+        out = validate.referential_report(child, parent, ["fk"], "x")
+        r = out.collect()[0]
+        return r, out._jdf.queryExecution().executedPlan().toString()
+    a, plan_a = run()
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        b, plan_b = run()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "BroadcastHashJoin" in plan_a
+    assert "BroadcastHashJoin" not in plan_b
     assert a.violations == b.violations == 20  # fk 3 and 4, 10 rows each

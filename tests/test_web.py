@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -71,13 +73,29 @@ def test_blocklist_longest_match_and_clean(spark):
                    5: (None, False)}
 
 
-def test_blocklist_literal_join_agree(spark):
+def _blocklist_form(monkeypatch, form):
+    """Force domain_blocklist_filter's form through its size gate:
+    'literal' opens the literal ceiling to any list, 'join' closes it."""
+    monkeypatch.setattr(web, "_BLOCKLIST_LITERAL_MAX",
+                        math.inf if form == "literal" else 0)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_blocklist_literal_join_agree(spark, monkeypatch):
     rows = [(i, h) for i, h in enumerate(
         ["a.b.es.org", "es.org", "org", "ads.x.org.evil", "src0.es.org",
          "x.src0.es.org", "ads.x.org", "a.ads.x.org", "", "just-a-label"])]
     df = spark.createDataFrame(rows, ["doc_id", "host"])
-    lit = web.domain_blocklist_filter(df, "host", BLOCK, method="literal")
-    jn = web.domain_blocklist_filter(df, "host", BLOCK, method="join")
+    with monkeypatch.context() as m:
+        _blocklist_form(m, "literal")
+        lit = web.domain_blocklist_filter(df, "host", BLOCK)
+    with monkeypatch.context() as m:
+        _blocklist_form(m, "join")
+        jn = web.domain_blocklist_filter(df, "host", BLOCK)
+    assert "Join" not in _plan(lit) and "Join" in _plan(jn)
     cols = ["doc_id", "host", "matched_rule", "is_blocked"]
     assert (sorted(map(tuple, lit.select(cols).collect()))
             == sorted(map(tuple, jn.select(cols).collect())))
@@ -87,25 +105,25 @@ def test_blocklist_guards(spark):
     df = spark.createDataFrame([(1, "a.com")], ["doc_id", "host"])
     with pytest.raises(ValueError):
         web.domain_blocklist_filter(df, "host", [])
-    with pytest.raises(ValueError):
-        web.domain_blocklist_filter(df, "host", ["a.com"], method="nope")
 
 
-def test_blocklist_literal_is_single_projection(spark):
+def test_blocklist_literal_is_single_projection(spark, monkeypatch):
     """The literal form must stay row-local: no exchange/join in the plan."""
     df = spark.createDataFrame([(1, "a.es.org")], ["doc_id", "host"])
-    out = web.domain_blocklist_filter(df, "host", BLOCK, method="literal")
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    _blocklist_form(monkeypatch, "literal")
+    plan = _plan(web.domain_blocklist_filter(df, "host", BLOCK))
     assert "Exchange" not in plan and "Join" not in plan
 
 
-def test_blocklist_join_form_scratch_collision_safe(spark):
+def test_blocklist_join_form_scratch_collision_safe(spark, monkeypatch):
     """Caller columns named like the join form's scratch names must
     survive untouched (the r9 hashed_linear_score lesson)."""
     df = spark.createDataFrame(
         [(1, "x.es.org", "keepme", "alsokeep")],
         ["doc_id", "host", "_dbf_host", "_dbf_best"])
-    out = web.domain_blocklist_filter(df, "host", BLOCK,
-                                      method="join").collect()[0]
+    _blocklist_form(monkeypatch, "join")
+    res = web.domain_blocklist_filter(df, "host", BLOCK)
+    assert "Join" in _plan(res)
+    out = res.collect()[0]
     assert out["_dbf_host"] == "keepme" and out["_dbf_best"] == "alsokeep"
     assert out["matched_rule"] == "es.org" and out["is_blocked"]

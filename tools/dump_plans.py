@@ -56,9 +56,10 @@ def main() -> int:
     print("Expected BroadcastNestedLoop occurrences: `cross_join_audit`"
           " (J7 is literally a cross join) and `embedding_dups` /"
           " `cosine_topk` (exact forms with a broadcast side — sub-gate"
-          " only: above `_BRUTE_PAIRGEN_MAX_ROWS` both auto-route to LSH"
-          " candidate/bucket joins; `lsh_ann` / `ivf_ann` are the explicit"
-          " scale paths). Python eval"
+          " only for `embedding_dups`: above `_BRUTE_PAIRGEN_MAX_ROWS` it"
+          " auto-routes to LSH candidate joins; `cosine_topk` stays exact"
+          " at any size, its cost linear in the corpus; `lsh_ann` /"
+          " `ivf_ann` are the explicit scale paths). Python eval"
           " appears only in `multimodal_features` (Arrow-batched"
           " mapInPandas decode — by design), `phash_dedup` / `afp_dedup` /"
           " `video_dedup` (r9: Arrow-batched signature kernels — image DCT"
@@ -70,7 +71,7 @@ def main() -> int:
           " JVM-split; the FASTA reader S2 is pure JVM),"
           " `embedding_covariance` (mapInPandas BLAS partial Gramian —"
           " measured 2.3× over the pure-JVM nested-posexplode form, which"
-          " remains available as gram_matrix(strategy='explode')), and"
+          " it replaced), and"
           " `wordpiece_encode` (the greedy WordPiece tokenizer is one"
           " Arrow-batched mapInPandas scan with a per-task word cache). The"
           " BroadcastNestedLoop in `rfm_segments` (1-row quintile-threshold attach) / `doc_lm_score` / `temperature_sample` / `pmi_collocations` /"
@@ -84,7 +85,8 @@ def main() -> int:
           " and in `dbscan` the sub-gate brute pair-gen (AUTO-GATED as of"
           " r7: above `similarity._BRUTE_PAIRGEN_MAX_ROWS` corpus rows the"
           " default pair generator is `lsh_candidate_pairs` bucket"
-          " equi-joins; `pair_gen=`/`candidates=` override). `pq_ann`'s"
+          " equi-joins, and the gate alone decides; an explicit"
+          " `candidates=` frame is the pair list instead). `pq_ann`'s"
           " BroadcastNestedLoop (r8) is the ADC scan: the broadcast side"
           " is the QUERY frame carrying precomputed m×k distance tables"
           " (a handful of rows), and the scan side reads only the coded"
@@ -94,7 +96,8 @@ def main() -> int:
           " join on `ivf_cell` (queries explode to their nprobe probed"
           " cells), so candidate volume is cell-bounded. `ann_recall`'s"
           " BroadcastNestedLoop (r9) is its EXACT ground-truth side —"
-          " brute_force_topk(method='brute'), the declared baseline class"
+          " brute_force_topk, always exact and never gated, the declared"
+          " baseline class"
           " (same as `cosine_topk`); the approx side under test (IVF)"
           " joins equi on the probed cell. `bpe_encode`"
           " stays pure-JVM in the plan: the catalog row runs the"

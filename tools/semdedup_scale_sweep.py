@@ -28,10 +28,10 @@ does the same (n_cells = n / CELL_LOAD) and checks:
      with the corpus, BOTH stages are Θ(n²·dim / CELL_LOAD): the pair
      stage does n²/(2·n_cells) dots and the ASSIGNMENT does n·n_cells
      centroid distances per pass — so the expected factor is ~K², not K.
-     (At 100 TB the assignment is the piece you vectorize — a BLAS
-     mapInPandas kernel like gram_matrix's arrow strategy, or a coarse
-     two-level quantizer; the sweep pins the PLAN contract: equi-join
-     pair stage, Σ|cell|² volume, cell-scoped recall.)
+     (At 100 TB the assignment is the piece you vectorize — the BLAS
+     mapInPandas kernel assign_cells switches to at its model-shape gate,
+     or a coarse two-level quantizer; the sweep pins the PLAN contract:
+     equi-join pair stage, Σ|cell|² volume, cell-scoped recall.)
 
 Usage: python tools/semdedup_scale_sweep.py [n_base] [K]
 Prints one JSON line; exits non-zero on any violated bound.
