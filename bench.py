@@ -174,8 +174,12 @@ def main() -> None:
         "mt_anchor": MT_ANCHOR,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
+    # the tracked round record is the default tier's; any other tier's
+    # details go to a file of their own, which git ignores
+    details_file = ("BENCH_DETAILS.json" if sf == "0.1"
+                    else f"BENCH_DETAILS_sf{sf}.json")
     details_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "BENCH_DETAILS.json")
+                                details_file)
     with open(details_path, "w") as fh:
         json.dump(details, fh, indent=1, sort_keys=True)
     for name in HEADLINE:  # per-query lines BEFORE the summary line
@@ -204,7 +208,7 @@ def main() -> None:
         "stable30_n": len(stable30),
         "n_errors": len(errors),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "details_file": "BENCH_DETAILS.json",
+        "details_file": details_file,
     }
     if errors:
         out["total_incomparable"] = True

@@ -20,24 +20,33 @@ driver and scan only the files whose ``{sample}`` is not yet a partition
 directory of their table, so an incremental load reads only the new
 samples' files. The globs, like the warehouse root, are local paths.
 
-Each stage that runs pays only for its write. `incremental_append` is one
-partitioned parquet append. Its anti-join is a filter on the
-`<key>=<value>` partition directories already under the table root (a
-local-filesystem listing, see `sources.warehouse`), so a load spends no
-Spark job on finding its loaded keys; a stage that runs with nothing new
-appends zero rows and writes no data file. The stage then hands the
-table on as a lazy read with a known schema — the registry's pinned
-contract for a base table, the view frame's schema for a view — so
-the read-back infers nothing and runs no job (only `tax_info`, with more
-partition directories than Spark's parallel-discovery threshold, pays
-one listing job). Nothing is counted: every write logs the rows it wrote
-as `rows` in `_load_ledger.jsonl` from a metric observed on the write
-itself, and a table's total, where one is wanted, is read from its
+Each stage that runs pays only for its write, and a stage that does
+not run builds, lists and plans nothing. The layout is declared once per
+table, in `build_dag`: a table keyed by `sample` is partitioned by it;
+`tax_info`, whose merge key is its primary key `tax_id`, is written
+unpartitioned (one directory per taxon would be one file per row, and
+its read-back would pay a parallel partition-listing job). For a
+partitioned table `incremental_append` is one parquet append whose
+anti-join is a filter on the `<key>=<value>` directories already under
+the table root (a local-filesystem listing, see `sources.warehouse`), so
+a load spends no Spark job on finding its loaded keys. For `tax_info` the
+loaded keys are its key column, read from its parquet files with pyarrow,
+and the anti-join is a null-safe left-anti join against that column: one
+broadcast job more, paid only when the taxonomy frame changed. A stage
+that runs with nothing new appends zero rows and leaves no new data
+file. The stage then hands the table on as a lazy read with a pinned
+schema — the registry's contract for a base table, and for a view the
+schema its last refresh pinned — so the read-back infers and lists
+nothing and runs no job, and an up-to-date view never builds its frame.
+`SchemaRegistry.conform` hands a frame that already matches the
+contract on as it is. Nothing is counted: every write logs the rows it
+wrote as `rows` in `_load_ledger.jsonl` from a metric observed on the
+write itself, and a table's total, where one is wanted, is read from its
 parquet footers (`pyarrow.parquet.ParquetFile(...).metadata.num_rows`,
 no Spark job), not from a `count()`. On perfbench's seeded inputs
-(4-core box) a build runs 21 Spark jobs on the initial load, 20 on an
-incremental load (`tax_info` is up to date) and 1 on a no-op rerun (the
-`tax_info` read-back's listing). The bracken stage loads only the long form
+(4-core box) a build runs 20 Spark jobs on the initial load, 19 on an
+incremental load (`tax_info` is up to date) and 0 on a no-op rerun.
+The bracken stage loads only the long form
 (`glamr.bracken_long`): the wide pivots of `merge_bracken` would each
 run a distinct-values job for nothing, and the tpm stage attaches both
 per-sample totals with one aggregate (`abundance.tpm_rpkm`). Both views
@@ -53,6 +62,10 @@ stages downstream of it. A loaded sample is never reloaded: an edited file
 or frame row of a sample already in a base table reruns its stage, which
 appends nothing for that sample (the anti-join's contract). A change to a
 stage's code is not a trigger; delete the table's directory to rebuild it.
+A root whose `tax_info` is still partitioned by `tax_id` (written before
+the dimension went unpartitioned) fails its next `tax_info` load with a
+`ValueError`; deleting that directory rebuilds it. A view written before
+views pinned their schema is refreshed once by its next build.
 """
 
 from __future__ import annotations
@@ -85,11 +98,13 @@ def build_dag(wh: Warehouse, registry: SchemaRegistry,
     read_counts, read_mapping, uniref lookup+index)."""
     dag = StageDAG(ledger_path=f"{wh.root}/_run_ledger.jsonl")
 
-    def ingest(name: str, table: str, make, key: str = "sample", **inputs):
-        """A base-table stage: append the new keys of ``make(spark, ctx)``."""
+    def ingest(name: str, table: str, make, key: str = "sample",
+               partitioned: bool = True, **inputs):
+        """A base-table stage: append the new keys of ``make(spark, ctx)``,
+        in a table partitioned by ``key`` unless ``partitioned`` is off."""
         def run(spark, ctx):
             wh.incremental_append(registry.conform(make(spark, ctx), table),
-                                  table, key)
+                                  table, key, partitioned)
             return wh.read(spark, table, registry.get(table))
 
         def reuse(spark, ctx):
@@ -98,23 +113,26 @@ def build_dag(wh: Warehouse, registry: SchemaRegistry,
         dag.stage(name, output=wh.path(table), reuse=reuse, **inputs)(run)
 
     def refresh(name: str, table: str, make, inputs: list):
-        """A derived-view stage: rewrite ``table`` as ``make(*inputs)``."""
+        """A derived-view stage: rewrite ``table`` as ``make(*inputs)`` and
+        pin its schema, which an up-to-date view is read back with."""
         def run(spark, ctx):
             df = make(*inputs)
             wh.save_view(df, table)
+            registry.pin(table, df.schema)
             return wh.read(spark, table, df.schema)
 
         def reuse(spark, ctx):
-            return wh.read(spark, table, make(*inputs).schema)
+            return wh.read(spark, table, registry.get(table))
+        # a view written before views pinned their schema refreshes once
         dag.stage(name, frames=inputs, output=wh.path(table),
-                  reuse=reuse)(run)
+                  reuse=reuse if registry.has(table) else None)(run)
 
     def unloaded(files: list[str], pattern: str, table: str) -> list[str]:
         """``files`` minus those whose ``{sample}`` (``pattern``'s wildcard,
         the regex ``with_path_columns`` applies) is loaded in ``table``."""
         names, regex = _pattern_regex(pattern)
         group = names.index("sample") + 1
-        loaded = wh._listed_keys(table, "sample")
+        loaded = wh.loaded_keys(table, "sample")
 
         def sample(path):
             m = re.search(regex, path)
@@ -126,8 +144,10 @@ def build_dag(wh: Warehouse, registry: SchemaRegistry,
     tpm_in = [frames[k] for k in
               ("read_mapping", "uniref_lookup", "uniref_index")]
 
+    # the layout: every table is partitioned by its merge key `sample`
+    # except the taxonomy dimension, whose merge key is its primary key
     ingest("tax_info", "tax_info", lambda spark, ctx: frames["tax_info"],
-           key="tax_id", frames=[frames["tax_info"]])
+           key="tax_id", partitioned=False, frames=[frames["tax_info"]])
     ingest("bracken", "bracken_species", lambda spark, ctx: glamr.bracken_long(
         spark, unloaded(bracken_files, glamr.BRACKEN_PATTERN,
                         "bracken_species"), ctx["tax_info"]),

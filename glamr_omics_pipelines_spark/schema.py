@@ -18,6 +18,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
 
+def _columns(schema: StructType) -> list:
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
 class SchemaRegistry:
     def __init__(self, root: str):
         self.root = root
@@ -40,11 +44,15 @@ class SchemaRegistry:
     def conform(self, df: DataFrame, table: str) -> DataFrame:
         """Pin on first sight; afterwards project+cast the frame to the pinned
         contract. Missing columns raise; extra columns are dropped (the
-        reference's append would likewise fail on missing cols)."""
+        reference's append would likewise fail on missing cols). A frame
+        whose (name, type) list already is the contract passes through as
+        it is, with no projection to plan."""
         if not self.has(table):
             self.pin(table, df.schema)
             return df
         target = self.get(table)
+        if _columns(df.schema) == _columns(target):
+            return df
         have = {f.name for f in df.schema.fields}
         missing = [f.name for f in target.fields if f.name not in have]
         if missing:

@@ -6,14 +6,22 @@ anti-joins against the samples already in the table, and appends
 anti-join, not from exactly-once sinks. B-tree indexes are dropped around
 bulk loads and rebuilt (postgres.Rmd:414-432).
 
-Spark-first: append-only Parquet partitioned by the merge key. Because the
-key IS the partition column, the loaded keys are the ``<key>=<value>``
-directory names under the table root, so the anti-join reads a directory
-listing and never the data (the purpose the reference's recursive-CTE loose
-index scan serves, postgres.Rmd:22-37). The listed values become a typed
+Spark-first: append-only Parquet, laid out per table by its merge key.
+A table keyed by ``sample`` is partitioned by it. Because the key IS the
+partition column, the loaded keys are the ``<key>=<value>`` directory
+names under the table root, so the anti-join reads a directory listing
+and never the data (the purpose the reference's recursive-CTE loose index
+scan serves, postgres.Rmd:22-37). The listed values become a typed
 ``isin`` filter on the incoming frame, and the append is the one Spark job
-of a load: no key scan, no broadcast, no count. The new keys are the
-listing after the write minus the listing before it. Index drop/rebuild
+of a load: no key scan, no broadcast, no count. A dimension whose merge
+key is its own primary key (``tax_info``, one row per ``tax_id``) is
+written unpartitioned instead: one directory per key would be one file
+per row, millions at NCBI scale, and a read of the table would pay a
+parallel listing job. Its loaded keys are its key column, read from the
+parquet files on the driver with pyarrow (no Spark job), and its
+anti-join is a null-safe ``left_anti`` join against that column, so no
+per-key literal list crosses py4j. Either way the new keys are the loaded
+keys after the write minus those before it. Index drop/rebuild
 disappears entirely. A ledger records every load batch for audit
 (pypelib/post.py checkout-file analog): each append and view refresh logs
 the rows it wrote as ``rows``, counted by an ``Observation`` on the write
@@ -25,7 +33,8 @@ the files, so the read runs no job, and a partition key keeps its type
 instead of one guessed from its directory names (``"007"`` would read
 back as the int 7, a long ``tax_id`` as an int).
 
-Listing rules, mirroring how Spark names partition directories:
+Listing rules for a table partitioned by its key, mirroring how Spark
+names partition directories:
   - values are unescaped the way Spark escapes them (``%XX`` for ``:``,
     ``%``, ``/``, ``=`` and the other path-unsafe characters);
   - ``__HIVE_DEFAULT_PARTITION__`` holds the null key (and the empty
@@ -34,7 +43,8 @@ Listing rules, mirroring how Spark names partition directories:
     error for an integer key);
   - the root is a local filesystem path, as for the ledger this class
     writes with ``os.makedirs``/``open``. An object-store root would need
-    the listing to go through the Hadoop FileSystem instead.
+    the listing (and the unpartitioned key-column read) to go through the
+    Hadoop FileSystem instead.
 """
 
 from __future__ import annotations
@@ -56,6 +66,34 @@ def _unescape(name: str) -> str:
     which writes each path-unsafe character as ``%`` plus two hex digits."""
     return re.sub(r"%([0-9A-Fa-f]{2})",
                   lambda m: chr(int(m.group(1), 16)), name)
+
+
+def _unlisted(df: DataFrame, key: str, listed: set) -> DataFrame:
+    """The rows of ``df`` whose ``key`` is not among the ``listed``
+    partition values (``None``: the default partition)."""
+    if not listed:
+        return df
+    col = F.col(key)
+    dtype = df.schema[key].dataType
+    text = isinstance(dtype, StringType)
+    values = [v if text else F.lit(v).cast(dtype)
+              for v in listed if v is not None]
+    loaded = col.isin(values) if values else F.lit(False)
+    if None in listed:
+        loaded = col.isNull() | loaded
+        if text:
+            loaded = loaded | (col == "")
+    # a null key is "not loaded" unless the default partition exists
+    return df.filter(~F.coalesce(loaded, F.lit(False)))
+
+
+def _remove_part(path: str) -> None:
+    """Delete a data file and the checksum Spark wrote beside it."""
+    os.remove(path)
+    crc = os.path.join(os.path.dirname(path),
+                       f".{os.path.basename(path)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
 
 
 def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -87,34 +125,47 @@ class Warehouse:
         directory names (a string key ``"007"`` stays ``"007"``)."""
         return spark.read.schema(schema).parquet(self.path(table))
 
-    def incremental_append(self, df: DataFrame, table: str, key: str) -> int:
+    def incremental_append(self, df: DataFrame, table: str, key: str,
+                           partitioned: bool = True) -> int:
         """Anti-join-then-append: load only rows whose ``key`` value is not
         yet present (postgres.Rmd:246-248 semantics). Returns #new keys.
 
-        One Spark job: the append itself, which also counts the rows it
-        writes into the ledger. A rerun that brings no new key runs that
-        job over zero rows and writes no data file."""
-        before = self._listed_keys(table, key)
-        fresh = df
-        if before:
-            col = F.col(key)
-            dtype = df.schema[key].dataType
-            text = isinstance(dtype, StringType)
-            values = [v if text else F.lit(v).cast(dtype)
-                      for v in before if v is not None]
-            loaded = col.isin(values) if values else F.lit(False)
-            if None in before:
-                loaded = col.isNull() | loaded
-                if text:
-                    loaded = loaded | (col == "")
-            # a null key is "not loaded" unless the default partition exists
-            fresh = df.filter(~F.coalesce(loaded, F.lit(False)))
+        ``partitioned`` declares the table's layout: partitioned by
+        ``key`` (one Spark job, the append itself, which also counts the
+        rows it writes into the ledger), or unpartitioned (the append
+        plus, once the table holds data, the broadcast of its key column
+        for the anti-join). A rerun that brings no new key writes zero
+        rows and leaves no new data file."""
+        before = self.loaded_keys(table, key)
+        files = self._data_files(table)
+        if partitioned:
+            fresh = _unlisted(df, key, before)
+        elif self._partition_values(table, key):
+            # flat files beside <key>= directories: no reader reads the mix
+            raise ValueError(
+                f"{self.path(table)} holds {key}= partition directories, "
+                f"the old layout of a table now written unpartitioned; "
+                f"delete {self.path(table)} and the next build reloads it")
+        elif files:
+            loaded = (self.read(df.sparkSession, table, df.schema)
+                      .select(F.col(key).alias("_loaded")))
+            fresh = df.join(loaded, df[key].eqNullSafe(F.col("_loaded")),
+                            "left_anti")
+        else:
+            fresh = df
         fresh, obs = _counted(fresh)
-        (fresh.write.mode("append").partitionBy(key)
-         .parquet(self.path(table)))
-        new_keys = len(self._listed_keys(table, key) - before)
-        self._log(table=table, key=key, new_keys=new_keys,
-                  rows=obs.get["rows"])
+        writer = fresh.write.mode("append")
+        if partitioned:
+            writer = writer.partitionBy(key)
+        writer.parquet(self.path(table))
+        rows = obs.get["rows"]
+        if not rows:
+            # an empty unpartitioned append still writes one empty part
+            # file, which would change the table's listing for nothing
+            for f in self._data_files(table) - files:
+                _remove_part(f)
+        new_keys = len(self.loaded_keys(table, key) - before)
+        self._log(table=table, key=key, new_keys=new_keys, rows=rows)
         return new_keys
 
     def log_up_to_date(self, table: str, key: str) -> None:
@@ -122,20 +173,42 @@ class Warehouse:
         change: no key is new and no row was written."""
         self._log(table=table, key=key, new_keys=0, rows=0)
 
-    def _listed_keys(self, table: str, key: str) -> set[str | None]:
-        """The loaded values of partition column ``key``, from the table's
-        directory names; ``None`` stands for the default (null) partition."""
+    def loaded_keys(self, table: str, key: str) -> set:
+        """The loaded values of ``key``, read without a Spark job. A table
+        partitioned by ``key`` answers from its ``<key>=<value>`` directory
+        names (values as strings, ``None`` for the default, null,
+        partition); any other table from the ``key`` column of its
+        parquet files, read on the driver with pyarrow (typed values)."""
         if not self.exists(table):
             return set()
-        prefix = f"{key}="
-        out: set[str | None] = set()
-        with os.scandir(self.path(table)) as entries:
-            for entry in entries:
-                if entry.is_dir() and entry.name.startswith(prefix):
-                    value = entry.name[len(prefix):]
-                    out.add(None if value == DEFAULT_PARTITION
-                            else _unescape(value))
+        listed = self._partition_values(table, key)
+        if listed:
+            return {None if v == DEFAULT_PARTITION else _unescape(v)
+                    for v in listed}
+        import pyarrow.parquet as pq   # only the dimension's loads need it
+        out: set = set()
+        for f in self._data_files(table):
+            out.update(pq.read_table(f, columns=[key]).column(0).to_pylist())
         return out
+
+    def _partition_values(self, table: str, key: str) -> list[str]:
+        """The raw ``<value>`` of every ``<key>=<value>`` directory."""
+        if not self.exists(table):
+            return []
+        prefix = f"{key}="
+        with os.scandir(self.path(table)) as entries:
+            return [e.name[len(prefix):] for e in entries
+                    if e.is_dir() and e.name.startswith(prefix)]
+
+    def _data_files(self, table: str) -> set[str]:
+        """The parquet files directly under the table root: every data
+        file of an unpartitioned table, none of a partitioned one."""
+        if not self.exists(table):
+            return set()
+        with os.scandir(self.path(table)) as entries:
+            return {e.path for e in entries if e.is_file()
+                    and e.name.endswith(".parquet")
+                    and not e.name.startswith((".", "_"))}
 
     def save_bucketed(self, df: DataFrame, table: str, key: str,
                       buckets: int = 16) -> None:

@@ -165,6 +165,18 @@ def test_schema_registry_pins_and_conforms(spark, tmp_path):
            [f.dataType for f in df.schema.fields]
 
 
+def test_schema_registry_passes_a_conforming_frame_through(spark, tmp_path):
+    reg = SchemaRegistry(str(tmp_path / "schemas"))
+    reg.conform(spark.createDataFrame([("a", 1)], ["s", "v"]), "t")
+    same = spark.createDataFrame([("b", 2)], ["s", "v"])
+    assert reg.conform(same, "t") is same
+    # reordered columns are still projected into the pinned order
+    flipped = spark.createDataFrame([(3, "c")], ["v", "s"])
+    out = reg.conform(flipped, "t")
+    assert out is not flipped and out.columns == ["s", "v"]
+    assert tuple(out.collect()[0]) == ("c", 3)
+
+
 def test_schema_registry_missing_column_raises(spark, tmp_path):
     reg = SchemaRegistry(str(tmp_path / "schemas"))
     reg.conform(spark.createDataFrame([("a", 1)], ["s", "v"]), "t")

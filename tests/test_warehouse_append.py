@@ -2,15 +2,17 @@
 anti-join across load -> incremental -> no-op for string, integer and
 path-escaped keys, the null key, files written on a no-op, the one
 Spark job an append costs, the rows each write logs, and the schema-given
-read that keeps the key's type and runs no job."""
+read that keeps the key's type and runs no job; and the unpartitioned
+dimension's key-column anti-join, its loaded keys and its refusal of an
+old partitioned layout."""
 
 import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import (IntegerType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import (IntegerType, LongType, StringType,
+                               StructField, StructType)
 
 from glamr_omics_pipelines_spark.sources.warehouse import Warehouse
 
@@ -149,3 +151,59 @@ def test_ledger_rows_are_rows_written(spark, tmp_path):
     wh.save_view(wh.read(spark, "t", first.schema), "v")
     assert [r["rows"] for r in _ledger(wh)] == [3, 0, 2, 5]
     assert [r.get("new_keys") for r in _ledger(wh)] == [2, 0, 1, None]
+
+
+def _dim(spark, rows):
+    return spark.createDataFrame(rows, StructType([
+        StructField("tax_id", LongType()), StructField("name", StringType())]))
+
+
+def test_dimension_append_loads_only_new_keys(spark, tmp_path):
+    wh = Warehouse(str(tmp_path / "wh"))
+    assert wh.incremental_append(
+        _dim(spark, [(1, "a"), (2, "b"), (3, "c")]), "tax", "tax_id",
+        partitioned=False) == 3
+    assert wh.incremental_append(
+        _dim(spark, [(3, "c2"), (4, "d")]), "tax", "tax_id",
+        partitioned=False) == 1
+    assert [(r["new_keys"], r["rows"]) for r in _ledger(wh)] \
+        == [(3, 3), (1, 1)]
+    assert wh.loaded_keys("tax", "tax_id") == {1, 2, 3, 4}
+    assert not [d for d in os.listdir(wh.path("tax")) if "=" in d]
+    out = wh.read(spark, "tax", _dim(spark, []).schema)
+    assert sorted(tuple(r) for r in out.collect()) \
+        == [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
+
+
+def test_dimension_null_key_loads_once(spark, tmp_path):
+    wh = Warehouse(str(tmp_path / "wh"))
+    df = _dim(spark, [(None, "root"), (1, "a")])
+    assert wh.incremental_append(df, "tax", "tax_id", partitioned=False) == 2
+    assert wh.incremental_append(df, "tax", "tax_id", partitioned=False) == 0
+    assert wh.loaded_keys("tax", "tax_id") == {None, 1}
+    assert wh.read(spark, "tax", df.schema).count() == 2
+
+
+def test_dimension_noop_append_adds_no_data_file(spark, tmp_path):
+    """Spark writes an empty part file for an empty unpartitioned append;
+    the append removes it, so the table's listing does not change."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    df = _dim(spark, [(1, "a"), (2, "b")])
+    wh.incremental_append(df, "tax", "tax_id", partitioned=False)
+    before = sorted(os.listdir(wh.path("tax")))
+    assert _data_files(wh.path("tax"))
+    assert wh.incremental_append(df, "tax", "tax_id", partitioned=False) == 0
+    assert _ledger(wh)[-1]["rows"] == 0
+    assert sorted(f for f in os.listdir(wh.path("tax"))
+                  if not f.startswith(("_", "._"))) \
+        == [f for f in before if not f.startswith(("_", "._"))]
+
+
+def test_dimension_refuses_old_partitioned_layout(spark, tmp_path):
+    wh = Warehouse(str(tmp_path / "wh"))
+    df = _dim(spark, [(1, "a"), (2, "b")])
+    wh.incremental_append(df, "tax", "tax_id")   # partitioned by tax_id
+    with pytest.raises(ValueError, match="tax_id= partition directories"):
+        wh.incremental_append(_dim(spark, [(3, "c")]), "tax", "tax_id",
+                              partitioned=False)
+    assert wh.loaded_keys("tax", "tax_id") == {"1", "2"}

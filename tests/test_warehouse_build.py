@@ -180,12 +180,17 @@ def test_rerun_skips_up_to_date_stages(spark, tmp_path):
 
     runs, _, _ = build(globs, _local_frames(spark, rows))
     assert _ran(runs) == STAGES
+    # the dimension is unpartitioned: more taxa than Spark's parallel
+    # partition-discovery threshold (32), and not one tax_id= directory
+    assert len(rows["tax_info"]) > 32
+    assert not [d for d in os.listdir(f"{root}/tax_info")
+                if d.startswith("tax_id=")]
 
     # no-op: every stage up to date, and every base table still logs a load
     runs, loads, jobs = build(globs, _local_frames(spark, rows))
     assert [r["stage"] for r in runs] == STAGES and _ran(runs) == []
     assert all("seconds" in r and len(r["fingerprint"]) == 64 for r in runs)
-    assert jobs <= 1   # at most tax_info's partition-listing job
+    assert jobs == 0   # no stage runs, no read-back lists or infers
     assert {r["table"]: (r["new_keys"], r["rows"]) for r in loads} \
         == dict.fromkeys(BASE_TABLES, (0, 0))
 
@@ -253,6 +258,87 @@ def test_incremental_builds_equal_a_fresh_build(spark, tmp_path):
         pd.testing.assert_frame_equal(
             _table(spark, build.root, table), _table(spark, fresh.root, table),
             check_exact=False, rtol=1e-12, atol=0)
+
+
+def _taxonomy_with(rows: dict, extra: int) -> dict:
+    """``rows`` with ``extra`` more taxa in the taxonomy frame."""
+    taxa = rows["tax_info"]
+    top = max(r["tax_id"] for r in taxa)
+    more = [{**taxa[-1], "tax_id": top + i + 1} for i in range(extra)]
+    return {**rows, "tax_info": taxa + more}
+
+
+def test_dimension_appends_only_new_taxa(spark, tmp_path):
+    root = str(tmp_path / "wh")
+    globs = _input_tree(tmp_path, fixtures.SAMPLES)
+    rows = _frame_rows(fixtures.SAMPLES)
+    build = _Builds(spark, root)
+    build(globs, _local_frames(spark, rows))
+    n = _rows(spark, root, "tax_info")
+
+    runs, loads, _ = build(globs, _local_frames(spark, _taxonomy_with(rows, 2)))
+    assert _ran(runs) == ["tax_info", "bracken"]
+    assert [(r["new_keys"], r["rows"]) for r in loads
+            if r["table"] == "tax_info"] == [(2, 2)]
+    assert _rows(spark, root, "tax_info") == n + 2
+    assert not [d for d in os.listdir(f"{root}/tax_info")
+                if d.startswith("tax_id=")]
+
+
+def test_old_partitioned_dimension_fails_loudly(spark, tmp_path):
+    """A root whose tax_info is still partitioned by tax_id refuses a flat
+    append beside its directories; deleting the table rebuilds it."""
+    root = str(tmp_path / "wh")
+    globs = _input_tree(tmp_path, fixtures.SAMPLES)
+    rows = _frame_rows(fixtures.SAMPLES)
+    build = _Builds(spark, root)
+    build(globs, _local_frames(spark, rows))
+    table = f"{root}/tax_info"
+    shutil.rmtree(table)
+    spark.createDataFrame(pd.DataFrame(rows["tax_info"])) \
+        .write.partitionBy("tax_id").parquet(table)
+
+    grown = _local_frames(spark, _taxonomy_with(rows, 1))
+    with pytest.raises(ValueError, match=r"tax_info holds tax_id= .*delete"):
+        build(globs, grown)
+    shutil.rmtree(table)
+    runs, loads, _ = build(globs, grown)
+    assert "tax_info" in _ran(runs)
+    assert [r["new_keys"] for r in loads if r["table"] == "tax_info"] \
+        == [len(rows["tax_info"]) + 1]
+    assert not [d for d in os.listdir(table) if d.startswith("tax_id=")]
+
+
+def test_up_to_date_view_does_not_call_make(spark, tmp_path, monkeypatch):
+    """An up-to-date view is read back with its pinned schema: its frame
+    function is not called. A root without a pinned view schema refreshes
+    the view once, then reuses it."""
+    root = str(tmp_path / "wh")
+    globs = _input_tree(tmp_path, fixtures.SAMPLES)
+    rows = _frame_rows(fixtures.SAMPLES)
+    build = _Builds(spark, root)
+    build(globs, _local_frames(spark, rows))
+    before = _table(spark, root, "bin_summary")
+
+    from glamr_omics_pipelines_spark.pipelines import glamr
+    calls = []
+
+    def spy(real):
+        def make(*frames):
+            calls.append(real.__name__)
+            return real(*frames)
+        return make
+    for name in ("bin_summary", "kofam_anvio"):
+        monkeypatch.setattr(glamr, name, spy(getattr(glamr, name)))
+    runs, _, _ = build(globs, _local_frames(spark, rows))
+    assert _ran(runs) == [] and calls == []
+    pd.testing.assert_frame_equal(_table(spark, root, "bin_summary"), before)
+
+    os.remove(f"{root}/_schemas/bin_summary.schema.json")
+    runs, _, _ = build(globs, _local_frames(spark, rows))
+    assert _ran(runs) == ["bin_summary_view"] and calls == ["bin_summary"]
+    runs, _, _ = build(globs, _local_frames(spark, rows))
+    assert _ran(runs) == [] and calls == ["bin_summary"]
 
 
 def test_agg_snapshot_merge_equals_rescan(spark):

@@ -3,8 +3,10 @@
 Prints one JSON line per table under ROOT (every directory not starting
 with ``_``), in name order: the table's schema JSON, its row count and a
 sha256 over its rows in ``tools.check.normalize`` form (columns by name,
-rows sorted). A base table is read with the schema pinned under
-``ROOT/_schemas``, a view with the schema Spark infers from its files.
+rows sorted). Every table is read with the schema pinned under
+``ROOT/_schemas``: a base table's contract, or the schema a view's last
+refresh pinned (a view that has none, written before views pinned their
+schema, is read with the schema Spark infers from its files).
 Two roots hold the same data exactly when the outputs are byte-identical:
 
     python tools/warehouse_digest.py /path/to/root_a > a.txt
